@@ -14,7 +14,9 @@ while the surface map stays ≤~1600 chars at 10x-slow-box values.
 Cross-run ratios (round-over-round, 32c/8c scaling) are unit-invariant,
 so centiseconds compare cleanly; "qunit" marks the unit and "action"
 the timed action. Full per-query float timings + row counts for ALL
-registry rows are still written to BENCH.json next to this file.
+registry rows are still written to BENCH.json next to this file (its
+"qunit" is "s"). Should the line overrun its 1900-char guard, surface
+entries are dropped from the tail and "queries_dropped" counts them.
 
 Two suite numbers (round-9 verdict tasks 4+5):
 
@@ -231,12 +233,15 @@ def main() -> None:
     # deliberate ceiling: the surface map measures ~1550 chars at
     # 10x-slow-box values, and the defensive trim below keeps a
     # freak-stall run parseable instead of asserting the bench dead.
+    # the on-disk copy holds float seconds, not the stdout centiseconds
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.json"), "w") as f:
-        json.dump({**payload, "queries": timings, "rows": rows}, f, indent=1)
+        json.dump({**payload, "queries": timings, "qunit": "s", "rows": rows}, f, indent=1)
     line = json.dumps(payload, separators=(",", ":"))
     while len(line) >= 1900 and stdout_queries:
         stdout_queries.popitem()  # drop surface tail entries, never the totals
         payload["queries"] = stdout_queries
+        # a trimmed map says how many entries it lost
+        payload["queries_dropped"] = payload.get("queries_dropped", 0) + 1
         line = json.dumps(payload, separators=(",", ":"))
     assert len(line) < 1900, f"bench stdout line too long: {len(line)}"
     print(line)

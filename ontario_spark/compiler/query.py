@@ -37,6 +37,7 @@ from ontario_spark.compiler.filters import (
 )
 from ontario_spark.compiler.frame import BFrame, KEYED, LEXICAL, TermMeta
 from ontario_spark.compiler.star import compile_star
+from ontario_spark.persist import pin
 from ontario_spark.planner.decomposer import bgp_stars, prune_connected, select_sources
 from ontario_spark.sparql.ast import (
     Bind,
@@ -647,14 +648,15 @@ class SparqlEngine:
                 "left_outer",
             )
 
-        from ontario_spark.operators.graph import _pin
-
         rest = Group(
             [el for el in e.block.elements if not any(el is h for h in hoist)]
         )
         right = self._group(rest, key_hint=bf, source_filter=source_filter)
         pinned = BFrame(
-            _pin(bf.df.withColumn("__lj", F.monotonically_increasing_id())),
+            pin(
+                bf.df.withColumn("__lj", F.monotonically_increasing_id()),
+                truncate=True,
+            ),
             bf.meta,
             bf.maybe_null,
         )
@@ -1695,9 +1697,10 @@ class SparqlEngine:
         one id-keyed flag join regardless of polarity. Returns the
         marked frame (carrying ``__exk`` + ``__ex<i>`` physical
         columns the caller must drop) and the node→column map."""
-        from ontario_spark.operators.graph import _pin
-
-        df = _pin(bf.df.withColumn("__exk", F.monotonically_increasing_id()))
+        df = pin(
+            bf.df.withColumn("__exk", F.monotonically_increasing_id()),
+            truncate=True,
+        )
         marked = BFrame(df, bf.meta, bf.maybe_null)
         cols: dict[int, str] = {}
         for i, n in enumerate(nodes):

@@ -19,37 +19,10 @@ executor cluster):
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Bounded registry for per-call persisted intermediates (the shingle /
-# banded-signature tables below): each call builds a FRESH plan, so a
-# plan-keyed cache would never hit — the leak to prevent is
-# ACCUMULATION across many calls in a long-lived session (HTTP server,
-# bench reruns): Spark's CacheManager holds persisted frames until an
-# explicit unpersist, Python GC never releases them. Oldest-first
-# eviction keeps at most _PERSISTED_MAX cached intermediates alive
-# (the retrieval._PER_DOC_CACHE lesson, round-5 review fix).
-_PERSISTED: list[DataFrame] = []
-_PERSISTED_MAX = 8
-_PERSIST_LOCK = threading.Lock()
-
-
-def _bounded_persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    evicted: list[DataFrame] = []
-    with _PERSIST_LOCK:
-        _PERSISTED.append(df)
-        while len(_PERSISTED) > _PERSISTED_MAX:
-            evicted.append(_PERSISTED.pop(0))
-    for old in evicted:
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-    return df
+from ontario_spark.persist import persisted
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -176,7 +149,7 @@ def _anchor_pair_counts(
 
     sh = exploded_shingles(df, id_col, text_col, n)
     h60 = F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
-    hashed = _bounded_persist(sh.select("id", h60.alias("h")))
+    hashed = persisted(sh.select("id", h60.alias("h")))
     sizes = hashed.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     # Fused inverted-index stage (round 12, guide §2.4 "two operations
     # keyed the same way share one exchange"): ONE h-keyed shuffle
@@ -213,7 +186,7 @@ def _anchor_pair_counts(
         )
     # invh feeds both join legs (anchors + inverted lists); persist so
     # the h-shuffle/window pass runs once, mirroring ``hashed``.
-    invh = _bounded_persist(invh)
+    invh = persisted(invh)
     inv_b = (
         invh.filter(F.col("__ir") <= inv_list_budget).select("id", "h")
         if inv_list_budget is not None
@@ -457,7 +430,7 @@ def _ngram_pair_counts(
     # self-join sides); persist the compact (id, 8-byte key) form so
     # shingling — the expensive scan — runs once, not three times. At
     # lake scale this intermediate is what you'd checkpoint to storage.
-    exploded = _bounded_persist(sh.select("id", F.xxhash64("shingle").alias("k")))
+    exploded = persisted(sh.select("id", F.xxhash64("shingle").alias("k")))
     sizes = exploded.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     joinable = exploded
     if max_doc_freq is not None:
@@ -609,7 +582,7 @@ def _banded_candidate_pairs(
     # Both self-join sides read the banded keys; persist so the
     # shingle→minhash→banding pipeline (the expensive part) runs once.
     # sig itself is consumed only here — no second materialization.
-    banded = _bounded_persist(
+    banded = persisted(
         sig.withColumn("bk", band_keys)
         .select(id_col, F.posexplode("bk").alias("band", "bucket"))
     )
@@ -695,7 +668,7 @@ def minhash_lsh_pairs(
     )
     # Both join sides reference the banded signatures; persist so the
     # shingle→minhash pipeline (the expensive part) runs once.
-    banded = _bounded_persist(
+    banded = persisted(
         sig.withColumn("bk", band_keys)
         .select(id_col, *mh_cols, F.posexplode("bk").alias("band", "bucket"))
     )
@@ -793,7 +766,7 @@ def lsh_verified_jaccard_pairs(
     # multiset). At lake scale the shingling scan is the dominant cost
     # of this operator's build side — paying it twice was pure waste.
     sh = exploded_shingles(df, id_col, text_col, n).withColumnRenamed("id", id_col)
-    hs = _bounded_persist(sh.select(id_col, _shingle_base_hash().alias("h")))
+    hs = persisted(sh.select(id_col, _shingle_base_hash().alias("h")))
     # keep ALL banded candidates (no estimate threshold) — the verify
     # decides. Round 12: going through the keys-only banding core skips
     # the estimate that the old ``minhash_lsh_pairs(threshold=0.0)``
@@ -899,7 +872,7 @@ def simhash_hamming_pairs(
     width, rem = divmod(bits, n_bands)
     if rem:
         raise ValueError("bits must divide evenly into max_hamming+1 bands")
-    fp = _bounded_persist(simhash(df, id_col, text_col, bits=bits))
+    fp = persisted(simhash(df, id_col, text_col, bits=bits))
     chunks = F.array(
         *[
             F.struct(
@@ -988,7 +961,7 @@ def source_ngram_overlap(
         .select(F.col("id").alias("source"), F.xxhash64("shingle").alias("sk"))
         .dropDuplicates(["source", "sk"])
     )
-    sh = _bounded_persist(sh)
+    sh = persisted(sh)
     sizes = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         sh.alias("a")
@@ -1172,7 +1145,7 @@ def winnow_overlap_pairs(
     bit-exact."""
     from ontario_spark.operators.textops import winnow_fingerprints
 
-    fps = _bounded_persist(winnow_fingerprints(df, id_col, text_col, k, w))
+    fps = persisted(winnow_fingerprints(df, id_col, text_col, k, w))
     if max_fp_freq is not None:
         rare = (
             fps.groupBy("fp")
@@ -1450,7 +1423,7 @@ def prefix_jaccard_pairs(
 
     sh = exploded_shingles(df, id_col, text_col, n)
     h60 = F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
-    hashed = _bounded_persist(sh.select("id", h60.alias("h")))
+    hashed = persisted(sh.select("id", h60.alias("h")))
     sizes = hashed.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     # Fused ranking stage (round 12, guide §2.4): the doc-frequency
     # rides a whole-partition window count over ONE h-keyed exchange
@@ -1716,7 +1689,7 @@ def bloom_contamination_overlap(
     # exploded stream has exactly one consumer (the candidate probe) —
     # at 100 TB materializing the full corpus shingle stream was the
     # operator's dominant memory/spill cost, paid only to count rows.
-    bench_k = _bounded_persist(
+    bench_k = persisted(
         exploded_shingles(benchmark, id_col, text_col, n)
         .select(F.xxhash64("shingle").alias("k"))
         .dropDuplicates(["k"])
@@ -1881,7 +1854,7 @@ def incremental_lsh_pairs(
     groups (a bucket that hot is boilerplate exact-dedup should have
     removed; same documented trade as ``hot_bucket="drop"``)."""
     bn = banded_signature_index(new, id_col, text_col, num_hashes, bands, n)
-    bc = _bounded_persist(
+    bc = persisted(
         banded_signature_index(corpus, id_col, text_col, num_hashes, bands, n)
     )
     return probe_banded_index(

@@ -13,12 +13,14 @@ DataFrame joins:
 Scale design (100 TB): each iteration is a shuffled equi-join on the
 frontier only — the delta, not the accumulated closure, drives the join,
 so per-iteration cost tracks the number of *new* pairs (semi-naive, not
-naive). ``localCheckpoint`` truncates lineage every iteration; without
-it the plan doubles per step and Catalyst analysis time explodes after
-~15 iterations. Persisted deltas are unpersisted as soon as the next
-delta is materialized. Diameter of real hierarchies (org charts,
-geo containment, categories) is small — ``max_iter`` is a cycle guard,
-not an expected bound.
+naive). Every delta is truncated (``pin(..., truncate=True)``, a
+``localCheckpoint``); without it the plan doubles per step and Catalyst
+analysis time explodes after ~15 iterations. The eager loops here run
+inside a ``pinned()`` scope, which releases their persisted
+loop-invariant frames when the operator returns or raises (ownership
+rules: ``ontario_spark/persist.py``). Diameter of real hierarchies (org
+charts, geo containment, categories) is small — ``max_iter`` is a cycle
+guard, not an expected bound.
 """
 
 from __future__ import annotations
@@ -26,46 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ontario_spark.persist import persisted, pin, pinned
+
 
 class ClosureError(Exception):
     pass
-
-
-def _pin(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Truncate lineage. localCheckpoint when the plan allows it;
-    Spark's checkpoint attribute-rewrite throws NoSuchElementException
-    on plans that reference the same checkpointed relation twice
-    ("key not found: src#N"), so fall back to persist+materialize —
-    same effect on iteration cost, lineage just grows linearly.
-
-    ``eager=False`` truncates the logical plan the same way (the
-    returned frame is a LogicalRDD) but defers materialization to the
-    first consuming action — the right shape for FIXED-round loops
-    whose rounds are data-dependent only through broadcasts (e.g. the
-    BPE trainer): no per-round driver action, one job end-to-end,
-    while the plan still cannot double per round."""
-    try:
-        return df.localCheckpoint(eager=eager)
-    except Exception:
-        df = df.persist()
-        if eager:
-            df.count()
-        return df
-
-
-def _pin_cached(df: DataFrame) -> DataFrame:
-    """Pin a loop frame by PERSIST + materialize instead of
-    ``localCheckpoint``: under AQE the checkpointed LogicalRDD reports
-    ``UnknownPartitioning(0)`` (measured on Spark 4.1 — a same-key join
-    above it re-Exchanges the pinned side every round), while an
-    ``InMemoryTableScan`` preserves the cached plan's hashpartitioning,
-    so downstream same-key joins/aggregates plan with NO exchange on
-    this side. Lineage is NOT truncated — callers keep reference chains
-    bounded (fixed small iteration counts) and unpersist superseded
-    frames, exactly as the loops below already do."""
-    df = df.persist()
-    df.count()
-    return df
 
 
 def transitive_closure(
@@ -86,32 +53,34 @@ def transitive_closure(
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
-    e = _pin(e.dropDuplicates(["src", "dst"]))
-
-    acc = e
-    delta = e
-    for _ in range(max_iter):
-        # pin step BEFORE the anti-join so no checkpointed plan holds
-        # two copies of the same relation (e in the join + e inside acc)
-        step = _pin(
-            delta.alias("d")
-            .join(e.alias("e"), F.col("d.dst") == F.col("e.src"))
-            .select(F.col("d.src").alias("src"), F.col("e.dst").alias("dst"))
-            .dropDuplicates(["src", "dst"])
-        )
-        new = _pin(step.join(acc, on=["src", "dst"], how="left_anti"))
-        # step fed only `new` (now materialized): release it so the
-        # persist-fallback path doesn't accumulate a cached frame per
-        # iteration (no-op for checkpointed frames). Deltas folded into
-        # acc stay pinned — acc's plan references them until the caller
-        # consumes the closure.
-        step.unpersist()
-        if new.isEmpty():
-            break
-        acc = acc.unionByName(new)
-        delta = new
-    else:
-        raise ClosureError(f"closure did not converge in {max_iter} iterations")
+    with pinned():
+        e = pin(e.dropDuplicates(["src", "dst"]), truncate=True)
+        acc = e
+        delta = e
+        for _ in range(max_iter):
+            # pin step BEFORE the anti-join so no checkpointed plan holds
+            # two copies of the same relation (e in the join + e in acc)
+            step = pin(
+                delta.alias("d")
+                .join(e.alias("e"), F.col("d.dst") == F.col("e.src"))
+                .select(
+                    F.col("d.src").alias("src"), F.col("e.dst").alias("dst")
+                )
+                .dropDuplicates(["src", "dst"]),
+                truncate=True,
+            )
+            new = pin(
+                step.join(acc, on=["src", "dst"], how="left_anti"),
+                truncate=True,
+            )
+            if new.isEmpty():
+                break
+            acc = acc.unionByName(new)
+            delta = new
+        else:
+            raise ClosureError(
+                f"closure did not converge in {max_iter} iterations"
+            )
 
     if include_identity:
         nodes = (
@@ -144,7 +113,7 @@ def connected_components(
     (diameter ≤ ~2-3), so this beats the O(log n) large-star/small-star
     variant's constant factor in practice; for adversarially long path
     graphs at lake scale, swap in large-star/small-star behind the same
-    signature. Lineage is truncated per round (``_pin``) exactly like
+    signature. Lineage is truncated per round exactly like
     ``transitive_closure``; convergence is detected by the label-sum
     fingerprint (min-propagation only ever DECREASES labels, so the sum
     strictly decreases until fixpoint and is stable exactly there) —
@@ -171,72 +140,75 @@ def connected_components(
     # global spark.sql.shuffle.partitions (CONF_LOCK only serialized
     # writers — a concurrent planner could read the narrowed value).
     # Instead the loop-INVARIANT edge set is pinned CO-PARTITIONED on
-    # its join key via ``_pin_cached`` (persist keeps hashpartitioning
-    # where localCheckpoint reports UnknownPartitioning), so the
-    # e-side of every round's e⋈labels never re-shuffles — the edge
-    # relation is the loop's dominant bytes. The label frames keep the
-    # truncating ``_pin``: small per-round exchanges in exchange for a
-    # plan that cannot double per round (see the note below).
-    e = _pin_cached(
-        directed.select(both.alias("e"))
-        .select("e.a", "e.b")
-        .dropDuplicates(["a", "b"])
-        .repartition(width, "a")
-    )
-    numeric_ids = isinstance(e.schema["a"].dataType, NumericType)
-    # labels stay _pin (localCheckpoint): each round references its
-    # predecessor TWICE (neighbor-min + left join), so a persist-only
-    # pin would DOUBLE the logical plan per round — exponential by the
-    # 30-round guard. Truncation wins over partitioning reuse for the
-    # small label frames; only the loop-invariant edge set keeps its
-    # layout via _pin_cached.
-    labels = _pin(
-        e.select(F.col("a").alias("n"))
-        .dropDuplicates(["n"])
-        .select("n", F.col("n").alias("label"))
-    )
-    prev_sum = None
-    for _ in range(max_iter):
-        nbr_min = (
-            e.join(labels, e["a"] == labels["n"])
-            .groupBy(F.col("b").alias("n2"))
-            .agg(F.min("label").alias("nbr"))
+    # its join key (``truncate=False`` keeps hashpartitioning where
+    # localCheckpoint reports UnknownPartitioning), so the e-side of
+    # every round's e⋈labels never re-shuffles — the edge relation is
+    # the loop's dominant bytes. The label frames are truncated: small
+    # per-round exchanges in exchange for a plan that cannot double per
+    # round (see the note below).
+    with pinned():
+        e = pin(
+            directed.select(both.alias("e"))
+            .select("e.a", "e.b")
+            .dropDuplicates(["a", "b"])
+            .repartition(width, "a"),
+            truncate=False,
         )
-        new_labels = _pin(
-            labels.join(nbr_min, labels["n"] == nbr_min["n2"], "left").select(
-                "n",
-                F.least(
-                    F.col("label"), F.coalesce("nbr", "label")
-                ).alias("label"),
-            )
+        numeric_ids = isinstance(e.schema["a"].dataType, NumericType)
+        # labels are truncated: each round references its predecessor
+        # TWICE (neighbor-min + left join), so a persist-only pin would
+        # DOUBLE the logical plan per round — exponential by the
+        # 30-round guard. Truncation wins over partitioning reuse for
+        # the small label frames; only the loop-invariant edge set
+        # keeps its layout.
+        labels = pin(
+            e.select(F.col("a").alias("n"))
+            .dropDuplicates(["n"])
+            .select("n", F.col("n").alias("label")),
+            truncate=True,
         )
-        if numeric_ids:
-            # label-sum fingerprint: min propagation only DECREASES
-            # numeric labels, so the sum strictly decreases until
-            # fixpoint and is stable exactly there — one tiny agg.
-            cur = new_labels.agg(F.sum("label").alias("s")).collect()[0]["s"]
-            converged = cur == prev_sum
-            prev_sum = cur
-        else:
-            # non-numeric ids (content hashes, URIs): sum is not
-            # defined, so diff the two PINNED label frames — a
-            # small sized-partition join per round, exact.
-            # fresh attribute ids on one side: when _pin fell back
-            # to persist (no checkpoint), new_labels' lineage still
-            # contains labels and a direct self-join is ambiguous
-            nl = new_labels.select(
-                F.col("n").alias("__n2"), F.col("label").alias("__l2")
+        prev_sum = None
+        for _ in range(max_iter):
+            nbr_min = (
+                e.join(labels, e["a"] == labels["n"])
+                .groupBy(F.col("b").alias("n2"))
+                .agg(F.min("label").alias("nbr"))
             )
-            converged = (
-                nl.join(labels, nl["__n2"] == labels["n"])
-                .filter(F.col("__l2") != F.col("label"))
-                .isEmpty()
+            new_labels = pin(
+                labels.join(nbr_min, labels["n"] == nbr_min["n2"], "left")
+                .select(
+                    "n",
+                    F.least(
+                        F.col("label"), F.coalesce("nbr", "label")
+                    ).alias("label"),
+                ),
+                truncate=True,
             )
-        labels.unpersist()  # superseded; new_labels is materialized
-        labels = new_labels
-        if converged:
-            e.unpersist()
-            return labels.select("n", F.col("label").alias("component"))
+            if numeric_ids:
+                # label-sum fingerprint: min propagation only DECREASES
+                # numeric labels, so the sum strictly decreases until
+                # fixpoint and is stable exactly there — one tiny agg.
+                cur = new_labels.agg(F.sum("label").alias("s")).collect()[0]["s"]
+                converged = cur == prev_sum
+                prev_sum = cur
+            else:
+                # non-numeric ids (content hashes, URIs): sum is not
+                # defined, so diff the two PINNED label frames — a
+                # small sized-partition join per round, exact.
+                # fresh attribute ids on one side: when pin fell back
+                # to persist (no checkpoint), new_labels' lineage still
+                # contains labels and a direct self-join is ambiguous
+                nl = new_labels.select(
+                    F.col("n").alias("__n2"), F.col("label").alias("__l2")
+                )
+                converged = (
+                    nl.join(labels, nl["__n2"] == labels["n"])
+                    .filter(F.col("__l2") != F.col("label"))
+                    .isEmpty()
+                )
+            labels = new_labels
+            if converged:
+                return labels.select("n", F.col("label").alias("component"))
     raise ClosureError(f"components did not converge in {max_iter} iterations")
 
 
@@ -267,8 +239,8 @@ def pagerank(
 
     Scale shape: ranks live keyed by node; one iteration = edges⋈ranks
     (shuffle on src) + groupBy dst — the same two-shuffle round as
-    every distributed PageRank; lineage pinned per round (``_pin``)
-    like the closure/CC loops. ``iters`` is fixed (not convergence-
+    every distributed PageRank; lineage truncated per round like the
+    closure/CC loops. ``iters`` is fixed (not convergence-
     probed) so the oracle can unroll the exact same number of steps."""
     cdec = f"decimal(28,{round_to + 4})"
     dec = f"decimal(28,{round_to})"
@@ -280,9 +252,9 @@ def pagerank(
     spark = edges.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Round 13 (VERDICT items 4+7): the edge set is pinned PRE-
-    # PARTITIONED on the contribution join key via ``_pin_cached`` —
+    # PARTITIONED on the contribution join key (``truncate=False`` —
     # persist preserves the cached plan's hashpartitioning where
-    # localCheckpoint reports UnknownPartitioning — so every
+    # localCheckpoint reports UnknownPartitioning) — so every
     # iteration's e⋈ranks and the one-off deg aggregate reuse the
     # edge-side exchange instead of re-shuffling the EDGE set (the
     # operator's dominant bytes) once per round. ``nodes`` keeps its
@@ -292,86 +264,82 @@ def pagerank(
     # session-conf mutation for this loop (its sub-width sizing
     # measured NEUTRAL here at sf0.1 — the pinned rank frames are one
     # row per node; a concurrent planner could read the mutated conf).
-    e = _pin_cached(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .repartition(width, "a")
-    )
-    nodes = _pin_cached(
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    # deg is consumed once per iteration — persist (lazily) so the
-    # aggregate over the pinned edge set runs once, not ``iters``
-    # times.
-    from ontario_spark.operators.dedup import _bounded_persist
-
-    deg = _bounded_persist(
-        e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    )
-    n_row = F.broadcast(nodes.agg(F.count(F.lit(1)).alias("__n")))
-    ranks = nodes.crossJoin(n_row).select(
-        "node",
-        F.round(F.lit(1.0) / F.col("__n").cast("double"), round_to)
-        .cast(dec)
-        .alias("r"),
-    )
-    # Round 12: a fully lazy 5-iteration chain was ALSO tried here
-    # (no per-round checkpoint, one job) and measured ~5% SLOWER at
-    # sf0.1 — the rank frames being pinned are small (one row per
-    # node), so the per-round action costs little, while the 5-deep
-    # adaptive plan re-optimizes more; eager pins stay. (Contrast
-    # kcore/label-prop, whose per-round pins materialized the full
-    # EDGE set — converting those to lazy persists measured −50%+.)
-    prev_ranks = None
-    for _ in range(iters):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "a"), "a")
-            .join(deg, "a")
-            .select(
-                F.col("b").alias("node"),
-                F.round(
-                    F.col("r").cast("double")
-                    / F.col("deg").cast("double"),
-                    round_to + 4,
-                )
-                .cast(cdec)
-                .alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
+    with pinned():
+        e = pin(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+            .repartition(width, "a"),
+            truncate=False,
         )
-        # new_ranks keeps the TRUNCATING _pin: a persist pin would
-        # nest every prior round's plan inside this one (linear logical
-        # growth, exponential AQE explain text), while the win it would
-        # buy — skipping the rank-side exchange — is bounded by the
-        # rank frame's size (one row per node). The frames worth
-        # keeping partitioned are the loop-invariant ones above.
-        new_ranks = _pin(
-            nodes.join(contrib, "node", "left")
-            .crossJoin(n_row)
-            .select(
-                "node",
-                F.round(
-                    F.lit(teleport) / F.col("__n").cast("double")
-                    + F.lit(damping)
-                    * F.coalesce(
-                        F.col("inflow"), F.lit(0).cast(cdec)
-                    ).cast("double"),
-                    round_to,
-                )
-                .cast(dec)
-                .alias("r"),
-            )
+        nodes = pin(
+            e.select(F.col("a").alias("node"))
+            .union(e.select(F.col("b").alias("node")))
+            .distinct(),
+            truncate=False,
         )
-        if prev_ranks is not None:
-            # the pinned frame this round consumed is superseded
-            # and new_ranks is materialized — release the cached
-            # copy
-            prev_ranks.unpersist()
-        prev_ranks = new_ranks
-        ranks = new_ranks
+        # deg is consumed once per iteration — persist (lazily) so the
+        # aggregate over the pinned edge set runs once, not ``iters``
+        # times.
+        deg = pin(
+            e.groupBy("a").agg(F.count(F.lit(1)).alias("deg")),
+            truncate=False,
+            eager=False,
+        )
+        n_row = F.broadcast(nodes.agg(F.count(F.lit(1)).alias("__n")))
+        ranks = nodes.crossJoin(n_row).select(
+            "node",
+            F.round(F.lit(1.0) / F.col("__n").cast("double"), round_to)
+            .cast(dec)
+            .alias("r"),
+        )
+        # Round 12: a fully lazy 5-iteration chain was ALSO tried here
+        # (no per-round checkpoint, one job) and measured ~5% SLOWER at
+        # sf0.1 — the rank frames being pinned are small (one row per
+        # node), so the per-round action costs little, while the 5-deep
+        # adaptive plan re-optimizes more; eager pins stay. (Contrast
+        # kcore/label-prop, whose per-round pins materialized the full
+        # EDGE set — converting those to lazy persists measured −50%+.)
+        for _ in range(iters):
+            contrib = (
+                e.join(ranks.withColumnRenamed("node", "a"), "a")
+                .join(deg, "a")
+                .select(
+                    F.col("b").alias("node"),
+                    F.round(
+                        F.col("r").cast("double")
+                        / F.col("deg").cast("double"),
+                        round_to + 4,
+                    )
+                    .cast(cdec)
+                    .alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("inflow"))
+            )
+            # new ranks are TRUNCATED: a persist pin would nest every
+            # prior round's plan inside this one (linear logical growth,
+            # exponential AQE explain text), while the win it would buy
+            # — skipping the rank-side exchange — is bounded by the rank
+            # frame's size (one row per node). The frames worth keeping
+            # partitioned are the loop-invariant ones above.
+            ranks = pin(
+                nodes.join(contrib, "node", "left")
+                .crossJoin(n_row)
+                .select(
+                    "node",
+                    F.round(
+                        F.lit(teleport) / F.col("__n").cast("double")
+                        + F.lit(damping)
+                        * F.coalesce(
+                            F.col("inflow"), F.lit(0).cast(cdec)
+                        ).cast("double"),
+                        round_to,
+                    )
+                    .cast(dec)
+                    .alias("r"),
+                ),
+                truncate=True,
+            )
     return ranks.select("node", F.col("r").cast("double").alias("rank"))
 
 
@@ -396,14 +364,12 @@ def triangle_counts(
     more equi-join. Each triangle is found exactly once. All joins are
     plain shuffles on node keys; nothing collects.
     """
-    from ontario_spark.operators.dedup import _bounded_persist
-
     # und feeds the degree count (twice, via the endpoint union), the
     # orientation join, and the closing-edge semi-join; oriented feeds
     # both wedge legs and the closing set — unpersisted, the whole
     # upstream edge-construction lineage re-evaluates ~5x per run
     # (measured 2.6 s -> the persist cuts the event-scan fan-out)
-    und = _bounded_persist(
+    und = persisted(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
@@ -423,7 +389,7 @@ def triangle_counts(
     lower_first = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
-    oriented = _bounded_persist(
+    oriented = persisted(
         und.join(da, "a")
         .join(db, "b")
         .select(
@@ -471,8 +437,8 @@ def kcore(
     set once (same as ``triangle_counts``); each round is one degree
     aggregate (shuffle on node) + two semi-joins filtering the
     symmetric edge list (shuffles on each endpoint) — per-round cost
-    is O(|edges alive|), lineage pinned per round like the closure/CC
-    loops, superseded iterates unpersisted."""
+    is O(|edges alive|); each round's edge set is persisted lazily
+    (see the note below)."""
     und = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -485,17 +451,15 @@ def kcore(
         )
         .dropDuplicates(["a", "b"])
     )
-    from ontario_spark.operators.dedup import _bounded_persist
-
     # Fixed-round peel as ONE lazy job (round 12): every round's edge
     # set is persisted LAZILY — each round references its predecessor
     # three times (degree aggregate + two semi-joins), so the cache is
     # what keeps the recomputation tree linear, but materializing it
     # eagerly per round (the old localCheckpoint) paid ``rounds`` extra
     # actions and blocked AQE across the peel. The final action
-    # populates each round's cache on first use; the bounded pool
+    # populates each round's cache on first use; ``INTERMEDIATES``
     # (rounds+1 ≤ 8 entries) evicts leftovers across queries.
-    sym = _bounded_persist(
+    sym = persisted(
         und.unionAll(
             und.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
@@ -507,7 +471,7 @@ def kcore(
             .filter(F.col("__d") >= k)
             .select("a")
         )
-        sym = _bounded_persist(
+        sym = persisted(
             sym.join(alive, "a", "left_semi").join(
                 alive.withColumnRenamed("a", "b"), "b", "left_semi"
             )
@@ -536,47 +500,49 @@ def bfs_depths(
     level costs one equi-join of the current frontier against the edge
     relation (shuffle keyed on the join node) plus one anti-join
     against the visited set; frontier-at-a-time means a node reached
-    at level d is never re-expanded at d' > d. Lineage is pinned per
-    level (same discipline as the closure/CC loops) and superseded
-    frontiers are unpersisted. Early-exits when the frontier empties.
+    at level d is never re-expanded at d' > d. Lineage is truncated per
+    level (same discipline as the closure/CC loops). Early-exits when
+    the frontier empties.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
     width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # Edge set pinned pre-partitioned on the expansion join key — the
-    # round-13 ``pagerank`` shape: each level's frontier⋈e reuses this
-    # one exchange instead of re-shuffling the EDGE set per level, and
-    # the session-conf width mutation is retired (VERDICT items 4+7).
-    e = _pin(e.dropDuplicates(["src", "dst"]).repartition(width, "src"))
-    visited = _pin(
-        seeds.select(F.col(node_col).alias("node"))
-        .dropDuplicates(["node"])
-        .withColumn("depth", F.lit(0))
-    )
-    frontier = visited
-    for d in range(1, max_depth + 1):
-        reached = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
+    # Edge set persisted pre-partitioned on the expansion join key (as
+    # in ``pagerank``): each level's frontier⋈e reuses this one
+    # exchange instead of re-shuffling the EDGE set per level.
+    with pinned():
+        e = pin(
+            e.dropDuplicates(["src", "dst"]).repartition(width, "src"),
+            truncate=False,
+        )
+        visited = pin(
+            seeds.select(F.col(node_col).alias("node"))
             .dropDuplicates(["node"])
+            .withColumn("depth", F.lit(0)),
+            truncate=True,
         )
-        new = _pin(
-            reached.join(visited, "node", "left_anti").withColumn(
-                "depth", F.lit(d)
+        frontier = visited
+        for d in range(1, max_depth + 1):
+            reached = (
+                frontier.join(e, frontier["node"] == e["src"])
+                .select(F.col("dst").alias("node"))
+                .dropDuplicates(["node"])
             )
-        )
-        if frontier is not visited:
-            frontier.unpersist()
-        if new.isEmpty():
-            new.unpersist()
-            break
-        # visited stays a LAZY union of the pinned per-level
-        # deltas: scanning it touches d cached frames (cheap),
-        # while pinning it eagerly cost one extra materializing
-        # action per level (round 12).
-        visited = visited.unionByName(new)
-        frontier = new
+            new = pin(
+                reached.join(visited, "node", "left_anti").withColumn(
+                    "depth", F.lit(d)
+                ),
+                truncate=True,
+            )
+            if new.isEmpty():
+                break
+            # visited stays a LAZY union of the truncated per-level
+            # deltas: scanning it touches d checkpointed frames (cheap),
+            # while pinning it eagerly cost one extra materializing
+            # action per level (round 12).
+            visited = visited.unionByName(new)
+            frontier = new
     return visited
 
 
@@ -612,7 +578,7 @@ def bipartite_cooccurrence(
     # 1.88 s vs 1.45 s at sf0.1 — the pinned LogicalRDD lets AQE plan
     # both consumers (deg, per-user stage) against known sizes, which
     # beats saving the pin's materializing action here.
-    ui = _pin(ui)
+    ui = pin(ui, truncate=True)
     deg = ui.groupBy("i").agg(F.count(F.lit(1)).alias("deg"))
     # One u-keyed exchange serves the whole per-user stage (round 12):
     # the power-user cap is a whole-partition window count (no lists
@@ -692,109 +658,109 @@ def personalized_pagerank(
     teleport = round(1.0 - damping, 12)
     spark = edges.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Edge set pinned pre-partitioned on the contribution join key —
-    # same round-13 shape as ``pagerank`` (see the note there): the
-    # per-round e⋈ranks and the deg aggregate reuse this one exchange,
-    # and the session-conf width mutation is retired.
-    e = _pin(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .repartition(width, "a")
-    )
-    s = seeds.select(F.col(node_col).alias("node")).dropDuplicates(["node"])
-    nodes = _pin(
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .union(s.select("node"))
-        .distinct()
-    )
-    deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    ns_row = F.broadcast(s.agg(F.count(F.lit(1)).alias("__ns")))
-    flagged = _pin_cached(
-        nodes.join(
-            s.select("node", F.lit(1).alias("__sflag")), "node", "left"
+    # Edge set persisted pre-partitioned on the contribution join key,
+    # as in ``pagerank`` (see the note there): the per-round e⋈ranks
+    # and the deg aggregate reuse this one exchange.
+    with pinned():
+        e = pin(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+            .repartition(width, "a"),
+            truncate=False,
         )
-        .crossJoin(ns_row)
-        .select(
-            "node",
-            F.col("__sflag").isNotNull().alias("__seed"),
-            F.col("__ns"),
+        s = seeds.select(F.col(node_col).alias("node")).dropDuplicates(["node"])
+        nodes = pin(
+            e.select(F.col("a").alias("node"))
+            .union(e.select(F.col("b").alias("node")))
+            .union(s.select("node"))
+            .distinct(),
+            truncate=True,
         )
-    )
-    seed_unit = F.when(
-        F.col("__seed"), F.lit(1.0) / F.col("__ns").cast("double")
-    ).otherwise(F.lit(0.0))
-    seed_tele = F.when(
-        F.col("__seed"), F.lit(teleport) / F.col("__ns").cast("double")
-    ).otherwise(F.lit(0.0))
-    ranks = flagged.select(
-        "node", F.round(seed_unit, round_to).cast(dec).alias("r")
-    )
-    # deg persists lazily (one aggregate, ``iters`` consumers);
-    # eager per-round pins retained — see the measurement note in
-    # ``pagerank`` above.
-    from ontario_spark.operators.dedup import _bounded_persist
-
-    deg = _bounded_persist(deg)
-    prev_ranks = None
-    for _ in range(iters):
-        # Sparse-frontier contribution join (round 12): PPR mass
-        # starts on the seeds only, so most nodes carry rank 0 for
-        # the first hops — a zero-rank source contributes
-        # round(0/deg) = 0 to the DECIMAL inflow sum, and a node
-        # whose only in-edges come from zero-rank sources gets
-        # sum = 0.0000, identical to the left-join miss's
-        # coalesce(NULL, 0). Filtering r != 0 before the edge join
-        # is therefore bit-exact (no float re-ordering — the sum
-        # grid is decimal) while pruning the join to the reachable
-        # frontier: the standard sparse PPR evaluation. At sf0.1
-        # the fixture graph saturates within ~2 hops so the bench
-        # number is NEUTRAL (measured flat); the win case is seeds
-        # ≪ nodes with bounded expansion — the 100 TB "accounts
-        # near these flagged ones" shape this operator exists for.
-        # Cost when dense: one extra predicate on a cached scan.
-        contrib = (
-            e.join(
-                ranks.filter(F.col("r") != 0).withColumnRenamed(
-                    "node", "a"
-                ),
-                "a",
+        ns_row = F.broadcast(s.agg(F.count(F.lit(1)).alias("__ns")))
+        flagged = pin(
+            nodes.join(
+                s.select("node", F.lit(1).alias("__sflag")), "node", "left"
             )
-            .join(deg, "a")
-            .select(
-                F.col("b").alias("node"),
-                F.round(
-                    F.col("r").cast("double")
-                    / F.col("deg").cast("double"),
-                    round_to + 4,
-                )
-                .cast(cdec)
-                .alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        # truncating _pin — same growth argument as ``pagerank``.
-        new_ranks = _pin(
-            flagged.join(contrib, "node", "left")
+            .crossJoin(ns_row)
             .select(
                 "node",
-                F.round(
-                    seed_tele
-                    + F.lit(damping)
-                    * F.coalesce(
-                        F.col("inflow"), F.lit(0).cast(cdec)
-                    ).cast("double"),
-                    round_to,
-                )
-                .cast(dec)
-                .alias("r"),
-            )
+                F.col("__sflag").isNotNull().alias("__seed"),
+                F.col("__ns"),
+            ),
+            truncate=False,
         )
-        if prev_ranks is not None:
-            prev_ranks.unpersist()
-        prev_ranks = new_ranks
-        ranks = new_ranks
+        # deg persists lazily (one aggregate, ``iters`` consumers);
+        # eager per-round pins retained — see the measurement note in
+        # ``pagerank`` above.
+        deg = pin(
+            e.groupBy("a").agg(F.count(F.lit(1)).alias("deg")),
+            truncate=False,
+            eager=False,
+        )
+        seed_unit = F.when(
+            F.col("__seed"), F.lit(1.0) / F.col("__ns").cast("double")
+        ).otherwise(F.lit(0.0))
+        seed_tele = F.when(
+            F.col("__seed"), F.lit(teleport) / F.col("__ns").cast("double")
+        ).otherwise(F.lit(0.0))
+        ranks = flagged.select(
+            "node", F.round(seed_unit, round_to).cast(dec).alias("r")
+        )
+        for _ in range(iters):
+            # Sparse-frontier contribution join (round 12): PPR mass
+            # starts on the seeds only, so most nodes carry rank 0 for
+            # the first hops — a zero-rank source contributes
+            # round(0/deg) = 0 to the DECIMAL inflow sum, and a node
+            # whose only in-edges come from zero-rank sources gets
+            # sum = 0.0000, identical to the left-join miss's
+            # coalesce(NULL, 0). Filtering r != 0 before the edge join
+            # is therefore bit-exact (no float re-ordering — the sum
+            # grid is decimal) while pruning the join to the reachable
+            # frontier: the standard sparse PPR evaluation. At sf0.1
+            # the fixture graph saturates within ~2 hops so the bench
+            # number is NEUTRAL (measured flat); the win case is seeds
+            # ≪ nodes with bounded expansion — the 100 TB "accounts
+            # near these flagged ones" shape this operator exists for.
+            # Cost when dense: one extra predicate on a cached scan.
+            contrib = (
+                e.join(
+                    ranks.filter(F.col("r") != 0).withColumnRenamed(
+                        "node", "a"
+                    ),
+                    "a",
+                )
+                .join(deg, "a")
+                .select(
+                    F.col("b").alias("node"),
+                    F.round(
+                        F.col("r").cast("double")
+                        / F.col("deg").cast("double"),
+                        round_to + 4,
+                    )
+                    .cast(cdec)
+                    .alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("inflow"))
+            )
+            # truncated — same growth argument as ``pagerank``.
+            ranks = pin(
+                flagged.join(contrib, "node", "left")
+                .select(
+                    "node",
+                    F.round(
+                        seed_tele
+                        + F.lit(damping)
+                        * F.coalesce(
+                            F.col("inflow"), F.lit(0).cast(cdec)
+                        ).cast("double"),
+                        round_to,
+                    )
+                    .cast(dec)
+                    .alias("r"),
+                ),
+                truncate=True,
+            )
     return ranks.select("node", F.col("r").cast("double").alias("rank"))
 
 
@@ -834,14 +800,12 @@ def label_propagation(
         )
         .dropDuplicates(["a", "b"])
     )
-    from ontario_spark.operators.dedup import _bounded_persist
-
     # Fixed-round recurrence as ONE lazy job (round 12) — same
     # rationale as ``pagerank``/``kcore``: each round's label frame is
     # consumed exactly once by the next round, so no pinning is needed
     # at all; the symmetrized edge set (one consumer per round)
     # persists lazily. No per-round eager checkpoint actions.
-    sym = _bounded_persist(
+    sym = persisted(
         und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     )
     labels = sym.select(F.col("a").alias("node")).distinct().select(

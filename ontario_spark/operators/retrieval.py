@@ -28,13 +28,13 @@ right order, so the result is bit-stable and DuckDB-reproducible.
 from __future__ import annotations
 
 import re
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ontario_spark.operators.textops import spread, tokens
+from ontario_spark.persist import INDEXES, persisted
 
 
 def term_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -48,47 +48,6 @@ def term_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
         .withColumn("dl", F.sum("tf").over(Window.partitionBy(id_col)))
     )
-
-
-# Persisted per-doc profiles, bounded LRU: repeated queries (a server
-# issuing the same or overlapping term sets) reuse the cached frame
-# instead of stacking a fresh persist() per call — unbounded persisted
-# frames were a storage leak. Eviction unpersists. The key pins the
-# corpus DataFrame (value holds a ref) so id() stays valid while cached.
-# The HTTP server compiles queries from worker threads, so all dict
-# mutation + unpersist bookkeeping happens under a lock (plan BUILDING
-# stays outside it — only the publish/evict steps are serialized; two
-# threads racing on the same cold key may both build, the loser's frame
-# is unpersisted instead of published).
-_PER_DOC_CACHE: "dict[tuple, tuple[DataFrame, DataFrame]]" = {}
-_PER_DOC_CACHE_MAX = 8
-_PER_DOC_LOCK = threading.Lock()
-
-
-def _cached_per_doc(df: DataFrame, key: tuple, build) -> DataFrame:
-    with _PER_DOC_LOCK:
-        hit = _PER_DOC_CACHE.get(key)
-        if hit is not None:
-            _PER_DOC_CACHE[key] = _PER_DOC_CACHE.pop(key)  # refresh LRU
-            return hit[1]
-    per_doc = build().persist()
-    evicted: list[DataFrame] = []
-    with _PER_DOC_LOCK:
-        hit = _PER_DOC_CACHE.get(key)
-        if hit is not None:  # lost the build race — keep the winner
-            evicted.append(per_doc)
-            per_doc = hit[1]
-        else:
-            while len(_PER_DOC_CACHE) >= _PER_DOC_CACHE_MAX:
-                _, old = _PER_DOC_CACHE.pop(next(iter(_PER_DOC_CACHE)))
-                evicted.append(old)
-            _PER_DOC_CACHE[key] = (df, per_doc)
-    for old in evicted:
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-    return per_doc
 
 
 def bm25_scores(
@@ -124,9 +83,8 @@ def bm25_scores(
     def _tf(i: int, t: str):
         return F.size(F.filter("__toks", lambda x: x == F.lit(t))).alias(f"__tf{i}")
 
-    per_doc = _cached_per_doc(
-        df,
-        (id(df), id_col, text_col, tuple(terms)),
+    per_doc = INDEXES.get(
+        ("bm25_per_doc", df, id_col, text_col, tuple(terms)),
         lambda: toks.select(
             F.col(id_col),
             F.size("__toks").alias("dl"),
@@ -327,16 +285,15 @@ def rm3_topk(
 
     Scale shape: ``term_stats`` (the explode+aggregate inverted-index
     build) runs once and feeds both passes plus the df/avgdl stats
-    (persisted via the module's bounded cache); every join against it
+    (persisted in ``persist.INDEXES``); every join against it
     is either a broadcast (term frames, corpus-stats row) or keyed on
     the term/id partitioning it already has. Top-fb and top-k
     selections are ``orderBy().limit()`` — distributed TakeOrdered,
     never a global sort."""
     terms = list(dict.fromkeys(t.lower() for t in query_terms))
     spark = df.sparkSession
-    ts = _cached_per_doc(
-        df,
-        (id(df), id_col, text_col, "__term_stats"),
+    ts = INDEXES.get(
+        ("term_stats", df, id_col, text_col),
         lambda: term_stats(df, id_col, text_col),
     )
     docs = ts.groupBy(id_col).agg(F.max("dl").alias("dl"))
@@ -350,10 +307,8 @@ def rm3_topk(
     )
     # dfreq feeds both scoring passes (original + expanded) — persist
     # lazily so the per-term aggregate over the cached index runs once
-    # (round 12; vocabulary-sized, same bound as the index cache).
-    from ontario_spark.operators.dedup import _bounded_persist
-
-    dfreq = _bounded_persist(
+    # (round 12; vocabulary-sized).
+    dfreq = persisted(
         ts.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
     )
 

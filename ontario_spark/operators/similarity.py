@@ -25,12 +25,12 @@ double precision — JVM-side, deterministic left-to-right summation
 from __future__ import annotations
 
 import math
-import threading
-from weakref import WeakKeyDictionary
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ontario_spark.persist import INDEXES
 
 
 def _dvec(col: Column) -> Column:
@@ -404,19 +404,6 @@ def bucketed_topk(
     )
 
 
-# Fitted coarse quantizers, keyed weakly on the corpus DataFrame (plan
-# identity — stable when the corpus comes from the table registry).
-# Index construction is the OFFLINE half of IVF: at 100 TB the centroids
-# and cell assignments live in storage and queries only probe them, so
-# repeated queries must not pay the k-means fit again.
-_quantizer_cache: "WeakKeyDictionary[DataFrame, dict[tuple, DataFrame]]" = (
-    WeakKeyDictionary()
-)
-
-
-_QUANTIZER_CACHE_MAX_PER_CORPUS = 4
-
-
 def _coarse_quantizer(
     corpus: DataFrame, vec_col: str, n_lists: int, seed: int, id_col: str
 ) -> DataFrame:
@@ -425,19 +412,23 @@ def _coarse_quantizer(
     probe joins broadcast, plus the same centroids as a plain Python
     list (they are computed driver-side by the fit anyway), which the
     corpus-assignment fast path embeds as in-plan literals (round 12).
-    Lock-guarded + bounded like the sibling caches (round-5 review
-    fix): two server threads must not both pay the driver-blocking
-    k-means fit, and distinct param combos must not grow the dict
-    without bound (no unpersist needed — the centroid frame is a plain
-    createDataFrame, never persisted)."""
-    key = (vec_col, n_lists, seed, id_col)
-    with _PQ_LOCK:
-        per_corpus = _quantizer_cache.setdefault(corpus, {})
-        cached = per_corpus.get(key)
-        if cached is not None:
-            per_corpus[key] = per_corpus.pop(key)  # refresh LRU
-            return cached
+    Index construction is the OFFLINE half of IVF: at 100 TB the
+    centroids live in storage and queries only probe them, so the fit
+    is cached in ``persist.INDEXES`` and repeated queries (two server
+    threads included) do not pay the driver-blocking k-means fit again."""
+    centers = INDEXES.get(
+        ("ivf_quantizer", corpus, vec_col, n_lists, seed, id_col),
+        lambda: _fit_centers(corpus, vec_col, n_lists, seed, id_col),
+    )
+    cdf = corpus.sparkSession.createDataFrame(
+        centers, schema="cell int, center array<double>"
+    ).withColumn("center_norm", norm(F.col("center")))
+    return cdf, centers
 
+
+def _fit_centers(
+    corpus: DataFrame, vec_col: str, n_lists: int, seed: int, id_col: str
+) -> "list[tuple[int, list[float]]]":
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -459,22 +450,9 @@ def _coarse_quantizer(
         .select("features")
     )
     km = KMeans(k=n_lists, seed=seed, maxIter=10).fit(train)
-    centers = [
+    return [
         (i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())
     ]
-    cdf = corpus.sparkSession.createDataFrame(
-        centers, schema="cell int, center array<double>"
-    ).withColumn("center_norm", norm(F.col("center")))
-    entry = (cdf, centers)
-    with _PQ_LOCK:
-        per_corpus = _quantizer_cache.setdefault(corpus, {})
-        cached = per_corpus.get(key)
-        if cached is not None:  # lost a build race — keep the winner
-            return cached
-        while len(per_corpus) >= _QUANTIZER_CACHE_MAX_PER_CORPUS:
-            per_corpus.pop(next(iter(per_corpus)))
-        per_corpus[key] = entry
-    return entry
 
 
 def _argmax_cell_expr(
@@ -549,18 +527,6 @@ def _nearest_cells(
     )
 
 
-# Persisted corpus→cell assignments, the OTHER stored half of an IVF
-# index (the coarse quantizer cache holds the centroids; this holds
-# which cell each corpus vector lives in). Without it every ivf/ivfpq
-# call re-paid a corpus × centroids scan + a corpus-wide window before
-# any probing happened. Same bounded-LRU + unpersist-on-eviction +
-# lock discipline as _pq_cache.
-_cells_cache: "WeakKeyDictionary[DataFrame, dict[tuple, DataFrame]]" = (
-    WeakKeyDictionary()
-)
-_CELLS_CACHE_MAX_PER_CORPUS = 4
-
-
 def _corpus_cells(
     corpus: DataFrame,
     centers: "list[tuple[int, list[float]]]",
@@ -577,42 +543,17 @@ def _corpus_cells(
     id-keyed Exchange + Sort of the (corpus × n_lists) crossJoin just
     to rank each id's n_lists candidate rows — a per-row argmax needs
     no shuffle at all, and the scores/tie-breaks are bit-identical."""
-    key = (id_col, vec_col, n_lists, seed)
-    with _PQ_LOCK:
-        per = _cells_cache.setdefault(corpus, {})
-        hit = per.get(key)
-        if hit is not None:
-            per[key] = per.pop(key)  # refresh LRU
-            return hit
-    cells = (
-        corpus.select(
+    return INDEXES.get(
+        ("ivf_cells", corpus, id_col, vec_col, n_lists, seed),
+        lambda: corpus.select(
             F.col(id_col),
             _dvec(F.col(vec_col)).alias("__vd"),
             norm(F.col(vec_col)).alias("__vnorm"),
-        )
-        .select(
+        ).select(
             F.col(id_col),
             _argmax_cell_expr(centers, "__vd", "__vnorm").alias("cell"),
-        )
-        .persist()
+        ),
     )
-    evicted: list[DataFrame] = []
-    with _PQ_LOCK:
-        per = _cells_cache.setdefault(corpus, {})
-        hit = per.get(key)
-        if hit is not None:  # lost a build race — keep the winner
-            evicted.append(cells)
-            result = hit
-        else:
-            while len(per) >= _CELLS_CACHE_MAX_PER_CORPUS:
-                evicted.append(per.pop(next(iter(per))))
-            result = per[key] = cells
-    for old in evicted:
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-    return result
 
 
 def seeded_cluster_assign(
@@ -899,24 +840,6 @@ def semantic_dedup(
 # map-only pass; search is a broadcast join + m array lookups per row.
 
 
-# Trained PQ codebooks + encoded corpus, keyed weakly on the corpus
-# DataFrame (plan identity — stable via the table registry). Same
-# offline/online split as the IVF quantizer cache: codebook training
-# and corpus encoding are index CONSTRUCTION; at 100 TB the codes are
-# persisted and queries only probe, so repeated queries must not repay
-# the fit + encode. Bounded LRU per corpus with unpersist-on-eviction
-# (mirroring retrieval._PER_DOC_CACHE): distinct (m, k, iters) combos
-# must not accumulate persisted frames — WeakKeyDictionary eviction
-# alone only drops the Python entry while Spark's CacheManager keeps
-# the cached data alive JVM-side. Lock-guarded for the multi-threaded
-# HTTP-server path; the expensive fit/encode stays outside the lock.
-_pq_cache: "WeakKeyDictionary[DataFrame, dict[tuple, tuple]]" = (
-    WeakKeyDictionary()
-)
-_PQ_CACHE_MAX_PER_CORPUS = 4
-_PQ_LOCK = threading.Lock()
-
-
 def pq_index(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -927,33 +850,12 @@ def pq_index(
 ) -> "tuple[list[list[list[float]]], DataFrame]":
     """Train-or-fetch the (codebooks, encoded-corpus) pair for a
     corpus — the cached offline half of PQ search."""
-    key = (id_col, vec_col, m, k, iters)
-    with _PQ_LOCK:
-        per_corpus = _pq_cache.setdefault(corpus, {})
-        cached = per_corpus.get(key)
-        if cached is not None:
-            per_corpus[key] = per_corpus.pop(key)  # refresh LRU
-            return cached
-    books = pq_codebooks(corpus, id_col, vec_col, m, k, iters)
-    codes = pq_encode(corpus, books, id_col, vec_col).persist()
-    evicted: list[DataFrame] = []
-    with _PQ_LOCK:
-        per_corpus = _pq_cache.setdefault(corpus, {})
-        hit = per_corpus.get(key)
-        if hit is not None:  # lost a build race — keep the winner
-            evicted.append(codes)
-            result = hit
-        else:
-            while len(per_corpus) >= _PQ_CACHE_MAX_PER_CORPUS:
-                _, old_codes = per_corpus.pop(next(iter(per_corpus)))
-                evicted.append(old_codes)
-            result = per_corpus[key] = (books, codes)
-    for old in evicted:
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-    return result
+
+    def build():
+        books = pq_codebooks(corpus, id_col, vec_col, m, k, iters)
+        return books, pq_encode(corpus, books, id_col, vec_col)
+
+    return INDEXES.get(("pq", corpus, id_col, vec_col, m, k, iters), build)
 
 
 def pq_codebooks(

@@ -16,6 +16,8 @@ from weakref import WeakKeyDictionary
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ontario_spark.persist import pin
+
 # Marker stopwords per language for the n-gram/marker language-ID
 # heuristic. Deterministic and tiny by design — the point is the
 # Spark-side shape (scoring + argmax over languages), not model quality.
@@ -1023,15 +1025,13 @@ def _bpe_train_core(
     final word→sequence vocab frame ``(w, seq, f)``). ``apply_last``
     controls whether the last round's merge is folded into the vocab —
     training only reports it; encoding must apply it."""
-    from ontario_spark.operators.graph import _pin
-
     # Lazy pins throughout (round 12): every round's vocab is still a
     # LogicalRDD (lineage truncated, so the two-consumer-per-round plan
     # cannot double), but nothing materializes until the caller's ONE
     # action — the old eager pins cost a driver-blocking job per round
     # (9 sequential actions for 8 merge rounds; measured
     # text_bpe_merges 1.9 s → ~1.2 s solo at sf0.1).
-    wf = _pin(
+    wf = pin(
         spread(df)
         .select(F.explode(tokens(F.col(text_col))).alias("w"))
         .select(F.lower(F.col("w")).alias("w"))
@@ -1043,6 +1043,7 @@ def _bpe_train_core(
             F.array_join(F.split(F.col("w"), ""), _BPE_SEP).alias("seq"),
             "f",
         ),
+        truncate=True,
         eager=False,
     )
     best_rows = []
@@ -1075,7 +1076,7 @@ def _bpe_train_core(
         # so ≤ rounds copies is a bounded cost, and releasing a
         # localCheckpoint early would truncate lineage out from under
         # the not-yet-collected argmax rows
-        wf = _pin(
+        wf = pin(
             wf.crossJoin(F.broadcast(best)).select(
                 "w",
                 _bpe_fold(
@@ -1083,6 +1084,7 @@ def _bpe_train_core(
                 ).alias("seq"),
                 "f",
             ),
+            truncate=True,
             eager=False,
         )
     return best_rows, wf

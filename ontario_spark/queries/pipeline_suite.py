@@ -23,6 +23,7 @@ from ontario_spark.operators.multimodal import (
     frame_sample,
     media_from_text,
 )
+from ontario_spark.persist import persisted
 
 # --- deterministic sampling / corpus mixing -----------------------------
 
@@ -738,7 +739,7 @@ def er_record_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join above re-run per consumer. The frame saturates at the
     # attribute-vocabulary product (19,605 rows at ANY corpus size —
     # the combo-collapse invariant), so persisting it is O(1) memory.
-    combos = dedup._bounded_persist(combos.join(id2, key, "left_outer"))
+    combos = persisted(combos.join(id2, key, "left_outer"))
     combo_recs = combos.select(F.col("id1").alias("p_partkey"), *key)
     pairs = dedup.record_link_scores(
         combo_recs,

@@ -608,16 +608,12 @@ def run_incremental_neardup(
     The last batch's EXECUTED probe plan is recorded for
     tools/plan_audit (same contract as run_available_now)."""
     from ontario_spark.operators.dedup import (
-        _bounded_persist,
         banded_signature_index,
         probe_banded_index,
     )
+    from ontario_spark.persist import pin, pinned
     from ontario_spark.session import CONF_LOCK
 
-    index = _bounded_persist(
-        banded_signature_index(corpus, id_col, text_col, num_hashes, bands, n)
-    )
-    index.count()  # materialize the persisted index before the stream
     base = tempfile.mkdtemp(prefix=f"{name}_", dir=scratch_dir())
     sink, ckpt = f"{base}/out", f"{base}/ckpt"
     # The stream carries the same document schema as the historical
@@ -644,9 +640,10 @@ def run_incremental_neardup(
         if batch_id < n_files - 1:
             out.write.mode("append").parquet(sink)
             return
-        out = out.persist()
-        try:
-            out.count()  # execute so the captured plan is the FINAL one
+        # foreachBatch runs on its own thread, so the probe opens its
+        # own scope; the eager pin executes the FINAL plan to capture
+        with pinned():
+            out = pin(out, truncate=False)
             plan = out._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "simple"
@@ -657,26 +654,29 @@ def run_incremental_neardup(
                 LAST_STREAM_EXPLAIN = plan
                 STREAM_EXPLAINS[name] = plan
             out.write.mode("append").parquet(sink)
-        finally:
-            out.unpersist()
 
-    with CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(new_docs_dir)
-                .writeStream.foreachBatch(_probe)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    index.unpersist()
+    with pinned():
+        # materialize the persisted index before the stream
+        index = pin(
+            banded_signature_index(corpus, id_col, text_col, num_hashes, bands, n),
+            truncate=False,
+        )
+        with CONF_LOCK:
+            prev = spark.conf.get("spark.sql.shuffle.partitions")
+            try:
+                spark.conf.set("spark.sql.shuffle.partitions", "8")
+                q = (
+                    spark.readStream.schema(schema)
+                    .option("maxFilesPerTrigger", 1)
+                    .parquet(new_docs_dir)
+                    .writeStream.foreachBatch(_probe)
+                    .option("checkpointLocation", ckpt)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         return spark.read.parquet(sink)
     except Exception:

@@ -3,6 +3,10 @@
 Usage: python tools/dump_plans.py TAG QUERY [QUERY...] [--sf DIR] [--out plans/r12]
 Streaming queries (stream_*) record the executed last-micro-batch plan
 captured by streaming.events.STREAM_EXPLAINS after running the query.
+Every localCheckpoint taken while the query is built (the truncating
+pins of the iterative operators) appends the plan it executed, so a
+loop's per-round plans are visible, not just the final scan of the
+last checkpoint.
 """
 from __future__ import annotations
 
@@ -21,14 +25,30 @@ def main() -> int:
     ap.add_argument("--out", default="plans/r12")
     args = ap.parse_args()
 
+    from pyspark.sql.classic.dataframe import DataFrame
+
     from ontario_spark.queries import all_queries
     from ontario_spark.session import get_spark
 
     spark = get_spark("ontario-dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
     registry = all_queries()
     os.makedirs(args.out, exist_ok=True)
+
+    pins: list[str] = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recorded(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        pins.append(self._jdf.queryExecution().explainString(mode))
+        return out
+
+    DataFrame.localCheckpoint = recorded
     for name in args.queries:
+        pins.clear()
         df = registry[name](spark, args.sf)
         if name.startswith("stream_"):
             # run to completion so the executed micro-batch plan exists
@@ -37,17 +57,15 @@ def main() -> int:
             plan = sev.STREAM_EXPLAINS.get(name) or sev.LAST_STREAM_EXPLAIN or ""
             plan = "(executed last micro-batch plan)\n" + plan
         else:
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
+            plan = df._jdf.queryExecution().explainString(mode)
+        ex = plan.count("Exchange")
+        py = plan.count("EvalPython") + plan.count("MapInPandas") + plan.count("MapInArrow")
+        for i, pin_plan in enumerate(pins):
+            plan += f"\n=== localCheckpoint {i}: the plan it executed ===\n{pin_plan}"
         path = os.path.join(args.out, f"{name}_{args.tag}.txt")
         with open(path, "w") as f:
             f.write(plan)
-        ex = plan.count("Exchange")
-        py = plan.count("EvalPython") + plan.count("MapInPandas") + plan.count("MapInArrow")
-        print(f"{name}: exchanges={ex} python_nodes={py} -> {path}")
+        print(f"{name}: exchanges={ex} python_nodes={py} pins={len(pins)} -> {path}")
     return 0
 
 
