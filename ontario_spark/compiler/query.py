@@ -37,6 +37,7 @@ from ontario_spark.compiler.filters import (
 )
 from ontario_spark.compiler.frame import BFrame, KEYED, LEXICAL, TermMeta
 from ontario_spark.compiler.star import compile_star
+from ontario_spark.data import local_frame
 from ontario_spark.persist import pin
 from ontario_spark.planner.decomposer import bgp_stars, prune_connected, select_sources
 from ontario_spark.sparql.ast import (
@@ -1253,8 +1254,8 @@ class SparqlEngine:
             for c in (v, *[f"{v}{s}" for s in TERM_SIDE_SUFFIXES])
         ]
         schema = ", ".join(f"`{c}` string" for c in cols)
-        df = self.spark.createDataFrame(
-            [tuple(r.get(c) for c in cols) for r in rows], schema=schema
+        df = local_frame(
+            self.spark, [tuple(r.get(c) for c in cols) for r in rows], schema
         )
         # a lenient endpoint (or injected executor) may return partial
         # bindings — rows are driver-side here, so flag exactly the
@@ -1355,8 +1356,7 @@ class SparqlEngine:
         if not outs:
             # DESCRIBE of a resource no map can produce: an empty
             # description is valid (SPARQL 1.1 §16.4), not an error
-            schema = "s string, p string, o string"
-            return self.spark.createDataFrame([], schema=schema)
+            return local_frame(self.spark, [], "s string, p string, o string")
         out = outs[0]
         for x in outs[1:]:
             out = out.unionByName(x)
@@ -1480,15 +1480,12 @@ class SparqlEngine:
                     for r in rows
                 ]
             fields.append(f"`{var}` {t}")
-        df = self.spark.createDataFrame(rows, schema=", ".join(fields))
-        # Explicit broadcast hint (round 12, guide §3.1): a
-        # createDataFrame frame is a LogicalRDD with UNKNOWN stats,
-        # which the planner treats as infinitely large — so the join
-        # against a VALUES block was building the hash (or nested-loop
-        # broadcast!) side from the PATTERN star: measured at sf0.1,
-        # sparql_values_undef broadcast the full 1.5M-row orders scan
-        # four times (once per compat-mask leg). The inline data block
-        # is bounded by the query text itself — always the build side.
+        df = local_frame(self.spark, rows, ", ".join(fields))
+        # Explicit broadcast hint: the frame is a LocalRelation with
+        # known tiny stats, so Catalyst would usually broadcast it
+        # anyway; the hint keeps it the build side whatever the size
+        # estimates, because the inline data block is bounded by the
+        # query text itself.
         df = F.broadcast(df)
         return BFrame(
             df,
@@ -1532,11 +1529,11 @@ class SparqlEngine:
         # (NULL-mask decomposition, _join_compat) provides the exact
         # §10.2 semantics in BOTH directions — UNDEF wildcards AND
         # pattern-side unbound merges. The literal frame is a
-        # LocalRelation with known tiny stats, so Catalyst broadcasts
-        # it without a hint. The pattern side's own flags are trusted
-        # as-is: the engine invariant is that a non-flagged column
-        # never holds NULL (unboundness only arises structurally,
-        # where the flag is set), so defensively flagging every shared
+        # broadcast-hinted LocalRelation (see _values). The pattern
+        # side's own flags are trusted as-is: the engine invariant is
+        # that a non-flagged column never holds NULL (unboundness only
+        # arises structurally, where the flag is set), so defensively
+        # flagging every shared
         # var would only multiply the mask groups — 2^L scans of the
         # pattern frame — without changing any answer (review fix;
         # callers that hand-build frames with unbound cells must set

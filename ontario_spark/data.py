@@ -1,4 +1,5 @@
-"""Test-data table loading (driver-generated parquet per TESTDATA.md)."""
+"""Test-data table loading (driver-generated parquet per TESTDATA.md) and
+the one way driver-side rows become a DataFrame (``local_frame``)."""
 
 from __future__ import annotations
 
@@ -71,6 +72,37 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     per_session[key] = df
     return df
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema`` column order) as a
+    DataFrame typed by the DDL ``schema``. The rows travel as a pyarrow
+    Table, which Spark turns into a JVM ``LocalRelation`` with known
+    size stats: scanning it never starts a Python worker, unlike the
+    row path's ``LogicalRDD`` over a pickled ``PythonRDD`` (~0.2 s per
+    Python task on a 4-core host, paid by every job that scans the
+    frame).
+
+    Timestamp columns are built tz-naive and localized with the session
+    time zone, as the row path reads a naive ``datetime``. A schema
+    with no columns yields one empty row per input row."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    if not struct.fields:
+        return spark.range(len(rows)).select()
+    types = [
+        pa.timestamp("us") if pa.types.is_timestamp(f.type) else f.type
+        for f in to_arrow_schema(struct)
+    ]
+    columns = list(zip(*rows)) if rows else [()] * len(types)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(columns, types)],
+        names=struct.names,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ontario_spark.data import local_frame
 from ontario_spark.operators.textops import spread, tokens
 from ontario_spark.persist import INDEXES, persisted
 
@@ -338,7 +339,7 @@ def rm3_topk(
             )
         )
 
-    orig = spark.createDataFrame([(t, 1.0) for t in terms], ["term", "w"])
+    orig = local_frame(spark, [(t, 1.0) for t in terms], "term string, w double")
     fb = (
         scored(orig, "score")
         .orderBy(F.desc("score"), F.asc(id_col))

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ontario_spark.data import local_frame
 from ontario_spark.persist import INDEXES
 
 
@@ -420,8 +421,8 @@ def _coarse_quantizer(
         ("ivf_quantizer", corpus, vec_col, n_lists, seed, id_col),
         lambda: _fit_centers(corpus, vec_col, n_lists, seed, id_col),
     )
-    cdf = corpus.sparkSession.createDataFrame(
-        centers, schema="cell int, center array<double>"
+    cdf = local_frame(
+        corpus.sparkSession, centers, "cell int, center array<double>"
     ).withColumn("center_norm", norm(F.col("center")))
     return cdf, centers
 

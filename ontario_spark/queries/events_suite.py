@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ontario_spark.data import table
+from ontario_spark.data import local_frame, table
 from ontario_spark.operators.asof import (
     asof_join,
     range_join,
@@ -321,10 +321,11 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = stages.groupBy("stage").agg(
         F.count(F.lit(1)).alias("__n")
     )
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         [("1_signup",), ("2_click_after_signup",),
          ("3_purchase_after_click",)],
-        ["stage"],
+        "stage string",
     )
     return base.join(counts, "stage", "left").select(
         "stage", F.coalesce(F.col("__n"), F.lit(0)).cast("long").alias("n_users")
@@ -885,7 +886,7 @@ def events_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    seeds = spark.createDataFrame([("u1",), ("u2",), ("u3",)], ["node"])
+    seeds = local_frame(spark, [("u1",), ("u2",), ("u3",)], "node string")
     return bfs_depths(edges, seeds, max_depth=4)
 
 
@@ -932,7 +933,7 @@ def events_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    seeds = spark.createDataFrame([("u1",), ("u2",), ("u3",)], ["node"])
+    seeds = local_frame(spark, [("u1",), ("u2",), ("u3",)], "node string")
     return personalized_pagerank(edges, seeds, iters=5, damping=0.85)
 
 

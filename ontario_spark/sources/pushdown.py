@@ -21,6 +21,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ontario_spark.data import local_frame
+
 # executor: (query_text) -> list of solution-mapping dicts
 RemoteExecutor = Callable[[str], list[dict[str, str | None]]]
 
@@ -137,7 +139,7 @@ def bound_join_fetch(
             for b in fetch_all(executor, queries)
         ]
     schema = ", ".join(f"{v} string" for v in remote_vars)
-    return spark.createDataFrame(rows, schema=schema)
+    return local_frame(spark, rows, schema)
 
 
 def bound_join(

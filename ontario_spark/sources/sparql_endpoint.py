@@ -24,6 +24,8 @@ from urllib.parse import urlencode
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ontario_spark.data import local_frame
+
 # fetcher: (endpoint_url, query_text) -> SPARQL-JSON result dict
 Fetcher = Callable[[str, str], dict]
 
@@ -154,7 +156,7 @@ def endpoint_df(
         )
     ]
     schema = ", ".join(f"{v} string" for v in variables)
-    return spark.createDataFrame(rows, schema=schema)
+    return local_frame(spark, rows, schema)
 
 
 def sharded_queries(query: str, shard_var: str, n_shards: int) -> list[str]:

@@ -936,6 +936,8 @@ def rows_to_bframe(spark, rows: list[dict], specs: list[ColSpec]):
     """Build a BFrame from driver-side remote rows according to the
     column contract (KEYED vars keep their template metadata so
     downstream joins still run on raw keys)."""
+    from ontario_spark.data import local_frame
+
     real = [s for s in specs if s.out]
     cols = [s.out for s in real]
     data = [tuple(r.get(c) for c in cols) for r in rows]
@@ -992,10 +994,6 @@ def rows_to_bframe(spark, rows: list[dict], specs: list[ColSpec]):
         tuple(coerce(v, t) for v, t in zip(row, types)) for row in data
     ]
     schema = ", ".join(f"{c} {t}" for c, t in zip(cols, types))
-    if not cols:
-        # no projected columns: one row per REMOTE row (never a
-        # fabricated singleton — an empty remote answer must stay empty)
-        df = spark.range(len(rows)).select()
-    else:
-        df = spark.createDataFrame(data, schema=schema)
-    return df_to_bframe(df, specs)
+    # no projected columns: still one row per REMOTE row (never a
+    # fabricated singleton — an empty remote answer must stay empty)
+    return df_to_bframe(local_frame(spark, data, schema), specs)

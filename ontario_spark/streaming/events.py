@@ -607,6 +607,7 @@ def run_incremental_neardup(
     and lives outside the stream (no unbounded state store growth).
     The last batch's EXECUTED probe plan is recorded for
     tools/plan_audit (same contract as run_available_now)."""
+    from ontario_spark.data import local_frame
     from ontario_spark.operators.dedup import (
         banded_signature_index,
         probe_banded_index,
@@ -682,10 +683,9 @@ def run_incremental_neardup(
     except Exception:
         # zero batches produced pairs → no sink files; empty result
         # with the operator's schema
-        return spark.createDataFrame(
-            [], f"id_new {dict(corpus.dtypes)[id_col]}, "
-                f"id_corpus {dict(corpus.dtypes)[id_col]}, "
-                "est_jaccard double",
+        key = dict(corpus.dtypes)[id_col]
+        return local_frame(
+            spark, [], f"id_new {key}, id_corpus {key}, est_jaccard double"
         )
 
 

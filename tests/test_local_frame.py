@@ -1,0 +1,126 @@
+"""``data.local_frame``: driver-side rows enter Spark as an Arrow-built
+``LocalRelation`` with exactly the rows the classic row path
+(``spark.createDataFrame(rows, schema)``) produces, and the federation
+entry points that turn fetched rows into frames plan the same way."""
+
+from __future__ import annotations
+
+import datetime
+
+import pytest
+
+from ontario_spark.data import local_frame
+
+CASES = {
+    "string": ("v string", [("a",), (None,), ("",), ("ünï",)]),
+    "long": ("v long", [(1,), (None,), (-(2**62),), (0,)]),
+    "double": ("v double", [(1.5,), (None,), (-0.25,), (float("inf"),)]),
+    "boolean": ("v boolean", [(True,), (None,), (False,)]),
+    "timestamp": (
+        "v timestamp",
+        [
+            (datetime.datetime(2024, 3, 10, 2, 30),),
+            (None,),
+            (datetime.datetime(1999, 12, 31, 23, 59, 59, 123456),),
+        ],
+    ),
+    "array_double": (
+        "v array<double>",
+        [([1.0, None, 2.5],), (None,), ([],)],
+    ),
+    "mixed_all_none_column": (
+        "`a b` string, n long, d double, f boolean, t timestamp, "
+        "xs array<double>, nothing string",
+        [
+            ("x", 1, 0.5, True, datetime.datetime(2020, 1, 1), [1.0], None),
+            (None, None, None, None, None, None, None),
+        ],
+    ),
+    "zero_rows": ("s string, n long, t timestamp, xs array<double>", []),
+}
+
+
+def plan_of(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def assert_local(df) -> None:
+    plan = plan_of(df)
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_local_frame_matches_row_path(spark, case):
+    schema, rows = CASES[case]
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema=schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert_local(got)
+
+
+def test_local_frame_without_columns_keeps_row_count(spark):
+    assert local_frame(spark, [(), ()], "").count() == 2
+    assert local_frame(spark, [], "").count() == 0
+
+
+def test_rows_to_bframe_plans_local(spark):
+    from ontario_spark.sources.translate import REFERENCE, ColSpec, rows_to_bframe
+
+    rows = [{"x": "a", "n": 1}, {"x": None, "n": 2.5}]
+    specs = [ColSpec("x", "x", REFERENCE), ColSpec("n", "n", REFERENCE)]
+    bf = rows_to_bframe(spark, rows, specs)
+    assert sorted(bf.df.collect(), key=str) == sorted(
+        spark.createDataFrame(
+            [("a", 1.0), (None, 2.5)], "x string, n double"
+        ).collect(),
+        key=str,
+    )
+    assert_local(bf.df)
+
+
+def test_bound_join_fetch_plans_local(spark):
+    from ontario_spark.sources.pushdown import bound_join_fetch
+
+    build = spark.createDataFrame([("k1",), ("k2",)], "k string")
+
+    def executor(query):
+        return [{"k": "k1", "v": "one"}, {"k": "k2", "v": None}]
+
+    out = bound_join_fetch(
+        spark, build, "k", "SELECT ?k ?v WHERE { ?k <p> ?v }", ["k", "v"],
+        executor,
+    )
+    assert sorted(out.collect(), key=str) == sorted(
+        spark.createDataFrame(
+            [("k1", "one"), ("k2", None)], "k string, v string"
+        ).collect(),
+        key=str,
+    )
+    assert_local(out)
+
+
+def test_values_block_plans_local(spark, sf_small):
+    from ontario_spark.catalog.tpch_rdf import tpch_catalog
+    from ontario_spark.compiler.query import SparqlEngine
+    from ontario_spark.sparql.ast import Term, ValuesBlock
+
+    xsd = "http://www.w3.org/2001/XMLSchema#"
+    block = ValuesBlock(
+        ["name", "n", "undef"],
+        [
+            (
+                Term("literal", "ASIA"),
+                Term("literal", "1", f"{xsd}integer", py=1),
+                None,
+            ),
+            (Term("iri", "http://ex.org/x"), None, None),
+        ],
+    )
+    bf = SparqlEngine(spark, tpch_catalog(sf_small))._values(block)
+    assert bf.df.collect() == spark.createDataFrame(
+        [("ASIA", 1, None), ("http://ex.org/x", None, None)],
+        "name string, n long, undef string",
+    ).collect()
+    assert bf.maybe_null == {"n", "undef"}
+    assert_local(bf.df)
