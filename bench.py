@@ -95,6 +95,73 @@ HEADLINE_SUITE = [
 CALIBRATION = ("q1_pricing_summary", "q3_shipping_priority", "events_asof_join")
 
 
+def warm_up(spark, sf_dirs, first_query=None) -> None:
+    """Warm the JVM, codegen, and every table's parquet footer once so
+    per-query numbers measure the query, not session startup or
+    first-file-open (otherwise the first query to touch the largest
+    table absorbs a multi-second one-off cost). ``first_query`` — a
+    registry function — runs once on the first dir. Then the two
+    lazily-initialized execution paths are warmed so the first query
+    that needs them isn't charged for one-off JVM work: decimal-sum
+    whole-stage codegen (JIT) and the Arrow/Python worker pool used by
+    mapInPandas operators, at ``SPARK_GRAFT_CPUS`` width."""
+    from pyspark.sql import functions as F
+
+    from ontario_spark.data import TABLES, table
+
+    for sf_dir in sf_dirs:
+        for t in TABLES:
+            try:
+                table(spark, sf_dir, t).limit(1).collect()
+            except Exception:
+                pass
+    if first_query is not None:
+        first_query(spark, sf_dirs[0]).limit(1).collect()
+    spark.range(10_000).agg(F.sum(F.col("id").cast("decimal(18,6)"))).collect()
+    width = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark.range(1_000).repartition(width).mapInPandas(lambda it: it, "id long").count()
+
+
+def timed(spark, label, build, action="noop", repeat=1):
+    """Best-of-``repeat`` wall seconds of ``build()`` followed by the
+    timed action: ``df.write.format("noop")`` (every column of every
+    row computed and discarded — the ENGINE's work) or, for
+    ``action="collect"``, ``df.collect()`` (adds the driver-side row
+    path). Returns ``(seconds, df, out)``: the last built frame and,
+    under ``collect``, its rows (else ``None``).
+
+    Persisted intermediates are cleared BEFORE the call (operators like
+    LSH/Jaccard persist hot intermediates; 88 queries × repeats
+    accumulate cache entries whose LRU eviction perturbs later
+    timings) but NOT between repeats — best-of-N is a warm measurement
+    by design. The driver-side ContextCleaner fires there too: with a
+    16g heap the old gen almost never collects during a 238-query run,
+    so dereferenced broadcasts/shuffle files/accumulators pile up
+    executor-side and later queries degrade (measured: ann_topk_ivfpq
+    1.9 s solo vs 3.3-5.0 s mid-run; the GC cuts the same block's
+    inflation roughly in half). Both run outside the measured region.
+    Jobs carry ``label`` as their description until the call returns."""
+    spark.catalog.clearCache()
+    try:
+        spark.sparkContext._jvm.System.gc()
+    except Exception:
+        pass
+    spark.sparkContext.setJobDescription(label)
+    try:
+        best, out = float("inf"), None
+        for _ in range(max(repeat, 1)):
+            t0 = time.perf_counter()
+            df = build()
+            if action == "collect":
+                out = df.collect()
+            else:
+                df.write.format("noop").mode("overwrite").save()
+            best = min(best, time.perf_counter() - t0)
+        return best, df, out
+    finally:
+        spark.sparkContext.setJobDescription(None)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -121,30 +188,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
-    # Warm the JVM, codegen, and every table's parquet footer once so
-    # per-query numbers measure the query, not session startup or
-    # first-file-open (otherwise the first query to touch the largest
-    # table absorbs a multi-second one-off cost).
-    from ontario_spark.data import TABLES, table
-
-    for t in TABLES:
-        try:
-            table(spark, sf_dir, t).limit(1).collect()
-        except Exception:
-            pass
-    queries[names[0]](spark, sf_dir).limit(1).collect()
-    # Warm the two lazily-initialized execution paths so the first
-    # query that needs them isn't charged for one-off JVM work:
-    # decimal-sum whole-stage codegen (JIT) and the Arrow/Python
-    # worker pool used by mapInPandas operators.
-    from pyspark.sql import functions as F
-
-    spark.range(10_000).agg(
-        F.sum(F.col("id").cast("decimal(18,6)"))
-    ).collect()
-    spark.range(1_000).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    warm_up(spark, [sf_dir], queries[names[0]])
 
     # Best-of-N per query (default 3): single-shot numbers on a shared
     # box are GC/page-cache noise-dominated; the min is the query's
@@ -154,49 +198,24 @@ def main() -> None:
     # query whose warm cost is 1.9 s.
     repeat = int(os.environ.get("BENCH_REPEAT", "3"))
     # Timed action (round 12, optimization guide §1.4): the default
-    # times `df.write.format("noop")` — every column of every row is
-    # computed and discarded, so the number measures the ENGINE's work,
-    # not the driver-side row-path serialization of collect() (measured
-    # ~22 s across the registry for the ≥50k-row results at sf0.1 —
-    # e.g. lslod_cq4 returns 600k rows and spent most of its 2.4 s
-    # pickling them into Python). BENCH_ACTION=collect reproduces the
-    # r1-r11 methodology exactly; OPTIMIZATION_r12.md records the
-    # same-code numbers under both actions, and the tracked
+    # times `df.write.format("noop")`, so the number measures the
+    # ENGINE's work, not the driver-side row-path serialization of
+    # collect() (measured ~22 s across the registry for the ≥50k-row
+    # results at sf0.1 — e.g. lslod_cq4 returns 600k rows and spent
+    # most of its 2.4 s pickling them into Python). BENCH_ACTION=collect
+    # reproduces the r1-r11 methodology exactly; OPTIMIZATION_r12.md
+    # records the same-code numbers under both actions, and the tracked
     # BENCH_COLLECT_r12.json snapshot keeps the old-methodology trend
     # line intact. Row counts still come from one untimed count() per
     # query after the repeats.
     action = os.environ.get("BENCH_ACTION", "noop")
     for name in names:
-        # Clear persisted intermediates BETWEEN queries (operators like
-        # LSH/Jaccard persist hot intermediates; 88 queries × repeats
-        # accumulate cache entries whose LRU eviction perturbs later
-        # timings) but NOT between repeats — best-of-N is a warm
-        # measurement by design.
-        spark.catalog.clearCache()
-        # Fire the driver-side ContextCleaner between queries: with a
-        # 16g heap the old gen almost never collects during a 238-query
-        # run, so dereferenced broadcasts/shuffle files/accumulators
-        # pile up executor-side and later queries degrade (measured:
-        # ann_topk_ivfpq 1.9 s solo vs 3.3-5.0 s mid-run; the GC cuts
-        # the same block's inflation roughly in half). Untimed — runs
-        # between queries, never inside the measured region.
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-        spark.sparkContext.setJobDescription(f"bench:{name}")
-        best = float("inf")
-        for _ in range(max(repeat, 1)):
-            t0 = time.perf_counter()
-            df = queries[name](spark, sf_dir)
-            if action == "collect":
-                out = df.collect()
-            else:
-                df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+        best, df, out = timed(
+            spark, f"bench:{name}", lambda: queries[name](spark, sf_dir),
+            action, repeat,
+        )
         timings[name] = round(best, 4)
         rows[name] = len(out) if action == "collect" else df.count()
-        spark.sparkContext.setJobDescription(None)
 
     if not headline:  # full run must cover the frozen suite exactly
         missing = sorted(set(HEADLINE_SUITE) - set(timings))

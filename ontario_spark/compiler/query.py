@@ -1154,9 +1154,9 @@ class SparqlEngine:
         the full query goes out instead (same fallback posture as the
         reference's non-selective path)."""
         from ontario_spark.sources.pushdown import (
-            WINDOW_SIZE,
             fetch_all,
-            instantiate_query,
+            observed_keys,
+            values_batches,
         )
         from ontario_spark.sources.sparql_endpoint import paged_bindings
         from ontario_spark.sources.translate import _sparql_term
@@ -1214,27 +1214,14 @@ class SparqlEngine:
                 break
         if shared:
             v = shared[0]
-            build = skey  # the frame the keys collect from
-            # NULLs filtered BEFORE the limit so they can't mask the
-            # max_keys+1 overflow sentinel (round-5 review fix)
-            mdf = build.materialize(v).df
-            keys = [
-                r[0]
-                for r in mdf.select(v)
-                .filter(mdf[v].isNotNull())
-                .distinct()
-                .limit(max_keys + 1)
-                .collect()
-            ]
-            if len(keys) <= max_keys:
-                # each key classified IRI-vs-literal individually and
-                # escaped inside instantiate_query — mixed/typed key
-                # sets are fine (VALUES terms may differ in kind)
-                keys.sort(key=str)
-                queries = [
-                    instantiate_query(text, v, keys[i : i + WINDOW_SIZE])
-                    for i in range(0, len(keys), WINDOW_SIZE)
-                ] or [text]
+            keys = observed_keys(skey.materialize(v).df, v, max_keys)
+            if keys is not None:
+                # each key classified IRI-vs-literal individually —
+                # mixed/typed key sets are fine (VALUES terms may differ
+                # in kind). No keys, no fetch: the group's inner join
+                # with an empty key source is empty whatever the
+                # endpoint returns.
+                queries = values_batches(text, v, keys)
         try:
             rows = fetch_all(executor, queries)
         except Exception:
@@ -1613,6 +1600,7 @@ class SparqlEngine:
         failure mode the deferred-UNDEF-VALUES ordering guards
         against)."""
         from ontario_spark.compiler.frame import key_cols
+        from ontario_spark.sources.pushdown import observed_keys
         from ontario_spark.sources.translate import RemoteCond, tpl_shape
 
         out: dict[str, list[RemoteCond]] = {}
@@ -1626,16 +1614,9 @@ class SparqlEngine:
                 col, tpl = v, None
             else:
                 continue
-            rows = (
-                bf.df.select(col)
-                .filter(bf.df[col].isNotNull())
-                .distinct()
-                .limit(max_keys + 1)
-                .collect()
-            )
-            keys = [r[0] for r in rows]
-            if 0 < len(keys) <= max_keys:
-                out[v] = [RemoteCond("in", tuple(sorted(keys, key=str)), tpl)]
+            keys = observed_keys(bf.df, col, max_keys)
+            if keys:
+                out[v] = [RemoteCond("in", tuple(keys), tpl)]
         return out
 
     def _join_greedy(self, frames: list[BFrame]) -> BFrame:

@@ -995,17 +995,6 @@ def source_ngram_overlap(
     )
 
 
-def _shingle_set_sizes(
-    df: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """Moved to ``textops.shingle_set_sizes`` (round 13, next to
-    ``exploded_shingles`` whose equivalence argument it shares); this
-    thin wrapper keeps the historical call sites in this module."""
-    from ontario_spark.operators.textops import shingle_set_sizes
-
-    return shingle_set_sizes(df, id_col, text_col, n)
-
-
 def contamination_overlap(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -1024,8 +1013,8 @@ def contamination_overlap(
     corpus is TBs, so the benchmark's distinct shingle-hash set is
     broadcast — the corpus NEVER crosses an exchange at shingle
     granularity. The per-doc denominator (distinct-shingle count) is a
-    map-side array expression (``_shingle_set_sizes``), which frees the
-    exploded stream to feed ONLY the hit side: a broadcast left-SEMI
+    map-side array expression (``textops.shingle_set_sizes``), which
+    frees the exploded stream to feed ONLY the hit side: a broadcast left-SEMI
     join drops every non-matching shingle executor-side, so the only
     shuffles are a dedup + tiny aggregate over the HIT rows (usually a
     sliver of the corpus) and the one-row-per-doc totals join.
@@ -1037,14 +1026,14 @@ def contamination_overlap(
     hit dedup keys on the shingle TEXT, so hash collisions cannot merge
     distinct shingles any differently than the exploded form did.
     """
-    from ontario_spark.operators.textops import exploded_shingles
+    from ontario_spark.operators.textops import exploded_shingles, shingle_set_sizes
 
     bench_set = F.broadcast(
         exploded_shingles(benchmark, id_col, text_col, n)
         .select(F.xxhash64("shingle").alias("k"))
         .dropDuplicates(["k"])
     )
-    totals = _shingle_set_sizes(corpus, id_col, text_col, n)
+    totals = shingle_set_sizes(corpus, id_col, text_col, n)
     hits = (
         exploded_shingles(corpus, id_col, text_col, n, distinct=False)
         .withColumn("k", F.xxhash64("shingle"))
@@ -1661,7 +1650,7 @@ def bloom_contamination_overlap(
     that broadcasts with the plan. Membership tests are pure column
     expressions (xxhash64 + shift/AND) inside codegen — no UDFs, no
     driver-side set."""
-    from ontario_spark.operators.textops import exploded_shingles
+    from ontario_spark.operators.textops import exploded_shingles, shingle_set_sizes
 
     if m_bits & (m_bits - 1):
         raise ValueError("m_bits must be a power of two")
@@ -1685,7 +1674,7 @@ def bloom_contamination_overlap(
     # bench_k feeds the bit-array build AND the confirm join — persist
     # or the benchmark shingle explode runs twice. The CORPUS stream is
     # deliberately NOT persisted (round 12): the per-doc totals are a
-    # map-side array expression (``_shingle_set_sizes``), so the
+    # map-side array expression (``textops.shingle_set_sizes``), so the
     # exploded stream has exactly one consumer (the candidate probe) —
     # at 100 TB materializing the full corpus shingle stream was the
     # operator's dominant memory/spill cost, paid only to count rows.
@@ -1704,7 +1693,7 @@ def bloom_contamination_overlap(
         F.map_from_entries(F.collect_list(F.struct("word", "bits"))).alias("__bloom")
     )
 
-    totals = _shingle_set_sizes(corpus, id_col, text_col, n)
+    totals = shingle_set_sizes(corpus, id_col, text_col, n)
 
     tests = []
     for i in range(k_hashes):

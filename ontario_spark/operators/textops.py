@@ -155,7 +155,7 @@ def exploded_shingles(
     (text_novelty's plan paid that wide exchange twice), is gone.
     Tokens are whitespace-split, so the space-joined shingle string is
     injective on the token tuple: struct-tuple distinctness == shingle
-    -text distinctness — the same equivalence ``_shingle_set_sizes``
+    -text distinctness — the same equivalence ``shingle_set_sizes``
     and ``repetition_stats`` already rely on, and exactly the oracle's
     per-row ``list_distinct``. (A multi-MB document makes the per-row
     distinct quadratic in the worst case, but such a document made the
@@ -189,9 +189,8 @@ def shingle_set_sizes(
     ``n`` tokens emit no row, matching the exploded form. Same
     one-row-per-id precondition as ``exploded_shingles``.
 
-    (Round 13: promoted here from ``dedup._shingle_set_sizes`` — it
-    belongs beside ``exploded_shingles``, whose consumers in dedup.py
-    and pipeline_suite.py both import it.)"""
+    It lives beside ``exploded_shingles``, whose consumers in dedup.py
+    and pipeline_suite.py both import it."""
     base = spread(df).select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     ).filter(F.size("__toks") >= n)

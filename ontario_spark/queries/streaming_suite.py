@@ -265,9 +265,8 @@ def stream_budget_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-buffered per-user running-budget cut (keep events in
     event-time order while cumulative value stays within budget) — the
     streaming form of the batch token-budget mix, folding exact
-    integer cents (streaming/events.py::user_budget_cut; the
-    transformWithState variant is environment-gated, see
-    ``tws_available``)."""
+    integer cents (streaming/events.py::user_budget_cut, on
+    ``applyInPandasWithState``)."""
     stream = read_event_stream(spark, sf_dir).filter(
         F.col("user_id").isNotNull()
     )

@@ -82,7 +82,9 @@ def fetch_all(executor: RemoteExecutor, queries: list[str]) -> list[dict]:
     round-trips, so a thread pool — not the driver serially blocking on
     up to max_keys/WINDOW_SIZE sequential calls) and concatenate
     bindings in deterministic batch order. Any batch failure
-    propagates, matching the serial semantics."""
+    propagates, matching the serial semantics. No queries, no calls."""
+    if not queries:
+        return []
     if len(queries) == 1:
         return list(executor(queries[0]))
     from concurrent.futures import ThreadPoolExecutor
@@ -90,6 +92,34 @@ def fetch_all(executor: RemoteExecutor, queries: list[str]) -> list[dict]:
     with ThreadPoolExecutor(max_workers=min(FETCH_THREADS, len(queries))) as pool:
         results = list(pool.map(executor, queries))
     return [b for batch in results for b in batch]
+
+
+def observed_keys(df: DataFrame, col: str, max_keys: int) -> list | None:
+    """The distinct non-NULL values of ``df[col]``, sorted by ``str``
+    (a stable batch order), or ``None`` when there are more than
+    ``max_keys`` of them. NULLs are filtered BEFORE the limit: filtering
+    after could let a NULL row mask the ``max_keys + 1`` overflow
+    sentinel and silently drop join keys past the cap."""
+    keys = [
+        r[0]
+        for r in df.select(col)
+        .filter(df[col].isNotNull())
+        .distinct()
+        .limit(max_keys + 1)
+        .collect()
+    ]
+    return None if len(keys) > max_keys else sorted(keys, key=str)
+
+
+def values_batches(
+    query: str, var: str, keys: list, window_size: int = WINDOW_SIZE
+) -> list[str]:
+    """``query`` instantiated once per ``window_size`` window of
+    ``keys`` (no queries for no keys)."""
+    return [
+        instantiate_query(query, var, keys[i : i + window_size])
+        for i in range(0, len(keys), window_size)
+    ]
 
 
 def bound_join_fetch(
@@ -109,35 +139,18 @@ def bound_join_fetch(
     ``max_keys`` guards the driver: beyond it, fall back to the
     unfiltered remote query (same fallback posture as the reference's
     non-selective path)."""
-    # NULLs are filtered BEFORE the limit: filtering after could let a
-    # NULL row mask the max_keys+1 overflow sentinel and silently drop
-    # join keys past the cap (round-5 review fix)
-    keys = [
-        r[0]
-        for r in build.select(join_var)
-        .filter(build[join_var].isNotNull())
-        .distinct()
-        .limit(max_keys + 1)
-        .collect()
-    ]
-    if not keys:
-        # empty (or all-NULL) build side: the inner join is empty — an
-        # unbatched fetch would pull the whole remote relation for
-        # nothing, and zero batches crashed the thread pool
-        rows: list[tuple] = []
+    keys = observed_keys(build, join_var, max_keys)
+    if keys is None:
+        queries = [remote_query]
     else:
-        if len(keys) > max_keys:
-            queries = [remote_query]
-        else:
-            keys.sort(key=str)
-            queries = [
-                instantiate_query(remote_query, join_var, keys[i : i + window_size])
-                for i in range(0, len(keys), window_size)
-            ]
-        rows = [
-            tuple(b.get(v) for v in remote_vars)
-            for b in fetch_all(executor, queries)
-        ]
+        # empty (or all-NULL) build side: no batches — the inner join is
+        # empty, and an unbatched fetch would pull the whole remote
+        # relation for nothing
+        queries = values_batches(remote_query, join_var, keys, window_size)
+    rows = [
+        tuple(b.get(v) for v in remote_vars)
+        for b in fetch_all(executor, queries)
+    ]
     schema = ", ".join(f"{v} string" for v in remote_vars)
     return local_frame(spark, rows, schema)
 

@@ -823,116 +823,3 @@ def user_budget_cut(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def tws_available() -> bool:
-    """``transformWithStateInPandas``'s Python workers require the
-    ``google.protobuf`` package (its state-server protocol is proto-
-    encoded); this container doesn't ship it, so the TWS variant is
-    environment-gated exactly like the Mongo/Neo4j live connectors —
-    the semantics stay covered by the ``applyInPandasWithState``
-    implementation above, which this build runs end-to-end."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def user_budget_cut_tws(
-    stream: DataFrame, budget_cents: int = 150_000, watermark: str = "24 hours"
-) -> DataFrame:
-    """``user_budget_cut`` on Spark 4's ``transformWithStateInPandas``
-    — the typed-state successor to ``applyInPandasWithState`` (named
-    ValueState/ListState handles instead of one packed tuple; requires
-    the RocksDB state store provider and the protobuf package, see
-    ``tws_available``). Identical semantics and output schema to
-    ``user_budget_cut``; a gated test asserts result equality when the
-    environment supports both."""
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the google.protobuf package "
-            "(absent in this environment); use user_budget_cut, which "
-            "runs the same semantics on applyInPandasWithState"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    budget = int(budget_cents)
-
-    class BudgetCut(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.agg = handle.getValueState(
-                "agg",
-                "n_seen bigint, n_kept bigint, kept_cents bigint, "
-                "budget_hit boolean",
-            )
-            self.pending = handle.getListState(
-                "pending", "ts_us bigint, cents bigint"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            from bisect import bisect_right
-
-            n_seen, n_kept, kept, hit = (
-                tuple(self.agg.get())
-                if self.agg.exists()
-                else (0, 0, 0, False)
-            )
-            buf = (
-                [(r[0], r[1]) for r in self.pending.get()]
-                if self.pending.exists()
-                else []
-            )
-            for pdf in rows:
-                if not len(pdf):
-                    continue
-                n_seen += len(pdf)
-                ts_us = (
-                    pd.to_datetime(pdf["ts"])
-                    .astype("datetime64[ns]")
-                    .astype("int64")
-                    // 1000
-                )
-                buf.extend(zip(ts_us.tolist(), pdf["cents"].tolist()))
-            buf.sort()
-            wm_us = timer_values.getCurrentWatermarkInMs() * 1000
-            cut = bisect_right(buf, (wm_us, float("inf")))
-            n_kept, kept, hit = _fold_budget(
-                n_kept, kept, hit, buf[:cut], budget
-            )
-            buf = buf[cut:]
-            self.agg.update((n_seen, n_kept, kept, hit))
-            self.pending.clear()
-            if buf:
-                self.pending.put(buf)
-            pn, pk, ph = _fold_budget(n_kept, kept, hit, buf, budget)
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": key[0],
-                        "n_seen": n_seen,
-                        "n_kept": pn,
-                        "kept_cents": pk,
-                        "budget_hit": ph,
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        _budget_input(stream)
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            BudgetCut(),
-            outputStructType=BUDGET_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="EventTime",
-        )
-    )

@@ -245,6 +245,31 @@ def test_service_bound_join_pushdown(spark, sf_small):
     assert shipped == set(reg)
 
 
+def test_service_skips_fetch_when_build_side_is_empty(spark, sf_small):
+    """A local FILTER that rejects every build row leaves no observed
+    keys: the SERVICE result would be inner-joined to nothing, so the
+    endpoint must not be asked for its whole pattern."""
+    cat = tpch_catalog(sf_small)
+    calls = []
+
+    def endpoint(query: str):
+        calls.append(query)
+        return [{"r": f"{EX}region/0", "rname": "AFRICA"}]
+
+    eng = SparqlEngine(
+        spark, cat, service_executors={"http://remote.example/sparql": endpoint}
+    )
+    df = eng.query(
+        PFX
+        + """SELECT ?nname ?rname WHERE {
+              ?n a ex:Nation ; ex:name ?nname ; ex:region ?r .
+              FILTER (?nname = "NO SUCH NATION")
+              SERVICE <http://remote.example/sparql> { ?r ex:name ?rname } }"""
+    )
+    assert df.collect() == []
+    assert calls == []
+
+
 def test_values_term_per_key_classification():
     """Each VALUES key is rendered by its own kind — mixed IRI/literal/
     numeric sets and quote-bearing literals all survive (the reference

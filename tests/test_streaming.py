@@ -458,42 +458,6 @@ def test_budget_cut_state_spans_batches(spark, tmp_path):
     assert final["budget_hit"] is True
 
 
-def test_budget_cut_tws_variant_matches_when_available(spark, sf_small):
-    """The transformWithStateInPandas implementation must agree with
-    the applyInPandasWithState one row-for-row. Its Python workers
-    need google.protobuf (absent in this container), so the test
-    SKIPS here and runs wherever the dependency exists — same gating
-    pattern as the Mongo/Neo4j live connectors."""
-    import pytest
-
-    from ontario_spark.streaming.events import (
-        read_event_stream,
-        run_available_now,
-        tws_available,
-        user_budget_cut,
-        user_budget_cut_tws,
-    )
-
-    if not tws_available():
-        with pytest.raises(NotImplementedError):
-            user_budget_cut_tws(read_event_stream(spark, sf_small))
-        pytest.skip("google.protobuf not installed; TWS workers need it")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    a = run_available_now(
-        user_budget_cut(read_event_stream(spark, sf_small)),
-        "budget_a_sink", output_mode="update",
-    )
-    b = run_available_now(
-        user_budget_cut_tws(read_event_stream(spark, sf_small)),
-        "budget_b_sink", output_mode="update",
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_chained_daily_rollup_holds_back_open_day(spark, sf_small):
     """The chained hourly→daily query must emit exactly the days whose
     window END the propagated watermark (max ts − 2h) has passed —

@@ -173,24 +173,14 @@ def main() -> None:
     else:
         names = arg.split(",") if arg else PROBE_QUERIES
 
-    from pyspark.sql import functions as F
-
-    from ontario_spark.data import TABLES, table
+    from bench import warm_up
     from ontario_spark.queries import all_queries
     from ontario_spark.session import get_spark
 
     def fresh_session():
         s = get_spark("ontario-scale-probe")
         s.sparkContext.setLogLevel("ERROR")
-        # same warmups as bench.py: JVM/codegen/Arrow pool + footers
-        for scale in scales:
-            for t in TABLES:
-                try:
-                    table(s, f"{BASE}/{scale}", t).limit(1).collect()
-                except Exception:
-                    pass
-        s.range(10_000).agg(F.sum(F.col("id").cast("decimal(18,6)"))).collect()
-        s.range(1_000).repartition(32).mapInPandas(lambda it: it, "id long").count()
+        warm_up(s, [f"{BASE}/{scale}" for scale in scales])
         return s
 
     def context_dead(s) -> bool:

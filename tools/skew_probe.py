@@ -34,7 +34,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -43,6 +42,7 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from pyspark.sql import functions as F
 
+    from bench import timed
     from ontario_spark.operators.dedup import (
         anchor_containment_pairs,
         simhash_hamming_pairs,
@@ -53,15 +53,9 @@ def main() -> None:
     spark = get_spark("skew-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def timed(tag: str, df) -> dict:
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"skew:{tag}")
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        n = df.count()
-        spark.sparkContext.setJobDescription(None)
-        return {"sec": round(dt, 3), "rows": n}
+    def measure(tag: str, df) -> dict:
+        sec, _, _ = timed(spark, f"skew:{tag}", lambda: df)
+        return {"sec": round(sec, 3), "rows": df.count()}
 
     def hot_shingle_docs(n_docs: int):
         # even ids carry the SAME leading trigram ("h0 h1 h2"), so that
@@ -149,8 +143,8 @@ def main() -> None:
     ]:
         rec: dict = {"hot_rows_small": small // 2, "hot_rows_big": big // 2}
         try:
-            rec["small"] = timed(f"{tag}@1x", run(small))
-            rec["big"] = timed(f"{tag}@10x", run(big))
+            rec["small"] = measure(f"{tag}@1x", run(small))
+            rec["big"] = measure(f"{tag}@10x", run(big))
             rec["ratio"] = round(
                 rec["big"]["sec"] / max(rec["small"]["sec"], 1e-9), 2
             )
