@@ -18,7 +18,9 @@ naive). Every delta is truncated (``pin(..., truncate=True)``, a
 analysis time explodes after ~15 iterations. The eager loops here run
 inside a ``pinned()`` scope, which releases their persisted
 loop-invariant frames when the operator returns or raises (ownership
-rules: ``ontario_spark/persist.py``). Diameter of real hierarchies (org
+rules: ``ontario_spark/persist.py``). The fixed-round rank loops
+(``pagerank``, ``personalized_pagerank``) pin nothing: each is one lazy
+plan. Diameter of real hierarchies (org
 charts, geo containment, categories) is small — ``max_iter`` is a cycle
 guard, not an expected bound.
 """
@@ -237,109 +239,100 @@ def pagerank(
     orders of separation make a rank-grid half-tie require a binary
     coincidence (~1e-9 per value) instead of a certainty.
 
-    Scale shape: ranks live keyed by node; one iteration = edges⋈ranks
-    (shuffle on src) + groupBy dst — the same two-shuffle round as
-    every distributed PageRank; lineage truncated per round like the
-    closure/CC loops. ``iters`` is fixed (not convergence-
-    probed) so the oracle can unroll the exact same number of steps."""
-    cdec = f"decimal(28,{round_to + 4})"
+    Scale shape: ranks live keyed by node; one round is one
+    aggregate (see ``_rank_rounds``). The result is ONE lazy plan with
+    no Spark job fired while it is built: each round reads the previous
+    ranks once, so the plan grows linearly in ``iters``, and the
+    loop-invariant edge, node and degree frames are plain frames whose
+    identical exchanges Spark reuses across rounds. The node count is
+    a scalar subquery. ``iters`` is fixed (not convergence-probed) so
+    the oracle can unroll the exact same number of steps."""
     dec = f"decimal(28,{round_to})"
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+        F.col("a").isNotNull() & F.col("b").isNotNull()
+    )
+    nodes = (
+        e.select(F.col("a").alias("node"))
+        .union(e.select(F.col("b").alias("node")))
+        .distinct()
+    )
+    n = nodes.agg(F.count(F.lit(1))).scalar().cast("double")
+    ranks = nodes.select(
+        "node", F.round(F.lit(1.0) / n, round_to).cast(dec).alias("r")
+    )
+    base = nodes.select("node", (F.lit(_teleport(damping)) / n).alias("__tele"))
+    return _rank_rounds(e, base, ranks, iters, damping, round_to)
+
+
+def _teleport(damping: float) -> float:
     # 1.0 - 0.85 is the double 0.15000000000000002 — one ulp above the
     # 0.15 literal an unrolled SQL oracle writes; re-round so both
     # engines feed the identical teleport constant into the rank grid
     # (round-6 review fix)
-    teleport = round(1.0 - damping, 12)
-    spark = edges.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Round 13 (VERDICT items 4+7): the edge set is pinned PRE-
-    # PARTITIONED on the contribution join key (``truncate=False`` —
-    # persist preserves the cached plan's hashpartitioning where
-    # localCheckpoint reports UnknownPartitioning) — so every
-    # iteration's e⋈ranks and the one-off deg aggregate reuse the
-    # edge-side exchange instead of re-shuffling the EDGE set (the
-    # operator's dominant bytes) once per round. ``nodes`` keeps its
-    # distinct's hashpartitioning(node, width) the same way, so the
-    # per-round assembly join is exchange-free on the nodes side too.
-    # This also retires the round-12 ``_loop_shuffle_width``
-    # session-conf mutation for this loop (its sub-width sizing
-    # measured NEUTRAL here at sf0.1 — the pinned rank frames are one
-    # row per node; a concurrent planner could read the mutated conf).
-    with pinned():
-        e = pin(
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-            .repartition(width, "a"),
-            truncate=False,
+    return round(1.0 - damping, 12)
+
+
+def _rank_rounds(
+    e: DataFrame,
+    base: DataFrame,
+    ranks: DataFrame,
+    iters: int,
+    damping: float,
+    round_to: int,
+) -> DataFrame:
+    """``iters`` damped rank rounds over the edge set ``e(a, b)`` from
+    the start ``ranks(node, r)`` → ``(node, rank)``. ``base`` holds
+    every node once with its teleport share ``__tele``.
+
+    A round is ONE aggregate: each edge's contribution r(a)/deg(a)
+    (rounded to ``round_to + 4``, summed as DECIMAL) plus one zero row
+    per node from ``base``, grouped by node. That is the oracle's
+    ``nodes LEFT JOIN contributions`` without the join: a node with no
+    in-edge sums to the same 0 as the join miss's coalesce(NULL, 0),
+    and the decimal sum is exact in any order.
+
+    Sparse frontier (round 12): zero-rank sources are dropped before
+    the edge join. A zero rank contributes round(0/deg) = 0 to the
+    inflow sum, so this is bit-exact, while a personalized rank whose
+    mass starts on a few seeds joins only its reachable frontier for
+    the first hops — the "accounts near these flagged ones" shape at
+    scale (measured flat at sf0.1, whose graph saturates within ~2
+    hops). The round's Columns are built once, before the loop."""
+    cdec = f"decimal(28,{round_to + 4})"
+    dec = f"decimal(28,{round_to})"
+    deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+    base = base.select("node", F.lit(0).cast(cdec).alias("c"), "__tele")
+    live = F.col("r") != 0
+    src_rank = [F.col("node").alias("a"), "r"]
+    contrib = [
+        F.col("b").alias("node"),
+        F.round(
+            F.col("r").cast("double") / F.col("deg").cast("double"),
+            round_to + 4,
         )
-        nodes = pin(
-            e.select(F.col("a").alias("node"))
-            .union(e.select(F.col("b").alias("node")))
-            .distinct(),
-            truncate=False,
+        .cast(cdec)
+        .alias("c"),
+        F.lit(0.0).alias("__tele"),
+    ]
+    sums = [F.sum("c").alias("inflow"), F.max("__tele").alias("__tele")]
+    rank = (
+        F.round(
+            F.col("__tele") + F.lit(damping) * F.col("inflow").cast("double"),
+            round_to,
         )
-        # deg is consumed once per iteration — persist (lazily) so the
-        # aggregate over the pinned edge set runs once, not ``iters``
-        # times.
-        deg = pin(
-            e.groupBy("a").agg(F.count(F.lit(1)).alias("deg")),
-            truncate=False,
-            eager=False,
+        .cast(dec)
+        .alias("r")
+    )
+    for _ in range(iters):
+        ranks = (
+            e.join(ranks.filter(live).select(*src_rank), "a")
+            .join(deg, "a")
+            .select(*contrib)
+            .unionByName(base)
+            .groupBy("node")
+            .agg(*sums)
+            .select("node", rank)
         )
-        n_row = F.broadcast(nodes.agg(F.count(F.lit(1)).alias("__n")))
-        ranks = nodes.crossJoin(n_row).select(
-            "node",
-            F.round(F.lit(1.0) / F.col("__n").cast("double"), round_to)
-            .cast(dec)
-            .alias("r"),
-        )
-        # Round 12: a fully lazy 5-iteration chain was ALSO tried here
-        # (no per-round checkpoint, one job) and measured ~5% SLOWER at
-        # sf0.1 — the rank frames being pinned are small (one row per
-        # node), so the per-round action costs little, while the 5-deep
-        # adaptive plan re-optimizes more; eager pins stay. (Contrast
-        # kcore/label-prop, whose per-round pins materialized the full
-        # EDGE set — converting those to lazy persists measured −50%+.)
-        for _ in range(iters):
-            contrib = (
-                e.join(ranks.withColumnRenamed("node", "a"), "a")
-                .join(deg, "a")
-                .select(
-                    F.col("b").alias("node"),
-                    F.round(
-                        F.col("r").cast("double")
-                        / F.col("deg").cast("double"),
-                        round_to + 4,
-                    )
-                    .cast(cdec)
-                    .alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("inflow"))
-            )
-            # new ranks are TRUNCATED: a persist pin would nest every
-            # prior round's plan inside this one (linear logical growth,
-            # exponential AQE explain text), while the win it would buy
-            # — skipping the rank-side exchange — is bounded by the rank
-            # frame's size (one row per node). The frames worth keeping
-            # partitioned are the loop-invariant ones above.
-            ranks = pin(
-                nodes.join(contrib, "node", "left")
-                .crossJoin(n_row)
-                .select(
-                    "node",
-                    F.round(
-                        F.lit(teleport) / F.col("__n").cast("double")
-                        + F.lit(damping)
-                        * F.coalesce(
-                            F.col("inflow"), F.lit(0).cast(cdec)
-                        ).cast("double"),
-                        round_to,
-                    )
-                    .cast(dec)
-                    .alias("r"),
-                ),
-                truncate=True,
-            )
     return ranks.select("node", F.col("r").cast("double").alias("rank"))
 
 
@@ -508,9 +501,10 @@ def bfs_depths(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
     width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # Edge set persisted pre-partitioned on the expansion join key (as
-    # in ``pagerank``): each level's frontier⋈e reuses this one
-    # exchange instead of re-shuffling the EDGE set per level.
+    # Edge set persisted pre-partitioned on the expansion join key
+    # (``truncate=False`` keeps its hashpartitioning): each level's
+    # frontier⋈e reuses this one exchange instead of re-shuffling the
+    # EDGE set per level.
     with pinned():
         e = pin(
             e.dropDuplicates(["src", "dst"]).repartition(width, "src"),
@@ -651,117 +645,36 @@ def personalized_pagerank(
     ranks re-rounded to ``round_to``; separated grids), and the seed
     teleport is ONE double division ``(1-d)/|S|`` written identically
     in the oracle, so the unrolled DuckDB SQL hash-matches. Same
-    two-shuffle iteration and lineage pinning; the per-node seed flag
-    is computed once and pinned, not re-derived per round."""
-    cdec = f"decimal(28,{round_to + 4})"
+    one-aggregate rounds and one lazy plan as ``pagerank``; the
+    per-node seed flag comes from one left join against the seed set
+    and ``|S|`` is a scalar subquery."""
     dec = f"decimal(28,{round_to})"
-    teleport = round(1.0 - damping, 12)
-    spark = edges.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Edge set persisted pre-partitioned on the contribution join key,
-    # as in ``pagerank`` (see the note there): the per-round e⋈ranks
-    # and the deg aggregate reuse this one exchange.
-    with pinned():
-        e = pin(
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-            .repartition(width, "a"),
-            truncate=False,
-        )
-        s = seeds.select(F.col(node_col).alias("node")).dropDuplicates(["node"])
-        nodes = pin(
-            e.select(F.col("a").alias("node"))
-            .union(e.select(F.col("b").alias("node")))
-            .union(s.select("node"))
-            .distinct(),
-            truncate=True,
-        )
-        ns_row = F.broadcast(s.agg(F.count(F.lit(1)).alias("__ns")))
-        flagged = pin(
-            nodes.join(
-                s.select("node", F.lit(1).alias("__sflag")), "node", "left"
-            )
-            .crossJoin(ns_row)
-            .select(
-                "node",
-                F.col("__sflag").isNotNull().alias("__seed"),
-                F.col("__ns"),
-            ),
-            truncate=False,
-        )
-        # deg persists lazily (one aggregate, ``iters`` consumers);
-        # eager per-round pins retained — see the measurement note in
-        # ``pagerank`` above.
-        deg = pin(
-            e.groupBy("a").agg(F.count(F.lit(1)).alias("deg")),
-            truncate=False,
-            eager=False,
-        )
-        seed_unit = F.when(
-            F.col("__seed"), F.lit(1.0) / F.col("__ns").cast("double")
-        ).otherwise(F.lit(0.0))
-        seed_tele = F.when(
-            F.col("__seed"), F.lit(teleport) / F.col("__ns").cast("double")
-        ).otherwise(F.lit(0.0))
-        ranks = flagged.select(
-            "node", F.round(seed_unit, round_to).cast(dec).alias("r")
-        )
-        for _ in range(iters):
-            # Sparse-frontier contribution join (round 12): PPR mass
-            # starts on the seeds only, so most nodes carry rank 0 for
-            # the first hops — a zero-rank source contributes
-            # round(0/deg) = 0 to the DECIMAL inflow sum, and a node
-            # whose only in-edges come from zero-rank sources gets
-            # sum = 0.0000, identical to the left-join miss's
-            # coalesce(NULL, 0). Filtering r != 0 before the edge join
-            # is therefore bit-exact (no float re-ordering — the sum
-            # grid is decimal) while pruning the join to the reachable
-            # frontier: the standard sparse PPR evaluation. At sf0.1
-            # the fixture graph saturates within ~2 hops so the bench
-            # number is NEUTRAL (measured flat); the win case is seeds
-            # ≪ nodes with bounded expansion — the 100 TB "accounts
-            # near these flagged ones" shape this operator exists for.
-            # Cost when dense: one extra predicate on a cached scan.
-            contrib = (
-                e.join(
-                    ranks.filter(F.col("r") != 0).withColumnRenamed(
-                        "node", "a"
-                    ),
-                    "a",
-                )
-                .join(deg, "a")
-                .select(
-                    F.col("b").alias("node"),
-                    F.round(
-                        F.col("r").cast("double")
-                        / F.col("deg").cast("double"),
-                        round_to + 4,
-                    )
-                    .cast(cdec)
-                    .alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("inflow"))
-            )
-            # truncated — same growth argument as ``pagerank``.
-            ranks = pin(
-                flagged.join(contrib, "node", "left")
-                .select(
-                    "node",
-                    F.round(
-                        seed_tele
-                        + F.lit(damping)
-                        * F.coalesce(
-                            F.col("inflow"), F.lit(0).cast(cdec)
-                        ).cast("double"),
-                        round_to,
-                    )
-                    .cast(dec)
-                    .alias("r"),
-                ),
-                truncate=True,
-            )
-    return ranks.select("node", F.col("r").cast("double").alias("rank"))
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+        F.col("a").isNotNull() & F.col("b").isNotNull()
+    )
+    s = seeds.select(F.col(node_col).alias("node")).dropDuplicates(["node"])
+    ns = s.agg(F.count(F.lit(1))).scalar().cast("double")
+    flagged = (
+        e.select(F.col("a").alias("node"))
+        .union(e.select(F.col("b").alias("node")))
+        .union(s)
+        .distinct()
+        .join(s.select("node", F.lit(True).alias("__seed")), "node", "left")
+    )
+    seed = F.col("__seed").isNotNull()
+    ranks = flagged.select(
+        "node",
+        F.round(F.when(seed, F.lit(1.0) / ns).otherwise(F.lit(0.0)), round_to)
+        .cast(dec)
+        .alias("r"),
+    )
+    base = flagged.select(
+        "node",
+        F.when(seed, F.lit(_teleport(damping)) / ns)
+        .otherwise(F.lit(0.0))
+        .alias("__tele"),
+    )
+    return _rank_rounds(e, base, ranks, iters, damping, round_to)
 
 
 def label_propagation(

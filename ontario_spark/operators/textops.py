@@ -948,12 +948,6 @@ def quality_gates(
     )
 
 
-#: Unit separator: joins BPE symbol sequences into one string column.
-#: Never appears in whitespace-tokenized text, and both engines fold
-#: over the same delimited representation byte-for-byte.
-_BPE_SEP = "\x1f"
-
-
 def bpe_train_merges(
     df: DataFrame, text_col: str, rounds: int = 8
 ) -> DataFrame:
@@ -965,128 +959,170 @@ def bpe_train_merges(
     symbol sequence, and recounts. Returns the merge table
     ``(merge_rank, left_sym, right_sym, merged, pair_count)`` —
     exactly what a BPE tokenizer persists as its vocab-build artifact.
-    ``bpe_merge_candidates`` above is the single-round top-k profile;
-    this is the real training loop.
+    ``bpe_merge_candidates`` below is the single-round top-k profile;
+    this is the real training loop. When no word has two symbols left,
+    training stops early: the table has fewer than ``rounds`` rows.
 
     Scale shape: like that single round, the corpus collapses FIRST to
     the distinct-word frequency table (vocabulary is sublinear in
-    corpus size — the classic BPE-training trick), so every round is
-    one hash aggregate over unique words plus a broadcast of the ONE
-    argmax row; the merge application is a map-only fold. ``rounds``
-    is fixed (not convergence-probed) and lineage is pinned per round
-    (the pagerank/label-propagation discipline), so a DuckDB oracle
-    can unroll the identical rounds (``bpe_train_sql``) and
-    hash-match the merge table.
+    corpus size — the classic BPE-training trick). Training is then
+    ONE task over that table, held as one row, so the table must fit
+    in one row; every round is a map over that row, with no shuffle
+    and no Spark job per round. ``rounds`` is fixed (not
+    convergence-probed), so a DuckDB oracle can unroll the identical
+    rounds (``bpe_train_sql``) and hash-match the merge table.
 
-    The greedy merge is a string fold over the SEP-delimited symbol
-    sequence: acc starts as the first symbol; each next symbol either
-    fuses with a trailing ``left`` (when it equals ``right``) or
-    appends. A fused symbol is ``left||right`` ≠ ``left``, so it can
-    never re-fuse in the same round — exactly textbook left-to-right
-    non-overlapping semantics, pinned by a hand-computed pytest."""
-    best_rows, _ = _bpe_train_core(df, text_col, rounds, apply_last=False)
-    out = best_rows[0]
-    for b in best_rows[1:]:
-        out = out.unionByName(b)
-    return out.select(
+    The greedy merge is a fold over the word's symbol array: acc
+    starts as the first symbol; each next symbol either fuses with a
+    trailing ``left`` (when it equals ``right``) or appends. A fused
+    symbol is ``left||right`` ≠ ``left``, so it can never re-fuse in
+    the same round — exactly textbook left-to-right non-overlapping
+    semantics, pinned by a hand-computed pytest."""
+    merges = _bpe_train_core(df, text_col, rounds).select(F.inline("m"))
+    return merges.select(
         "merge_rank",
         "left_sym",
         "right_sym",
         F.concat("left_sym", "right_sym").alias("merged"),
-        F.col("cnt").cast("long").alias("pair_count"),
+        F.col("cnt").alias("pair_count"),
     )
 
 
-def _bpe_fold(seq_col: Column, l: Column, r: Column) -> Column:
+def _bpe_fold(syms: Column, l: Column, r: Column) -> Column:
     """One greedy left-to-right non-overlapping merge application over
-    a SEP-delimited symbol sequence (the fold both engines share)."""
-    sep = F.lit(_BPE_SEP)
+    a symbol array (``_bpe_sql_ctes`` replays it over chr(31)-joined
+    strings)."""
 
     def step(acc, s):
-        hit = ((acc == l) | acc.endswith(F.concat(sep, l))) & (s == r)
         return F.when(
-            hit,
-            F.concat(F.substring(acc, 1, F.length(acc) - F.length(l)), l, r),
-        ).otherwise(F.concat(acc, sep, s))
+            (F.element_at(acc, -1) == l) & (s == r),
+            F.concat(
+                F.slice(acc, 1, F.size(acc) - 1), F.array(F.concat(l, r))
+            ),
+        ).otherwise(F.concat(acc, F.array(s)))
 
-    syms = F.split(seq_col, _BPE_SEP)
+    return F.aggregate(_tail(syms), F.slice(syms, 1, 1), step)
+
+
+def _tail(syms: Column) -> Column:
+    return F.slice(syms, 2, F.greatest(F.size(syms) - 1, F.lit(0)))
+
+
+_BPE_MERGES = (
+    "array<struct<merge_rank:int,left_sym:string,right_sym:string,cnt:bigint>>"
+)
+
+
+def _bpe_best_pair(v: Column) -> Column:
+    """The round's argmax pair over the vocab ``v`` as ``(l, r, cnt)``;
+    ``cnt`` is 0 when no word has two symbols. The pairs are sorted by
+    ``(l, r)`` and one scan sums each run of equal pairs, keeping a run
+    only when it beats the best so far, so ties go to the smallest
+    ``(l, r)``."""
+    pairs = F.array_sort(
+        F.flatten(
+            F.transform(
+                v,
+                lambda x: F.transform(
+                    _tail(x["s"]),
+                    lambda r, i: F.struct(
+                        F.element_at(x["s"], i + 1).alias("l"),
+                        r.alias("r"),
+                        x["f"].alias("f"),
+                    ),
+                ),
+            )
+        )
+    )
+
+    def run(l, r, cnt):
+        return F.struct(l.alias("l"), r.alias("r"), cnt.alias("cnt"))
+
+    def best(acc):
+        cur, top = acc["cur"], acc["top"]
+        return F.when(cur["cnt"] > top["cnt"], cur).otherwise(top)
+
+    def step(acc, p):
+        cur = acc["cur"]
+        same = (p["l"] == cur["l"]) & (p["r"] == cur["r"])
+        return F.when(
+            same,
+            F.struct(
+                run(cur["l"], cur["r"], cur["cnt"] + p["f"]).alias("cur"),
+                acc["top"].alias("top"),
+            ),
+        ).otherwise(
+            F.struct(
+                run(p["l"], p["r"], p["f"]).alias("cur"),
+                best(acc).alias("top"),
+            )
+        )
+
+    nil = F.lit(None).cast("string")
+    none = run(nil, nil, F.lit(0).cast("long"))
     return F.aggregate(
-        F.slice(syms, 2, F.greatest(F.size(syms) - 1, F.lit(0))),
-        F.element_at(syms, 1),
-        step,
+        pairs, F.struct(none.alias("cur"), none.alias("top")), step, best
     )
 
 
-def _bpe_train_core(
-    df: DataFrame, text_col: str, rounds: int, apply_last: bool
-):
-    """Shared BPE training loop: returns (per-round argmax frames,
-    final word→sequence vocab frame ``(w, seq, f)``). ``apply_last``
-    controls whether the last round's merge is folded into the vocab —
-    training only reports it; encoding must apply it."""
-    # Lazy pins throughout (round 12): every round's vocab is still a
-    # LogicalRDD (lineage truncated, so the two-consumer-per-round plan
-    # cannot double), but nothing materializes until the caller's ONE
-    # action — the old eager pins cost a driver-blocking job per round
-    # (9 sequential actions for 8 merge rounds; measured
-    # text_bpe_merges 1.9 s → ~1.2 s solo at sf0.1).
-    wf = pin(
+def _bpe_train_core(df: DataFrame, text_col: str, rounds: int) -> DataFrame:
+    """Shared BPE training loop over one row: ``v`` is the distinct-word
+    vocab ``array<struct<w, s: array<string>, f>>`` with every merge
+    applied, ``m`` the merge table ``array<struct<merge_rank,
+    left_sym, right_sym, cnt>>``. A round that finds no pair empties
+    ``v``, so every later round finds none either (the same rows the
+    unrolled oracle's cross join with an empty argmax gives)."""
+    state = (
         spread(df)
         .select(F.explode(tokens(F.col(text_col))).alias("w"))
         .select(F.lower(F.col("w")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("f"))
         .filter(F.length("w") >= 2)
-        .select(
-            "w",
-            F.array_join(F.split(F.col("w"), ""), _BPE_SEP).alias("seq"),
-            "f",
-        ),
-        truncate=True,
-        eager=False,
+        .agg(
+            F.collect_list(
+                F.struct("w", F.split(F.col("w"), "").alias("s"), "f")
+            ).alias("v")
+        )
+        .select("v", F.array().cast(_BPE_MERGES).alias("m"))
     )
-    best_rows = []
-    for rnd in range(1, rounds + 1):
-        syms = F.split(F.col("seq"), _BPE_SEP)
-        pair_structs = F.transform(
-            F.sequence(F.lit(1), F.size(syms) - 1),
-            lambda i: F.struct(
-                F.element_at(syms, i).alias("l"),
-                F.element_at(syms, i + 1).alias("r"),
+    # The round's Columns are built once: constructing them (py4j calls
+    # plus analysis) is most of what a round costs while it is built.
+    best = _bpe_best_pair(F.col("v")).alias("b")
+    b = F.col("b")
+    found = b["cnt"] > 0
+    v = F.transform(
+        F.filter("v", lambda _: found),
+        lambda x: F.struct(
+            x["w"].alias("w"),
+            _bpe_fold(x["s"], b["l"], b["r"]).alias("s"),
+            x["f"].alias("f"),
+        ),
+    ).alias("v")
+    m = F.when(
+        found,
+        F.concat(
+            "m",
+            F.array(
+                F.struct(
+                    (F.size("m") + 1).alias("merge_rank"),
+                    b["l"].alias("left_sym"),
+                    b["r"].alias("right_sym"),
+                    b["cnt"].alias("cnt"),
+                )
             ),
-        )
-        best = (
-            wf.filter(F.size(syms) >= 2)
-            .select(F.explode(pair_structs).alias("p"), "f")
-            .groupBy(F.col("p.l").alias("left_sym"), F.col("p.r").alias("right_sym"))
-            .agg(F.sum("f").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("left_sym"), F.asc("right_sym"))
-            .limit(1)
-            .select(
-                F.lit(rnd).alias("merge_rank"), "left_sym", "right_sym", "cnt"
-            )
-        )
-        best_rows.append(best)
-        if rnd == rounds and not apply_last:
-            break  # the last merge is reported but needn't be applied
-        # every pinned round stays alive until the caller executes the
-        # returned union (each b{n} reads its own wf{n-1}); the held
-        # frames are distinct-VOCAB tables — sublinear in corpus size —
-        # so ≤ rounds copies is a bounded cost, and releasing a
-        # localCheckpoint early would truncate lineage out from under
-        # the not-yet-collected argmax rows
-        wf = pin(
-            wf.crossJoin(F.broadcast(best)).select(
-                "w",
-                _bpe_fold(
-                    F.col("seq"), F.col("left_sym"), F.col("right_sym")
-                ).alias("seq"),
-                "f",
-            ),
+        ),
+    ).otherwise(F.col("m")).alias("m")
+    for _ in range(rounds):
+        # truncated per round, or the optimizer's project collapsing
+        # over the nested rounds exhausts the JVM heap; no round has
+        # an exchange, so the lazy checkpoint fires no job of its own
+        state = pin(
+            state.select("v", "m", best).select(v, m),
             truncate=True,
             eager=False,
         )
-    return best_rows, wf
+    return state
 
 
 def bpe_encode_stats(
@@ -1101,9 +1137,9 @@ def bpe_encode_stats(
     shape. Words the trainer never saw (length < 2) count 1 token;
     n_chars counts lowercased word characters (whitespace excluded),
     so n_tokens/n_chars is the compression the learned merges buy."""
-    _, vocab = _bpe_train_core(df, text_col, rounds, apply_last=True)
-    n_sym = F.size(F.split(F.col("seq"), _BPE_SEP))
-    v = vocab.select("w", n_sym.alias("__n_sym"))
+    v = _bpe_train_core(df, text_col, rounds).select(F.inline("v")).select(
+        "w", F.size("s").alias("__n_sym")
+    )
     words = (
         spread(df)
         .select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("w"))
@@ -1126,8 +1162,10 @@ def _bpe_sql_ctes(
     source: str, text_col: str, rounds: int, apply_last: bool
 ) -> str:
     """The WITH-chain both BPE oracles share: tok → wf0 → per-round
-    (p{n} pair counts, b{n} argmax, wf{n} merge-applied vocab) —
-    mirroring ``_bpe_train_core`` CTE-for-frame."""
+    (p{n} pair counts, b{n} argmax, wf{n} merge-applied vocab). It
+    replays ``_bpe_train_core``'s rounds relationally: a word's symbols
+    are one chr(31)-joined string, and a round with no argmax row
+    empties the vocab through the cross join with ``b{n}``."""
     parts = [
         f"""WITH tok AS (
   SELECT lower(unnest(regexp_split_to_array(trim({text_col}), '\\s+'))) AS w
@@ -1170,7 +1208,7 @@ def _bpe_sql_ctes(
 def bpe_train_sql(source: str, text_col: str, rounds: int = 8) -> str:
     """The unrolled DuckDB replay of ``bpe_train_merges`` — identical
     tokenization, pair counts, argmax tiebreak, and greedy fold
-    (``list_reduce`` over the same SEP-delimited sequences)."""
+    (``list_reduce`` over chr(31)-joined symbol sequences)."""
     union = "\nUNION ALL\n".join(f"SELECT * FROM b{n}" for n in range(1, rounds + 1))
     return (
         _bpe_sql_ctes(source, text_col, rounds, apply_last=False)

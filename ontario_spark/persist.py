@@ -5,10 +5,9 @@ Spark's CacheManager holds a persisted frame until someone calls
 ``unpersist()``; Python garbage collection never releases it. So every
 persisted frame here has exactly one owner:
 
-- ``pinned()`` scope — an eager loop (closure, components, PageRank,
-  personalized PageRank, BFS, the streaming index and its last-batch
-  probe) pins its loop-invariant frames with
-  ``pin()`` inside ``with pinned():``. The scope unpersists every frame
+- ``pinned()`` scope — an eager loop (closure, components, BFS, the
+  streaming index and its last-batch probe) pins its loop-invariant
+  frames with ``pin()`` inside ``with pinned():``. The scope unpersists every frame
   it persisted when it exits, normally or by an exception, so the loop
   must return a result that no longer reads them: a truncated frame,
   or a plan over frames that are themselves truncated.

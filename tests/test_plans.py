@@ -268,3 +268,40 @@ def test_centroids_and_web_curation_plan_shapes(spark, sf_small):
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
         assert "MapInPandas" not in plan, name
+
+
+def _build_jobs(spark, build) -> int:
+    """Spark jobs started while ``build()`` constructs its DataFrame."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fixed_round_loops_start_no_job_per_round_while_built(spark, sf_small):
+    """PageRank and PPR build as one lazy plan, and BPE training's
+    rounds are lazy checkpoints over one row with no exchange: building
+    any of them must not start a Spark job per round."""
+    from ontario_spark.data import table
+    from ontario_spark.operators.textops import bpe_encode_stats, bpe_train_merges
+
+    q = all_queries()
+    for name in ("events_pagerank", "events_ppr"):
+        q[name](spark, sf_small)  # first call reads the table footers
+        assert _build_jobs(spark, lambda: q[name](spark, sf_small)) == 0, name
+    docs = table(spark, sf_small, "documents")
+    builds = {
+        "merges": lambda r: bpe_train_merges(docs, "text", rounds=r),
+        "encode": lambda r: bpe_encode_stats(docs, "doc_id", "text", rounds=r),
+    }
+    for name, build in builds.items():
+        build(2)
+        few = _build_jobs(spark, lambda: build(2))
+        many = _build_jobs(spark, lambda: build(8))
+        assert few == many, (name, few, many)

@@ -102,6 +102,57 @@ def test_bpe_train_merges_hand_computed(spark):
     assert enc[1] == (2, 8, 2)
     assert enc[2] == (1, 3, 2)
 
+    # pairs run out: every word is one symbol after the first merge, so
+    # rounds 2-3 find no pair — one merge row, and the vocab the later
+    # rounds leave is empty in both engines (the oracle's cross join
+    # with an empty argmax row)
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from ontario_spark.operators.textops import (
+        _bpe_sql_ctes,
+        _bpe_train_core,
+        bpe_train_sql,
+    )
+
+    pdf = pd.DataFrame({"doc_id": [1], "text": ["ab ab ab"]})
+    df = spark.createDataFrame(pdf)
+    got = sorted(tuple(r) for r in bpe_train_merges(df, "text", rounds=3).collect())
+    assert got == [(1, "a", "b", "ab", 3)]
+    assert got == sorted(_bpe_duckdb(pdf, bpe_train_sql("docs", "text", rounds=3)))
+    assert _bpe_train_core(df, "text", 3).select(F.size("v")).first()[0] == 0
+    ctes = _bpe_sql_ctes("docs", "text", 3, apply_last=True)
+    assert _bpe_duckdb(pdf, ctes + " SELECT COUNT(*) FROM wf3") == [(0,)]
+
+    # non-ASCII symbols: every word has frequency 2, so each round is a
+    # tie among the pairs left, broken by the smallest (left, right) in
+    # code points — 'z' (U+007A) < 'é' (U+00E9) < 'α' (U+03B1), where a
+    # locale order would put 'é' before 'z'; (a,z) < (a,é) on the right
+    pdf = pd.DataFrame(
+        {"doc_id": [1, 2], "text": ["αa éa za aé az", "za éa αa aé az"]}
+    )
+    df = spark.createDataFrame(pdf)
+    got = sorted(tuple(r) for r in bpe_train_merges(df, "text", rounds=5).collect())
+    assert got == [
+        (1, "a", "z", "az", 2),
+        (2, "a", "é", "aé", 2),
+        (3, "z", "a", "za", 2),
+        (4, "é", "a", "éa", 2),
+        (5, "α", "a", "αa", 2),
+    ]
+    assert got == sorted(_bpe_duckdb(pdf, bpe_train_sql("docs", "text", rounds=5)))
+
+
+def _bpe_duckdb(pdf, sql: str) -> list:
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.register("docs", pdf)
+        return con.execute(sql).fetchall()
+    finally:
+        con.close()
+
 
 def test_bpe_merge_candidates_hand_counted(spark):
     from ontario_spark.operators.textops import bpe_merge_candidates
