@@ -3,9 +3,9 @@
 Parity with the reference's entry points: the CLI (``run_query.py:4-63``
 — parse, plan, execute, print rows + timings) and the HTTP endpoint's
 response shape (``app/query.py:83-145`` / ``README.md:205-219``:
-``{vars, result[], execTime, firstResult, totalRows}``). The W3C
-``application/sparql-results+json`` encoder doubles as the sink for
-anything that wants standard SPARQL output.
+``{vars, result[], execTime, firstResult, totalRows}``). Every result
+format streams through ``sinks.stream``, the generator the HTTP server
+also serves from.
 
 Usage::
 
@@ -21,37 +21,6 @@ import sys
 import time
 
 
-def sparql_json_term(value) -> dict | None:
-    """Lexical value → SPARQL-JSON term dict (the reference builds the
-    same dicts in its wrappers, e.g. ``sparql2spark.py:189-229``).
-    Typing delegates to ``sinks.term_kind`` — the single rule shared
-    with the CSV/TSV/XML serializations."""
-    from ontario_spark.sinks import term_kind
-
-    t = term_kind(value)
-    if t is None:
-        return None
-    return {"type": t[0], "value": t[1]}
-
-
-def binding_of(row, columns: list[str]) -> dict:
-    """ONE solution row → SPARQL-JSON binding dict (shared by the CLI
-    and both HTTP serving modes so the three outputs cannot diverge)."""
-    b = {}
-    for c in columns:
-        t = sparql_json_term(row[c])
-        if t is not None:
-            b[c] = t
-    return b
-
-
-def to_sparql_json(rows: list, columns: list[str]) -> dict:
-    return {
-        "head": {"vars": columns},
-        "results": {"bindings": [binding_of(r, columns) for r in rows]},
-    }
-
-
 def run(
     catalog_path: str,
     query_text: str,
@@ -63,12 +32,13 @@ def run(
     explain: bool = False,
 ) -> dict:
     """Execute one query; returns the reference's response shape with
-    the bindings in W3C SPARQL-JSON. ``trace=True`` additionally
-    records the elapsed time at which each answer arrived (driver
-    parity with the reference's dief@t continuous-efficiency harness,
+    the bindings in W3C SPARQL-JSON, or the ``results_format`` document
+    as ``serialized`` — the same ``sinks.stream`` the HTTP server
+    sends. ``trace=True`` additionally records the elapsed time at
+    which each answer arrived (driver parity with the reference's
+    dief@t continuous-efficiency harness,
     ``scripts/run_dief_experiment.py:28-180`` — one timestamp per
-    answer), streaming rows via ``toLocalIterator`` instead of a bulk
-    collect."""
+    answer)."""
     from ontario_spark.catalog.serde import load
     from ontario_spark.compiler.query import SparqlEngine
 
@@ -78,10 +48,10 @@ def run(
     # review fixes; mirrors the --trace/--write guard)
     from ontario_spark import sinks
 
-    if results_format not in sinks.RESULT_MIME:  # shared registry
+    if results_format not in sinks.FORMATS:  # shared registry
         raise ValueError(
             f"unknown results format {results_format!r} "
-            f"(one of {'|'.join(sorted(sinks.RESULT_MIME))})"
+            f"(one of {'|'.join(sorted(sinks.FORMATS))})"
         )
     # per-query-form validation (round-9): ASK has no csv/tsv document
     # and N-Triples only serializes graph results — both checked BEFORE
@@ -94,7 +64,7 @@ def run(
             f"ASK has no {results_format} result document; "
             "use srj, xml, or json"
         )
-    if results_format in sinks.GRAPH_SERIALIZERS and form not in (
+    if results_format in sinks.GRAPH_FORMATS and form not in (
         "construct", "describe"
     ):
         raise ValueError(
@@ -130,11 +100,6 @@ def run(
             # plan report only — nothing executes beyond compilation
             return {"explain": engine.explain(query_text)}
         df = engine.query(query_text)
-        if results_format in sinks.GRAPH_SERIALIZERS:
-            # graph serialization: format triples JVM-side (the same
-            # ntriples() projection the HTTP server streams from) so
-            # the single collection loop below gathers finished lines
-            df = sinks.ntriples(df)
         if write_path is not None:
             if trace:
                 raise ValueError(
@@ -147,13 +112,13 @@ def run(
             from pyspark.sql import functions as F
             from pyspark.sql.observation import Observation
 
-            from ontario_spark.sinks import write_results
-
+            if results_format in sinks.GRAPH_FORMATS:
+                df = sinks.ntriples(df)
             # row count observed DURING the write (free — a metric on
             # the outgoing rows) instead of re-reading the whole
             # written dataset afterward
             obs = Observation("written_rows")
-            write_results(
+            sinks.write_results(
                 df.observe(obs, F.count(F.lit(1)).alias("n")),
                 write_path,
                 fmt=write_format,
@@ -166,53 +131,39 @@ def run(
                 "totalRows": n,
                 "execTime": round(time.perf_counter() - t0, 4),
             }
-        # ONE execution for both modes (round-5 review fix: the old
-        # non-trace path ran limit(1).collect() AND collect() — two
-        # full jobs — and reported execTime across both): stream rows,
-        # note first arrival; trace additionally records every arrival.
-        rows, answer_times = [], [] if trace else None
-        t_first = None
-        for row in df.toLocalIterator():
-            rows.append(row)
-            now = round(time.perf_counter() - t0, 4)
-            if t_first is None:
-                t_first = now
-            if trace:
-                answer_times.append(now)
-        t_all = time.perf_counter() - t0
-        if t_first is None:
-            t_first = t_all
+        if form == "ask" and results_format in sinks.BOOLEAN_DOCS:
+            # W3C boolean document ({"head":{},"boolean":…} / <boolean>)
+            value = "true" if df.first()["ask"] else "false"
+            t_all = round(time.perf_counter() - t0, 4)
+            return {
+                "vars": df.columns,
+                "execTime": t_all,
+                "firstResult": t_all,
+                "totalRows": 1,
+                "serialized": sinks.BOOLEAN_DOCS[results_format] % value,
+                "format": results_format,
+            }
+        # ONE execution (round-5 review fix): stream the document and
+        # note when each chunk arrives; between the header and the
+        # footer, every chunk is one answer
+        chunks, arrivals = [], []
+        for chunk in sinks.stream(df, results_format, t0):
+            chunks.append(chunk)
+            arrivals.append(round(time.perf_counter() - t0, 4))
+        answer_times = arrivals[1:-1]
+        t_all = round(time.perf_counter() - t0, 4)
         out = {
             "vars": df.columns,
-            "execTime": round(t_all, 4),
-            "firstResult": round(t_first, 4),
-            "totalRows": len(rows),
+            "execTime": t_all,
+            "firstResult": answer_times[0] if answer_times else t_all,
+            "totalRows": len(answer_times),
         }
         if results_format == "json":
-            payload = to_sparql_json(rows, df.columns)
-            out["result"] = payload["results"]["bindings"]
-        elif form == "ask" and results_format in sinks.BOOLEAN_SERIALIZERS:
-            # W3C boolean document ({"head":{},"boolean":…} / <boolean>)
-            value = bool(rows[0]["ask"]) if rows else False
-            out["serialized"] = "".join(
-                sinks.BOOLEAN_SERIALIZERS[results_format](value)
-            )
-            out["format"] = results_format
-        elif results_format in sinks.GRAPH_SERIALIZERS:
-            # rows already carry the JVM-formatted `ntriple` column
-            # (df was wrapped in sinks.ntriples() before the single
-            # collection loop) — the driver only concatenates
-            out["serialized"] = "".join(
-                sinks.GRAPH_SERIALIZERS[results_format](rows)
-            )
-            out["format"] = results_format
+            out["result"] = json.loads("".join(chunks))["result"]
         else:
-            # W3C srj/CSV/TSV/XML text via the ONE serializer table
-            # the HTTP endpoint also streams from (sinks.py)
-            ser = sinks.RESULT_SERIALIZERS[results_format]
-            out["serialized"] = "".join(ser(rows, df.columns))
+            out["serialized"] = "".join(chunks)
             out["format"] = results_format
-        if answer_times is not None:
+        if trace:
             out["trace"] = answer_times
         return out
     finally:
@@ -241,7 +192,7 @@ def main(argv: list[str] | None = None) -> int:
 
     ap.add_argument("--results-format", default="json",
                     choices=("json", *sorted(
-                        f for f in _sinks.RESULT_MIME if f != "json"
+                        f for f in _sinks.FORMATS if f != "json"
                     )),
                     help="stdout serialization: SPARQL-JSON response "
                          "shape (default) or raw W3C srj/csv/tsv/xml "

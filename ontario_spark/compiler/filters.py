@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ontario_spark.sinks import term_kind
 from ontario_spark.sparql.ast import ExistsExpr, Expr, Term
 
 _CMP = {"=", "!=", "<", ">", "<=", ">="}
@@ -299,12 +300,9 @@ class ExprCompiler:
             if v is not None and v.is_var and self.has_col(f"{v.value}__lang"):
                 return F.coalesce(F.col(f"{v.value}__lang"), F.lit(""))
             return self.value(a[0])
-        if op in ("isiri", "isuri"):
-            return self.value(a[0]).rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://")
-        if op == "isblank":
-            return self.value(a[0]).startswith("_:")
-        if op == "isliteral":
-            return ~self.value(a[0]).rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://")
+        if op in ("isiri", "isuri", "isblank", "isliteral"):
+            kind = {"isblank": "bnode", "isliteral": "literal"}.get(op, "uri")
+            return term_kind(self.value(a[0])) == kind
         if op == "datatype":
             v = unwrap(a[0])
             if v is not None and v.is_var and self.has_col(f"{v.value}__dt"):
@@ -351,7 +349,7 @@ class ExprCompiler:
                     f"DATATYPE() unsupported for column type {dt!r}"
                 )
             col = self.value(a[0])
-            is_iri = col.cast("string").rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://")
+            is_iri = term_kind(col) == "uri"
             lit = F.lit(xsd + mapped)
             if mapped == "string":
                 return F.when(col.isNotNull() & ~is_iri, lit)

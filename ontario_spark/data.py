@@ -103,13 +103,3 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
         names=struct.names,
     )
     return spark.createDataFrame(table, schema=struct)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql access."""
-    for t in TABLES:
-        table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -105,18 +105,6 @@ def shingles_of(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(grams_of(toks, n))
 
 
-def with_shingles(
-    df: DataFrame, text_col: str, n: int = 3, out: str = "sh"
-) -> DataFrame:
-    """Two-step tokenize→shingle with the token array materialized as a
-    real projection between the steps (see shingles_of)."""
-    return (
-        df.withColumn("__toks", tokens(F.col(text_col)))
-        .withColumn(out, shingles_of(F.col("__toks"), n))
-        .drop("__toks")
-    )
-
-
 def shingles(col: Column, n: int = 3) -> Column:
     """Inline shingle expression — convenience for tests/small inputs;
     hot paths must use exploded_shingles (see shingles_of docstring)."""

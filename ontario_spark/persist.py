@@ -136,8 +136,8 @@ def pin(df: DataFrame, *, truncate: bool, eager: bool = True) -> DataFrame:
     is persisted instead — the same cost per round, with linear lineage.
 
     A persisted frame is owned by the innermost ``pinned()`` scope of
-    this thread. A partition-keeping pin needs one; outside a scope, the
-    caller owns a truncating pin's persist fallback."""
+    this thread. A partition-keeping pin needs one; outside a scope, a
+    truncating pin's persist fallback is owned by ``INTERMEDIATES``."""
     stack = _scope_stack()
     scope = stack[-1] if stack else None
     if truncate:
@@ -145,11 +145,12 @@ def pin(df: DataFrame, *, truncate: bool, eager: bool = True) -> DataFrame:
             return df.localCheckpoint(eager=eager)
         except Exception:
             pass  # persisted below instead
-    elif scope is None:
-        raise RuntimeError("pin(truncate=False) outside a pinned() scope")
-    df = df.persist()
     if scope is not None:
-        scope.append(df)
+        scope.append(df.persist())
+    elif truncate:
+        df = persisted(df)
+    else:
+        raise RuntimeError("pin(truncate=False) outside a pinned() scope")
     if eager:
         df.count()
     return df

@@ -24,7 +24,6 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from ontario_spark import sinks
-from ontario_spark.cli import binding_of
 
 
 _ACCEPT_FORMATS = {
@@ -64,23 +63,35 @@ _FORM_FORMATS = {
 
 # drift guards (round-8 review): a format reachable through Accept
 # negotiation must have a preference rank (else _negotiate raises on
-# every matching request) and a registered mime/serializer. Not
+# every matching request) and an entry in the format table. Not
 # assert — must survive python -O.
 if not set(_ACCEPT_FORMATS.values()) <= set(_FORMAT_PREF) or not (
-    set(_ACCEPT_FORMATS.values()) <= set(sinks.RESULT_MIME)
+    set(_ACCEPT_FORMATS.values()) <= set(sinks.FORMATS)
 ):
     raise RuntimeError(
         "Accept-format registry drift: "
         f"{sorted(set(_ACCEPT_FORMATS.values()))} not covered by "
-        f"pref {_FORMAT_PREF} / mimes {sorted(sinks.RESULT_MIME)}"
+        f"pref {_FORMAT_PREF} / formats {sorted(sinks.FORMATS)}"
     )
 if (
-    not all(v <= set(sinks.RESULT_MIME) for v in _FORM_FORMATS.values())
-    or not _FORM_FORMATS["ask"] - {"json"} <= set(sinks.BOOLEAN_SERIALIZERS)
+    not all(v <= set(sinks.FORMATS) for v in _FORM_FORMATS.values())
+    or not _FORM_FORMATS["ask"] - {"json"} <= set(sinks.BOOLEAN_DOCS)
     or not _FORM_FORMATS["ask"].isdisjoint(sinks.ASK_UNSUPPORTED)
-    or not set(sinks.GRAPH_SERIALIZERS) <= _FORM_FORMATS["construct"]
+    or not sinks.GRAPH_FORMATS <= _FORM_FORMATS["construct"]
 ):
     raise RuntimeError("per-query-form format table drift")
+
+
+def _cause(ex: Exception) -> str:
+    """The message of a JVM error's innermost cause: a failed Spark job
+    reaches Python wrapped in Py4J call-site frames whose own message
+    does not say what went wrong."""
+    cause = getattr(ex, "java_exception", None)
+    if cause is None:
+        return str(ex)
+    while cause.getCause() is not None:
+        cause = cause.getCause()
+    return str(cause.getMessage())
 
 
 # sentinel: the client explicitly refused every supported format
@@ -255,7 +266,7 @@ class SparqlHTTPServer:
                         emit(chunk)
                 except Exception as ex:
                     if err_terminator is not None:
-                        emit(err_terminator % json.dumps(str(ex)[:500]))
+                        emit(err_terminator % json.dumps(_cause(ex)[:500]))
                     self.close_connection = True
                 self.wfile.write(b"0\r\n\r\n")
 
@@ -370,15 +381,15 @@ class SparqlHTTPServer:
         # get the same per-query-form refusals (negotiation never
         # picks these — _FORM_FORMATS filters them out).
         fmt = (q.get("format") or ["json"])[0]
-        if fmt not in sinks.RESULT_MIME:
+        if fmt not in sinks.FORMATS:
             raise ValueError(
-                f"unknown format {fmt!r} (one of {sorted(sinks.RESULT_MIME)})"
+                f"unknown format {fmt!r} (one of {sorted(sinks.FORMATS)})"
             )
         if form == "ask" and fmt in sinks.ASK_UNSUPPORTED:
             raise ValueError(
                 f"ASK has no {fmt} result document; use srj, xml, or json"
             )
-        if fmt in sinks.GRAPH_SERIALIZERS and form not in (
+        if fmt in sinks.GRAPH_FORMATS and form not in (
             "construct", "describe"
         ):
             raise ValueError(
@@ -386,35 +397,31 @@ class SparqlHTTPServer:
             )
         nonblocking = (q.get("mode") or ["blocking"])[0] == "non-blocking"
         if nonblocking and fmt == "json":
-            # legacy protocol: one binding dict per /nextresult call
+            # legacy protocol: one binding per /nextresult call
             return self._park(
                 {
                     "vars": df.columns,
-                    "it": df.toLocalIterator(),
+                    "it": sinks.lines(df, fmt).toLocalIterator(),
                     "qlock": threading.Lock(),
                 },
                 df.columns,
                 fmt,
             )
-        # W3C document streams — ONE construction shared by blocking
+        # document streams — ONE construction shared by blocking
         # (chunked response) and non-blocking (/nextresult pops one
         # fragment per call; round-9: format parity for /nextresult).
-        if form == "ask" and fmt in sinks.BOOLEAN_SERIALIZERS:
+        if form == "ask" and fmt in sinks.BOOLEAN_DOCS:
             # the 1-row ask frame evaluates BEFORE headers go out, so
             # execution errors still surface as a clean 400
-            value = bool(df.first()["ask"])
-            chunks: "object" = sinks.BOOLEAN_SERIALIZERS[fmt](value)
+            value = "true" if df.first()["ask"] else "false"
+            chunks = iter([sinks.BOOLEAN_DOCS[fmt] % value])
             err_term = None
-        elif fmt in sinks.GRAPH_SERIALIZERS:
-            ndf = sinks.ntriples(df)  # JVM-side triple formatting
-            chunks = sinks.GRAPH_SERIALIZERS[fmt](ndf.toLocalIterator())
-            err_term = None
-        elif fmt == "json":
-            chunks = self._blocking_chunks(df, t0)
-            err_term = self._ERR_TERMINATORS["json"]
         else:
-            ser = sinks.RESULT_SERIALIZERS[fmt]  # shared table, no drift
-            chunks = ser(df.toLocalIterator(), df.columns)
+            # the blocking legacy shape streams rows through
+            # toLocalIterator() one partition at a time, never a
+            # driver-side collect() (the reference Flask app drains its
+            # whole queue into one response, app/query.py:147)
+            chunks = sinks.stream(df, fmt, t0)
             err_term = self._ERR_TERMINATORS.get(fmt)
         if nonblocking:
             return self._park(
@@ -443,31 +450,6 @@ class SparqlHTTPServer:
                 self._pending.pop(next(iter(self._pending)))
             self._pending[qid] = entry
         return {"qid": qid, "vars": cols, "format": fmt}
-
-    def _blocking_chunks(self, df, t0: float):
-        """Blocking-mode body as a stream of JSON fragments: same
-        payload shape as before (vars/result/execTime/firstResult/
-        totalRows — the trailing stats keys are emitted once the rows
-        have streamed), but rows come through ``toLocalIterator()`` one
-        partition at a time instead of a driver-side ``collect()`` —
-        a big SELECT no longer OOMs the driver (round-5; the reference
-        Flask app drains its whole queue into one response,
-        ``app/query.py:147``)."""
-        cols = df.columns
-        yield '{"vars": %s, "result": [' % json.dumps(cols)
-        n = 0
-        t_first = None
-        for row in df.toLocalIterator():
-            if t_first is None:
-                t_first = time.perf_counter() - t0
-            yield ("," if n else "") + json.dumps(binding_of(row, cols))
-            n += 1
-        t_all = time.perf_counter() - t0
-        yield '], "execTime": %s, "firstResult": %s, "totalRows": %d}' % (
-            round(t_all, 4),
-            round(t_first if t_first is not None else t_all, 4),
-            n,
-        )
 
     def _nextresult(self, q: dict):
         """Legacy json entries → one binding dict per call (``{"result":
@@ -508,7 +490,7 @@ class SparqlHTTPServer:
             with self._lock:
                 self._pending.pop(qid, None)
             return {"result": "EOF"}
-        return {"result": binding_of(row, entry["vars"]), "vars": entry["vars"]}
+        return {"result": json.loads(row[0]), "vars": entry["vars"]}
 
     # --- lifecycle ------------------------------------------------------
 

@@ -1,28 +1,67 @@
-"""Result sinks.
+"""Result sinks: every result format is one Spark projection.
 
 The reference's only sinks are the output queue drained by the CLI
 (``run_query.py:46-59``) and the Flask HTTP response (``app/query.py``);
-CONSTRUCT results are formatted as N-Triples strings tuple-at-a-time in
-Python (``Xconstruct.get_template_impl`` :46-105). Here formatting is
-Column expressions (JVM-side, codegen) and any ``df.write`` target is a
-sink — the two below are the engine-specific ones.
+it builds a SPARQL-JSON term dict per binding in its wrappers
+(``sparql2spark.py:189-229``) and formats CONSTRUCT results as
+N-Triples tuple-at-a-time in Python (``Xconstruct.get_template_impl``
+:46-105). Here one term rule (``IRI_PATTERN`` / ``term_kind``) types
+every value as ``uri``, ``bnode`` or ``literal`` — for the FILTER
+functions ``isIRI``/``isLiteral``/``isBlank``/``DATATYPE``, for the
+VALUES terms sent to remote endpoints, and for every result format —
+and ``lines(df, fmt)`` formats each solution as one string column
+JVM-side. ``stream()`` is the one generator that wraps those lines in
+the document's header and footer; the HTTP server (blocking and
+``/nextresult``) and the CLI both serve from it. A value's lexical form
+is ``cast("string")`` (booleans ``true``, doubles in Java's
+``1.0E7`` form). Any ``df.write`` target is a sink too
+(``write_results``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+import json
+import time
+from collections.abc import Callable
+from typing import NamedTuple
+from xml.sax.saxutils import quoteattr
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# The one IRI rule: a hierarchical ``scheme://``, ``urn:`` or ``mailto:``
+# prefix and none of the characters an IRIREF may not hold (so a value
+# sent to an endpoint as ``<...>`` cannot break out of its brackets).
+# ASCII classes and a lookahead instead of ``$`` (which both engines
+# also match before a final newline), so Java ``rlike`` and Python
+# ``re.match`` read it the same way.
+_IRI_FORBIDDEN = r' <>"{}|\\^`\n\r\t'
+IRI_PATTERN = (
+    r"^(?:[A-Za-z][A-Za-z0-9+.-]*://|urn:|mailto:)"
+    f"(?![^{_IRI_FORBIDDEN}]*[{_IRI_FORBIDDEN}])"
+)
 
-def _term_nt(col: F.Column) -> F.Column:
-    """RDF term → N-Triples token: IRIs angle-bracketed (hierarchical
-    ``scheme://`` forms plus the scheme-only ``urn:`` family the CLI's
-    SPARQL-JSON sink also treats as uri), blank nodes passed through,
-    anything else a quoted literal with the full ECHAR set escaped —
-    backslash, quote, and the control characters (LF/CR/TAB) that would
-    otherwise split a triple across physical lines and break every
-    line-oriented N-Triples parser."""
+
+def term_kind(col: Column) -> Column:
+    """``uri`` | ``bnode`` (``_:`` prefix) | ``literal`` for a value's
+    lexical form; NULL for an unbound value."""
     s = col.cast("string")
+    return (
+        F.when(s.rlike(IRI_PATTERN), "uri")
+        .when(s.startswith("_:"), "bnode")
+        .when(s.isNotNull(), "literal")
+    )
+
+
+def _term_nt(col: Column) -> Column:
+    """RDF term → N-Triples token: IRIs angle-bracketed, blank nodes
+    passed through, anything else a quoted literal with the full ECHAR
+    set escaped — backslash, quote, and the control characters
+    (LF/CR/TAB) that would otherwise split a triple across physical
+    lines and break every line-oriented N-Triples parser."""
+    s = col.cast("string")
+    kind = term_kind(s)
     escaped = F.regexp_replace(
         F.regexp_replace(s, r"\\", r"\\\\"), '"', r"\\\""
     )
@@ -30,11 +69,8 @@ def _term_nt(col: F.Column) -> F.Column:
     escaped = F.regexp_replace(escaped, "\r", r"\\r")
     escaped = F.regexp_replace(escaped, "\t", r"\\t")
     return (
-        F.when(
-            s.rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://") | s.startswith("urn:"),
-            F.concat(F.lit("<"), s, F.lit(">")),
-        )
-        .when(s.startswith("_:"), s)
+        F.when(kind == "uri", F.concat(F.lit("<"), s, F.lit(">")))
+        .when(kind == "bnode", s)
         .otherwise(F.concat(F.lit('"'), escaped, F.lit('"')))
     )
 
@@ -45,7 +81,7 @@ def ntriples(construct_df: DataFrame) -> DataFrame:
     a single codegen'd projection). Rows with ANY unbound (NULL) term
     are OMITTED per SPARQL CONSTRUCT semantics — concat_ws would
     otherwise silently drop just the NULL component and emit a
-    truncated, malformed line (round-5 review fix)."""
+    truncated, malformed line."""
     construct_df = construct_df.filter(
         F.col("s").isNotNull() & F.col("p").isNotNull() & F.col("o").isNotNull()
     )
@@ -78,242 +114,181 @@ def write_results(
     w.save(path)
 
 
-# --- W3C SPARQL result serializations (CSV / TSV / XML) ----------------
+# --- SPARQL result documents -------------------------------------------
 #
 # Beyond the reference (its only encodings are SPARQL-JSON and the
-# N-Triples CONSTRUCT sink): the other three standard result formats,
-# per https://www.w3.org/TR/sparql11-results-csv-tsv/ and
-# .../rdf-sparql-XMLres/. All three are GENERATORS over a row iterator
-# so the HTTP server can stream them chunk-by-chunk with driver memory
-# bounded by one row — same posture as the JSON blocking path.
+# N-Triples CONSTRUCT sink): the W3C JSON, CSV/TSV and XML result
+# formats (https://www.w3.org/TR/sparql11-results-json/, -csv-tsv/,
+# rdf-sparql-XMLres/). A solution's line is built JVM-side; the driver
+# only adds separators, so its memory stays bounded by one row.
 
 
-def term_kind(value) -> "tuple[str, str] | None":
-    """Lexical value → (kind, string) with kind ∈ uri|bnode|literal —
-    the SAME typing rule as the SPARQL-JSON sink (cli.sparql_json_term
-    delegates here) so the four serializations cannot diverge."""
-    if value is None:
-        return None
-    s = str(value)
-    if s.startswith("http://") or s.startswith("https://") or s.startswith("urn:"):
-        return ("uri", s)
-    if s.startswith("_:"):
-        return ("bnode", s[2:])
-    return ("literal", s)
+def _terms(cols: list[str]):
+    """Per variable: name, lexical form, kind, and the SPARQL-JSON/XML
+    value (a blank node's label without its ``_:``)."""
+    for c in cols:
+        s = F.col(c).cast("string")
+        kind = term_kind(s)
+        label = s.substr(3, 1 << 30)
+        yield c, s, kind, F.when(kind == "bnode", label).otherwise(s)
 
 
-def _csv_field(s: str) -> str:
-    if any(ch in s for ch in (",", '"', "\n", "\r")):
-        return '"' + s.replace('"', '""') + '"'
-    return s
+def _binding_line(cols: list[str]) -> Column:
+    # an unbound variable is a NULL struct, which to_json omits
+    terms = [
+        F.when(
+            s.isNotNull(), F.struct(kind.alias("type"), value.alias("value"))
+        ).alias(c)
+        for c, s, kind, value in _terms(cols)
+    ]
+    return F.to_json(F.struct(*terms))
 
 
-def sparql_csv_chunks(rows, columns: list[str]):
-    """``text/csv`` serialization: header of bare variable names, then
-    one CRLF-terminated record per solution; IRIs bare, bnodes
-    ``_:label``, literals as their lexical form, unbound empty —
-    RFC 4180 quoting for fields containing comma/quote/newline."""
-    yield ",".join(_csv_field(c) for c in columns) + "\r\n"
-    for row in rows:
-        out = []
-        for c in columns:
-            t = term_kind(row[c])
-            if t is None:
-                out.append("")
-            elif t[0] == "bnode":
-                out.append(_csv_field("_:" + t[1]))
-            else:
-                out.append(_csv_field(t[1]))
-        yield ",".join(out) + "\r\n"
+def _csv_line(cols: list[str]) -> Column:
+    # IRIs bare, blank nodes ``_:label``, unbound empty; RFC 4180
+    # quoting for fields holding a comma, quote or line break
+    fields = []
+    for c in cols:
+        s = F.col(c).cast("string")
+        quoted = F.concat(F.lit('"'), F.regexp_replace(s, '"', '""'), F.lit('"'))
+        field = F.when(s.rlike('[,"\r\n]'), quoted).otherwise(s)
+        fields.append(F.coalesce(field, F.lit("")))
+    return F.concat_ws(",", *fields)
 
 
-def _tsv_term(t: "tuple[str, str] | None") -> str:
-    if t is None:
-        return ""
-    kind, s = t
-    if kind == "uri":
-        return "<" + s + ">"
-    if kind == "bnode":
-        return "_:" + s
-    esc = (
-        s.replace("\\", "\\\\")
-        .replace('"', '\\"')
-        .replace("\n", "\\n")
-        .replace("\r", "\\r")
-        .replace("\t", "\\t")
-    )
-    return '"' + esc + '"'
+def _tsv_line(cols: list[str]) -> Column:
+    # terms in SPARQL syntax; coalesce first, as concat_ws skips NULLs
+    terms = [F.coalesce(_term_nt(F.col(c)), F.lit("")) for c in cols]
+    return F.concat_ws("\t", *terms)
 
 
-def sparql_tsv_chunks(rows, columns: list[str]):
-    """``text/tab-separated-values`` serialization: header of
-    ``?var`` names, then terms in SPARQL syntax — IRIs bracketed,
-    literals quoted with ECHAR escapes (tab/newline/backslash/quote),
-    unbound empty."""
-    yield "\t".join("?" + c for c in columns) + "\n"
-    for row in rows:
-        yield "\t".join(_tsv_term(term_kind(row[c])) for c in columns) + "\n"
+def _xml_line(cols: list[str]) -> Column:
+    # an unbound variable's binding is NULL, which concat_ws skips
+    bindings = []
+    for c, _s, kind, value in _terms(cols):
+        text = value
+        for ch, entity in (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;")):
+            text = F.regexp_replace(text, ch, entity)  # "&" first
+        bindings.append(F.concat(
+            F.lit(f"<binding name={quoteattr(c)}><"), kind, F.lit(">"),
+            text, F.lit("</"), kind, F.lit("></binding>"),
+        ))
+    return F.concat_ws("", F.lit("<result>"), *bindings, F.lit("</result>"))
 
 
-def sparql_xml_chunks(rows, columns: list[str]):
-    """``application/sparql-results+xml`` serialization (SPARQL Query
-    Results XML Format)."""
-    from xml.sax.saxutils import escape, quoteattr
-
-    yield (
-        '<?xml version="1.0"?>\n'
-        '<sparql xmlns="http://www.w3.org/2005/sparql-results#">\n<head>'
-    )
-    for c in columns:
-        yield f"<variable name={quoteattr(c)}/>"
-    yield "</head>\n<results>\n"
-    for row in rows:
-        parts = ["<result>"]
-        for c in columns:
-            t = term_kind(row[c])
-            if t is None:
-                continue
-            kind, s = t
-            tag = {"uri": "uri", "bnode": "bnode", "literal": "literal"}[kind]
-            parts.append(
-                f"<binding name={quoteattr(c)}>"
-                f"<{tag}>{escape(s)}</{tag}></binding>"
-            )
-        parts.append("</result>\n")
-        yield "".join(parts)
-    yield "</results>\n</sparql>\n"
+class ResultFormat(NamedTuple):
+    mime: str
+    head: Callable[[list[str]], str]
+    line: "Callable[[list[str]], Column] | None"  # None: ntriples()
+    sep: str  # between two lines
+    end: str  # after each line
+    tail: str  # a %-template over the stream's totals
 
 
-def sparql_srj_chunks(rows, columns: list[str]):
-    """``application/sparql-results+json`` serialization — the W3C
-    SPARQL 1.1 Query Results JSON Format (``{"head": {"vars"},
-    "results": {"bindings"}}``), streamed fragment-by-fragment like
-    the other three. Distinct from the engine's legacy blocking shape
-    (``{"vars", "result", ...}``), which is honestly labeled plain
-    ``application/json``: a standards client negotiating the W3C
-    media type gets the W3C document (round-6 advice: the legacy
-    shape was being served under the W3C label)."""
-    import json as _json
-
-    from ontario_spark.cli import binding_of  # lazy: cli imports sinks
-
-    yield '{"head": {"vars": %s}, "results": {"bindings": [' % _json.dumps(
-        columns
-    )
-    n = 0
-    for row in rows:
-        yield ("," if n else "") + _json.dumps(binding_of(row, columns))
-        n += 1
-    yield "]}}"
+_XML_HEAD = (
+    '<?xml version="1.0"?>\n'
+    '<sparql xmlns="http://www.w3.org/2005/sparql-results#">\n'
+)
 
 
-def sparql_srj_boolean_chunks(value: bool):
-    """ASK result → the W3C SPARQL 1.1 JSON *boolean* document
-    (``{"head": {}, "boolean": …}`` — NOT a bindings document; a
-    standards client doing ASK-over-Accept reads the ``boolean`` key,
-    round-9 advice)."""
-    yield '{"head": {}, "boolean": %s}' % ("true" if value else "false")
+def _no_head(cols: list[str]) -> str:
+    return ""
 
 
-def sparql_xml_boolean_chunks(value: bool):
-    """ASK result → the W3C XML ``<boolean>`` document."""
-    yield (
-        '<?xml version="1.0"?>\n'
-        '<sparql xmlns="http://www.w3.org/2005/sparql-results#">\n'
-        "<head/>\n<boolean>%s</boolean>\n</sparql>\n"
-        % ("true" if value else "false")
-    )
-
-
-def ntriples_chunks(rows):
-    """``application/n-triples`` serialization for graph results
-    (CONSTRUCT / DESCRIBE): one triple per line, streamed row-by-row.
-    ``rows`` iterate the ``ntriples()`` projection above (single
-    ``ntriple`` column) — formatting already happened JVM-side; the
-    driver only concatenates."""
-    for row in rows:
-        yield row["ntriple"] + "\n"
-
-
-# ``text/turtle`` (round 9): N-Triples is a subset of Turtle, so the
-# canonical line-per-triple stream IS a conformant Turtle document —
-# same serializer, different media type (carried by RESULT_MIME). No
-# prefix compaction: streaming chunk-by-chunk forbids a second pass to
-# discover namespaces, and absolute IRIs round-trip exactly. One
-# function, not a copy — an escaping fix must not have to land twice.
-turtle_chunks = ntriples_chunks
-
-
-RESULT_MIME = {
-    # legacy engine response shape ({"vars", "result", ...} — the
+# ONE format table for the HTTP server and the CLI: which formats
+# exist, their media type, and how their documents are framed.
+FORMATS = {
+    # the legacy engine response shape ({"vars", "result", ...} — the
     # reference's Flask body, app/query.py:147): NOT the W3C document,
     # so NOT the W3C media type
-    "json": "application/json",
+    "json": ResultFormat(
+        "application/json",
+        lambda cols: '{"vars": %s, "result": [' % json.dumps(cols),
+        _binding_line, ",", "",
+        '], "execTime": %(execTime)s, "firstResult": %(firstResult)s, '
+        '"totalRows": %(totalRows)d}',
+    ),
     # W3C SPARQL 1.1 Query Results JSON Format
-    "srj": "application/sparql-results+json",
-    "csv": "text/csv; charset=utf-8",
-    "tsv": "text/tab-separated-values; charset=utf-8",
-    "xml": "application/sparql-results+xml",
-    # graph serializations (CONSTRUCT / DESCRIBE only)
-    "nt": "application/n-triples",
-    "ttl": "text/turtle",
+    "srj": ResultFormat(
+        "application/sparql-results+json",
+        lambda cols: '{"head": {"vars": %s}, "results": {"bindings": ['
+        % json.dumps(cols),
+        _binding_line, ",", "", "]}}",
+    ),
+    "csv": ResultFormat(
+        "text/csv; charset=utf-8",
+        lambda cols: ",".join(cols) + "\r\n",
+        _csv_line, "", "\r\n", "",
+    ),
+    "tsv": ResultFormat(
+        "text/tab-separated-values; charset=utf-8",
+        lambda cols: "\t".join("?" + c for c in cols) + "\n",
+        _tsv_line, "", "\n", "",
+    ),
+    "xml": ResultFormat(
+        "application/sparql-results+xml",
+        lambda cols: _XML_HEAD + "<head>"
+        + "".join(f"<variable name={quoteattr(c)}/>" for c in cols)
+        + "</head>\n<results>\n",
+        _xml_line, "", "\n", "</results>\n</sparql>\n",
+    ),
+    # graph serializations (CONSTRUCT / DESCRIBE only). N-Triples is a
+    # subset of Turtle, so the canonical line-per-triple stream IS a
+    # Turtle document; no prefix compaction, since streaming forbids a
+    # second pass to discover namespaces.
+    "nt": ResultFormat("application/n-triples", _no_head, None, "", "\n", ""),
+    "ttl": ResultFormat("text/turtle", _no_head, None, "", "\n", ""),
 }
+RESULT_MIME = {fmt: spec.mime for fmt, spec in FORMATS.items()}
+GRAPH_FORMATS = frozenset(f for f, spec in FORMATS.items() if spec.line is None)
 
-# ONE shared format→serializer table for every consumer (HTTP server
-# dispatch, CLI --results-format). "json" is absent deliberately: the
-# legacy response shape needs per-request state (timings), so each
-# caller builds it — but callers must treat RESULT_MIME as the
-# authority for WHICH formats exist and this table for HOW to stream
-# them. Round-8 review fix: four hand-maintained copies of this dict
-# were the exact drift that shipped round-7's srj-returns-400 bug.
-RESULT_SERIALIZERS = {
-    "srj": sparql_srj_chunks,
-    "csv": sparql_csv_chunks,
-    "tsv": sparql_tsv_chunks,
-    "xml": sparql_xml_chunks,
+# ASK under srj/xml is the W3C *boolean* document, not a bindings
+# document; csv/tsv define none, so callers refuse them
+BOOLEAN_DOCS = {
+    "srj": '{"head": {}, "boolean": %s}',
+    "xml": _XML_HEAD + "<head/>\n<boolean>%s</boolean>\n</sparql>\n",
 }
-
-# Per-query-form tables (round-9 advice): ASK must serialize as the
-# W3C *boolean* document under srj/xml (a bindings document there is
-# non-conformant), and CONSTRUCT/DESCRIBE stream N-Triples. Formats
-# NOT in a form's table fall back to bindings-over-the-result-frame
-# (legal for graph results serialized as s/p/o rows; refused for
-# nonsensical pairs by the callers — see server._sparql / cli.run).
-BOOLEAN_SERIALIZERS = {
-    "srj": sparql_srj_boolean_chunks,
-    "xml": sparql_xml_boolean_chunks,
-}
-GRAPH_SERIALIZERS = {
-    "nt": ntriples_chunks,
-    "ttl": turtle_chunks,
-}
-
-# bindings formats that have NO defined boolean (ASK) document —
-# callers refuse these with a clear message instead of inventing one
 ASK_UNSUPPORTED = frozenset(("csv", "tsv"))
 
-# drift guard: every advertised format must be streamable (or the
-# specially-handled legacy json). Boolean serializers must shadow a
-# bindings format of the same name (same Accept type negotiates both),
-# and graph formats must be disjoint from bindings formats. Not
-# assert — must survive python -O (an optimized deployment would
-# otherwise skip the fail-fast and hit the round-7 class of runtime
-# 400s instead).
-if set(RESULT_MIME) != set(RESULT_SERIALIZERS) | {"json"} | set(
-    GRAPH_SERIALIZERS
-):
-    raise RuntimeError(
-        "RESULT_MIME / RESULT_SERIALIZERS drift: "
-        f"{sorted(RESULT_MIME)} vs {sorted(RESULT_SERIALIZERS)} + json "
-        f"+ {sorted(GRAPH_SERIALIZERS)}"
-    )
-if not set(BOOLEAN_SERIALIZERS) <= set(RESULT_SERIALIZERS) or (
-    set(GRAPH_SERIALIZERS) & (set(RESULT_SERIALIZERS) | {"json"})
-):
-    raise RuntimeError(
-        "per-query-form serializer drift: boolean "
-        f"{sorted(BOOLEAN_SERIALIZERS)} must shadow bindings formats; "
-        f"graph {sorted(GRAPH_SERIALIZERS)} must not"
-    )
-if not ASK_UNSUPPORTED <= set(RESULT_SERIALIZERS):
-    raise RuntimeError("ASK_UNSUPPORTED names unknown formats")
+
+def lines(df: DataFrame, fmt: str) -> DataFrame:
+    """One string column per solution: its ``fmt`` line."""
+    if fmt in GRAPH_FORMATS:
+        return ntriples(df)
+    return df.select(_line(fmt, tuple(df.columns)))
+
+
+@functools.lru_cache(maxsize=256)
+def _line(fmt: str, cols: tuple[str, ...]) -> Column:
+    # Each Column call costs ~1.5 ms (PySpark 4 captures the Python
+    # call site), ~0.1 s for a five-variable line; the unresolved
+    # expression depends only on the format and the variables, so a
+    # repeated query shape reuses it
+    return FORMATS[fmt].line(list(cols)).alias("line")
+
+
+def stream(df: DataFrame, fmt: str, t0: "float | None" = None):
+    """The ``fmt`` document of ``df`` as text chunks: the header, one
+    chunk per solution fetched through ``toLocalIterator()``, then the
+    footer. The variables are ``df``'s columns; the projection is
+    built and analysed here, before the first chunk. ``t0`` anchors
+    the legacy shape's ``execTime``/``firstResult``."""
+    spec, cols, rows = FORMATS[fmt], df.columns, lines(df, fmt)
+    t0 = time.perf_counter() if t0 is None else t0
+
+    def chunks():
+        yield spec.head(cols)
+        n, first = 0, None
+        for (line,) in rows.toLocalIterator():
+            if first is None:
+                first = time.perf_counter() - t0
+            yield (spec.sep if n else "") + line + spec.end
+            n += 1
+        t_all = time.perf_counter() - t0
+        yield spec.tail % {
+            "execTime": round(t_all, 4),
+            "firstResult": round(t_all if first is None else first, 4),
+            "totalRows": n,
+        }
+
+    return chunks()

@@ -17,11 +17,13 @@ remote query in batches, union the batch results, then join locally.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ontario_spark.data import local_frame
+from ontario_spark.sinks import IRI_PATTERN
 
 # executor: (query_text) -> list of solution-mapping dicts
 RemoteExecutor = Callable[[str], list[dict[str, str | None]]]
@@ -34,25 +36,23 @@ class PushdownError(Exception):
     pass
 
 
-_IRI_SCHEMES = ("http://", "https://", "urn:", "ftp://", "mailto:")
-_IRI_FORBIDDEN = set(' <>"{}|\\^`\n\r\t')
-
-
 def sparql_value_term(key) -> str:
     """Render ONE build-side key as a SPARQL VALUES term, classified
     per key (the reference samples a prefix and picks one rendering
     for the whole batch — ``NestedHashJoinFilter.makeInstantiation``
     — which silently drops rows on mixed IRI/literal or typed keys):
-    IRI-shaped strings become ``<iri>``, every other string a quoted
-    literal with ``\\`` and ``"`` escaped, bools/ints/floats bare
-    numeric literals. VALUES blocks may mix term kinds freely, so a
-    mixed key set needs no fallback."""
+    strings the one IRI rule accepts (``sinks.IRI_PATTERN``, whose
+    forbidden characters keep a value inside its brackets) become
+    ``<iri>``, every other string a quoted literal with ``\\`` and
+    ``"`` escaped, bools/ints/floats bare numeric literals. VALUES
+    blocks may mix term kinds freely, so a mixed key set needs no
+    fallback."""
     if isinstance(key, bool):
         return "true" if key else "false"
     if isinstance(key, (int, float)):
         return repr(key)
     s = str(key)
-    if s.startswith(_IRI_SCHEMES) and not (set(s) & _IRI_FORBIDDEN):
+    if re.match(IRI_PATTERN, s):
         return f"<{s}>"
     escaped = (
         s.replace("\\", "\\\\")

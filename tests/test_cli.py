@@ -3,14 +3,7 @@ shape, README.md:205-219)."""
 
 from __future__ import annotations
 
-from ontario_spark.cli import run, sparql_json_term, to_sparql_json
-
-
-def test_sparql_json_terms():
-    assert sparql_json_term("http://x.ex/a") == {"type": "uri", "value": "http://x.ex/a"}
-    assert sparql_json_term("plain") == {"type": "literal", "value": "plain"}
-    assert sparql_json_term("_:b0") == {"type": "bnode", "value": "b0"}
-    assert sparql_json_term(None) is None
+from ontario_spark.cli import run
 
 
 def test_cli_run_end_to_end(spark, sf_small, tmp_path):

@@ -138,6 +138,22 @@ def test_partition_keeping_pin_needs_a_scope(spark):
         persist.pin(spark.range(3), truncate=False)
 
 
+def test_truncating_pin_fallback_outside_a_scope_is_cache_owned(
+    spark, monkeypatch, persisted_frames
+):
+    """When ``localCheckpoint`` raises outside a ``pinned()`` scope, the
+    persisted fallback belongs to a ``FrameCache``, not to nobody."""
+
+    def refuse(self, *args, **kwargs):
+        raise RuntimeError("checkpoint rewrite failed")
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", refuse)
+    pinned = persist.pin(spark.range(4), truncate=True)
+    assert pinned.count() == 4 and _live(pinned)
+    assert id(pinned) in _cache_owned()
+    _assert_owned(persisted_frames)
+
+
 def test_bm25_rebuilds_per_doc_frame_after_clear_cache(spark, frames):
     """``clearCache()`` drops a frame's data while ``is_cached`` stays
     true; a cache hit must persist the frame again rather than hand

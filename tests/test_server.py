@@ -227,19 +227,20 @@ def test_unknown_format_is_400(server):
     assert ei.value.code == 400
 
 
+def _frame(spark, rows, ddl):
+    """A one-partition frame, so ``toLocalIterator`` keeps row order."""
+    return spark.createDataFrame(rows, ddl).coalesce(1)
+
+
 def test_csv_quoting_and_tsv_escapes(spark):
     """RFC 4180 quoting and TSV ECHAR escapes on adversarial values."""
-    from ontario_spark.sinks import sparql_csv_chunks, sparql_tsv_chunks
+    from ontario_spark.sinks import stream
 
-    rows = [
-        {"v": 'a,"b"\nc'},
-        {"v": "tab\there"},
-        {"v": None},
-    ]
-    csv_out = "".join(sparql_csv_chunks(iter(rows), ["v"]))
+    df = _frame(spark, [('a,"b"\nc',), ("tab\there",), (None,)], "v string")
+    csv_out = "".join(stream(df, "csv"))
     assert '"a,""b""\nc"' in csv_out
     assert csv_out.endswith("\r\n")
-    tsv_out = "".join(sparql_tsv_chunks(iter(rows), ["v"]))
+    tsv_out = "".join(stream(df, "tsv"))
     assert '"tab\\there"' in tsv_out
     assert tsv_out.splitlines()[3] == ""  # unbound → empty field
 
@@ -373,7 +374,7 @@ def test_406_message_formats_all_serve_200(server):
         # negotiation is query-form-aware: a graph format needs a
         # graph query to be on offer (a SELECT simply keeps its
         # default for an N-Triples Accept)
-        query = CONSTRUCT_QUERY if fmt in sinks.GRAPH_SERIALIZERS else QUERY
+        query = CONSTRUCT_QUERY if fmt in sinks.GRAPH_FORMATS else QUERY
         req = Request(
             f"http://127.0.0.1:{server.port}/sparql?"
             + urlencode({"query": query}),
@@ -386,38 +387,35 @@ def test_406_message_formats_all_serve_200(server):
     # and ?format= accepts every registered format key (graph formats
     # against a graph query)
     for fmt in sinks.RESULT_MIME:
-        query = CONSTRUCT_QUERY if fmt in sinks.GRAPH_SERIALIZERS else QUERY
+        query = CONSTRUCT_QUERY if fmt in sinks.GRAPH_FORMATS else QUERY
         q = urlencode({"query": query, "format": fmt})
         ctype, _ = _get_raw(f"http://127.0.0.1:{server.port}/sparql?{q}")
         assert ctype.split(";")[0] == sinks.RESULT_MIME[fmt].split(";")[0]
 
 
 def test_format_registries_consistent():
-    """Drift guard (the round-7 failure class): the mime table, the
-    serializer table, the Accept map, and the preference order must
-    cover each other — a format advertised anywhere must be servable
-    everywhere."""
+    """Drift guard (the round-7 failure class): the format table, the
+    Accept map, and the preference order must cover each other — a
+    format advertised anywhere must be servable everywhere."""
     from ontario_spark import sinks
     from ontario_spark.server import _ACCEPT_FORMATS, _FORMAT_PREF
 
-    assert set(sinks.RESULT_MIME) == set(sinks.RESULT_SERIALIZERS) | {
-        "json"
-    } | set(sinks.GRAPH_SERIALIZERS)
+    assert set(sinks.RESULT_MIME) == set(sinks.FORMATS)
     assert set(_ACCEPT_FORMATS.values()) <= set(sinks.RESULT_MIME)
     assert set(_ACCEPT_FORMATS.values()) <= set(_FORMAT_PREF)
     assert set(_FORMAT_PREF) == set(sinks.RESULT_MIME)
-    # per-query-form tables (round-9): boolean serializers shadow
+    # per-query-form tables (round-9): boolean documents shadow
     # bindings formats; graph formats are disjoint from bindings; every
     # form table only names registered formats
     from ontario_spark.server import _FORM_FORMATS
 
-    assert set(sinks.BOOLEAN_SERIALIZERS) <= set(sinks.RESULT_SERIALIZERS)
-    assert not set(sinks.GRAPH_SERIALIZERS) & set(sinks.RESULT_SERIALIZERS)
+    assert set(sinks.BOOLEAN_DOCS) <= set(sinks.FORMATS) - sinks.GRAPH_FORMATS
+    assert sinks.GRAPH_FORMATS == {"nt", "ttl"}
     for form, fmts in _FORM_FORMATS.items():
         assert fmts <= set(sinks.RESULT_MIME), form
-    assert _FORM_FORMATS["ask"] - {"json"} <= set(sinks.BOOLEAN_SERIALIZERS)
+    assert _FORM_FORMATS["ask"] - {"json"} <= set(sinks.BOOLEAN_DOCS)
     assert _FORM_FORMATS["ask"].isdisjoint(sinks.ASK_UNSUPPORTED)
-    assert set(sinks.GRAPH_SERIALIZERS) <= _FORM_FORMATS["construct"]
+    assert sinks.GRAPH_FORMATS <= _FORM_FORMATS["construct"]
 
 
 def test_ask_accept_w3c_json_boolean_document(server):
@@ -524,20 +522,21 @@ def test_select_accept_ntriples_keeps_default(server):
         r.read()
 
 
-def test_srj_serializer_unit():
-    """sparql_srj_chunks: empty results, unbound variables, comma
+def test_srj_serializer_unit(spark):
+    """The srj document: empty results, unbound variables, comma
     placement (round-7 advice: the serializer shipped untested)."""
-    from ontario_spark.sinks import sparql_srj_chunks
+    from ontario_spark.sinks import stream
 
-    empty = json.loads("".join(sparql_srj_chunks(iter([]), ["a", "b"])))
+    ddl = "a string, b string"
+    empty = json.loads("".join(stream(_frame(spark, [], ddl), "srj")))
     assert empty == {"head": {"vars": ["a", "b"]}, "results": {"bindings": []}}
 
     rows = [
-        {"a": "http://x/1", "b": None},  # unbound b → omitted
-        {"a": "lit", "b": "_:n0"},
-        {"a": None, "b": None},  # fully unbound row → {}
+        ("http://x/1", None),  # unbound b → omitted
+        ("lit", "_:n0"),
+        (None, None),  # fully unbound row → {}
     ]
-    doc = json.loads("".join(sparql_srj_chunks(iter(rows), ["a", "b"])))
+    doc = json.loads("".join(stream(_frame(spark, rows, ddl), "srj")))
     b = doc["results"]["bindings"]
     assert len(b) == 3
     assert b[0] == {"a": {"type": "uri", "value": "http://x/1"}}
@@ -545,48 +544,48 @@ def test_srj_serializer_unit():
     assert b[2] == {}
 
 
-def test_error_terminators_close_payloads_well_formed():
+def test_error_terminators_close_payloads_well_formed(spark):
     """Each streaming JSON format's mid-stream error terminator must
     close ITS nesting as well-formed JSON (round-8: the old shared
     terminator produced malformed srj bodies)."""
     from ontario_spark.server import SparqlHTTPServer
-    from ontario_spark.sinks import sparql_srj_chunks
+    from ontario_spark.sinks import stream
 
-    rows = [{"v": "x"}]
+    df = _frame(spark, [("x",)], "v string")
     # srj: prefix + one row, then the terminator
-    srj_parts = list(sparql_srj_chunks(iter(rows), ["v"]))[:-1]
+    srj_parts = list(stream(df, "srj"))[:-1]
     term = SparqlHTTPServer._ERR_TERMINATORS["srj"] % json.dumps("boom")
     doc = json.loads("".join(srj_parts) + term)
     assert doc["error"] == "boom" and doc["truncated"] is True
     assert doc["results"]["bindings"][0]["v"]["value"] == "x"
-    # legacy shape: emulate _blocking_chunks' frame
-    legacy = (
-        '{"vars": ["v"], "result": [{"v": {"type": "literal", "value": "x"}}'
-        + SparqlHTTPServer._ERR_TERMINATORS["json"] % json.dumps("boom")
+    # legacy shape: header + one row, then the terminator
+    legacy = "".join(list(stream(df, "json"))[:-1]) + (
+        SparqlHTTPServer._ERR_TERMINATORS["json"] % json.dumps("boom")
     )
     doc = json.loads(legacy)
     assert doc["error"] == "boom" and doc["result"][0]["v"]["value"] == "x"
 
 
-class _FakeRaisingDF:
-    """Engine stand-in: one row then a mid-stream failure — exercises
-    the chunked error path over real HTTP without a Spark plan that
-    fails lazily on cue."""
+class _RaisingEngine:
+    """Engine stand-in answering every query with a two-partition frame
+    whose second partition fails lazily — exercises the chunked error
+    path over real HTTP after one row has gone out."""
 
-    columns = ["v"]
+    def __init__(self, spark):
+        from pyspark.sql import functions as F
 
-    def toLocalIterator(self):
-        yield {"v": "http://x/1"}
-        raise RuntimeError("mid-stream boom")
+        self.df = spark.range(0, 2, 1, 2).select(
+            F.when(F.col("id") == 0, F.lit("http://x/1"))
+            .otherwise(F.raise_error(F.lit("mid-stream boom")))
+            .alias("v")
+        )
 
-
-class _FakeEngine:
     def query(self, text, default_graph_uris=None, named_graph_uris=None):
-        return _FakeRaisingDF()
+        return self.df
 
 
-def test_srj_mid_stream_error_stays_well_formed_http():
-    srv = SparqlHTTPServer(_FakeEngine()).start()
+def test_srj_mid_stream_error_stays_well_formed_http(spark):
+    srv = SparqlHTTPServer(_RaisingEngine(spark)).start()
     try:
         for fmt in ("srj", "json"):
             q = urlencode({"query": "SELECT ?v WHERE {}", "format": fmt})
