@@ -76,12 +76,20 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
     """Driver-side ``rows`` (tuples in ``schema`` column order) as a
-    DataFrame typed by the DDL ``schema``. The rows travel as a pyarrow
-    Table, which Spark turns into a JVM ``LocalRelation`` with known
-    size stats: scanning it never starts a Python worker, unlike the
-    row path's ``LogicalRDD`` over a pickled ``PythonRDD`` (~0.2 s per
-    Python task on a 4-core host, paid by every job that scans the
-    frame).
+    one-partition DataFrame typed by the DDL ``schema``. The rows travel
+    as a pyarrow Table, which Spark turns into a JVM ``LocalRelation``
+    with known size stats: scanning it never starts a Python worker,
+    unlike the row path's ``LogicalRDD`` over a pickled ``PythonRDD``
+    (~0.2 s per Python task on a 4-core host, paid by every job that
+    scans the frame).
+
+    One partition, because the rows are already whole in driver memory.
+    A scan would otherwise slice them into ``defaultParallelism``
+    partitions, and an answer streamed from that slicing through
+    ``toLocalIterator`` pays one serial Spark job per slice (~65 ms
+    each on a 4-core host) for no parallel work. ``coalesce(1)`` is a
+    ``Repartition 1, false``: no exchange, and an empty fetch still
+    folds to an empty ``LocalRelation``.
 
     Timestamp columns are built tz-naive and localized with the session
     time zone, as the row path reads a naive ``datetime``. A schema
@@ -92,7 +100,7 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
 
     struct = StructType.fromDDL(schema)
     if not struct.fields:
-        return spark.range(len(rows)).select()
+        return spark.range(0, len(rows), 1, 1).select()
     types = [
         pa.timestamp("us") if pa.types.is_timestamp(f.type) else f.type
         for f in to_arrow_schema(struct)
@@ -102,4 +110,4 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
         [pa.array(c, type=t) for c, t in zip(columns, types)],
         names=struct.names,
     )
-    return spark.createDataFrame(table, schema=struct)
+    return spark.createDataFrame(table, schema=struct).coalesce(1)

@@ -418,9 +418,11 @@ class SparqlHTTPServer:
             err_term = None
         else:
             # the blocking legacy shape streams rows through
-            # toLocalIterator() one partition at a time, never a
-            # driver-side collect() (the reference Flask app drains its
-            # whole queue into one response, app/query.py:147)
+            # toLocalIterator(): one job per partition, holding only that
+            # partition on the driver, never a driver-side collect() (the
+            # reference Flask app drains its whole queue into one
+            # response, app/query.py:147); driver-fetched source rows
+            # are one partition, so their answer is one result job
             chunks = sinks.stream(df, fmt, t0)
             err_term = self._ERR_TERMINATORS.get(fmt)
         if nonblocking:

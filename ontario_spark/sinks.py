@@ -272,7 +272,13 @@ def stream(df: DataFrame, fmt: str, t0: "float | None" = None):
     chunk per solution fetched through ``toLocalIterator()``, then the
     footer. The variables are ``df``'s columns; the projection is
     built and analysed here, before the first chunk. ``t0`` anchors
-    the legacy shape's ``execTime``/``firstResult``."""
+    the legacy shape's ``execTime``/``firstResult``.
+
+    Driver memory is bounded by one partition: ``toLocalIterator``
+    runs one job per partition, serially, and holds only that
+    partition. Rows a source already returned to the driver are one
+    partition (``data.local_frame``), so an answer over them streams
+    in one result job; a lake-rooted answer keeps its partitioning."""
     spec, cols, rows = FORMATS[fmt], df.columns, lines(df, fmt)
     t0 = time.perf_counter() if t0 is None else t0
 

@@ -153,22 +153,3 @@ def bound_join_fetch(
     ]
     schema = ", ".join(f"{v} string" for v in remote_vars)
     return local_frame(spark, rows, schema)
-
-
-def bound_join(
-    spark: SparkSession,
-    build: DataFrame,
-    join_var: str,
-    remote_query: str,
-    remote_vars: list[str],
-    executor: RemoteExecutor,
-    how: str = "inner",
-    **kw,
-) -> DataFrame:
-    """Full dependent join: fetch the matching remote slice, then join
-    locally (Catalyst picks broadcast for the typically-small fetched
-    side)."""
-    fetched = bound_join_fetch(
-        spark, build, join_var, remote_query, remote_vars, executor, **kw
-    )
-    return build.join(fetched, on=join_var, how=how)

@@ -22,10 +22,6 @@ import json
 from collections.abc import Callable, Iterator
 from urllib.parse import urlencode
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ontario_spark.data import local_frame
-
 # fetcher: (endpoint_url, query_text) -> SPARQL-JSON result dict
 Fetcher = Callable[[str, str], dict]
 
@@ -138,25 +134,6 @@ def paged_bindings(
         f"page_size={page_size}; raise the limits (silent truncation "
         "would be a wrong answer)"
     )
-
-
-def endpoint_df(
-    spark: SparkSession,
-    endpoint: str,
-    query: str,
-    variables: list[str],
-    page_size: int = 10000,
-    fetcher: Fetcher = http_fetcher,
-) -> DataFrame:
-    """Paged fetch → DataFrame with one string column per variable."""
-    rows = [
-        tuple(b.get(v) for v in variables)
-        for b in paged_bindings(
-            endpoint, query, page_size, fetcher, order_vars=variables
-        )
-    ]
-    schema = ", ".join(f"{v} string" for v in variables)
-    return local_frame(spark, rows, schema)
 
 
 def sharded_queries(query: str, shard_var: str, n_shards: int) -> list[str]:

@@ -292,7 +292,7 @@ def test_bound_join_mixed_keys_roundtrip(spark):
     IRI batch were emitted as malformed IRIs and dropped)."""
     import re
 
-    from ontario_spark.sources.pushdown import bound_join
+    from ontario_spark.sources.pushdown import bound_join_fetch
 
     data = {
         "http://ex.org/r/1": "one",
@@ -312,9 +312,9 @@ def test_bound_join_mixed_keys_roundtrip(spark):
         return [{"k": k, "v": data[k]} for k in keys if k in data]
 
     build = spark.createDataFrame([(k,) for k in data], "k string")
-    out = bound_join(spark, build, "k", "SELECT ?k ?v WHERE { ?k ex:p ?v }",
-                     ["k", "v"], endpoint, window_size=2)
-    got = {(r["k"], r["v"]) for r in out.collect()}
+    fetched = bound_join_fetch(spark, build, "k", "SELECT ?k ?v WHERE { ?k ex:p ?v }",
+                               ["k", "v"], endpoint, window_size=2)
+    got = {(r["k"], r["v"]) for r in build.join(fetched, on="k").collect()}
     assert got == {(k, v) for k, v in data.items()}
     assert len(seen) == 2  # 3 keys, window 2 -> 2 batches
 
@@ -403,6 +403,45 @@ def test_optional_remote_star_bound_join(spark, sf_small):
     assert remote, f"outer keys not pushed into OPTIONAL star: {seen}"
     local = SparqlEngine(spark, tpch_catalog(sf_small)).query(q).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, local))
+
+
+def test_streamed_bound_join_answer_is_one_result_job(spark, sf_small):
+    """A bound-join answer over driver-fetched rows streams through
+    ``sinks.stream`` in at most two jobs (broadcast + result): the
+    fetched rows are one partition, so ``toLocalIterator`` does not
+    start one job per ``defaultParallelism`` slice."""
+    import json
+    import uuid
+
+    from ontario_spark import sinks
+
+    cat = tpch_federated_catalog(sf_small)
+    fetched: list[dict] = []
+    for name, ex in list(cat.executors.items()):
+        def wrap(q, _ex=ex):
+            rows = _ex(q)
+            if "IN (" in q:
+                fetched.extend(rows)
+            return rows
+        cat.executors[name] = wrap
+    df = SparqlEngine(spark, cat).query(
+        PFX
+        + """SELECT ?name ?nname WHERE {
+              ?c a ex:Customer ; ex:name ?name ; ex:nation ?n .
+              ?n a ex:Nation ; ex:name ?nname .
+              FILTER (STRSTARTS(?nname, "NATION_1")) }"""
+    )
+    sc = spark.sparkContext
+    assert len(fetched) >= 2 * sc.defaultParallelism
+    chunks = sinks.stream(df, "json")
+    group = f"stream-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        doc = json.loads("".join(chunks))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert doc["totalRows"] == len(doc["result"]) == len(fetched)
 
 
 def test_fetcher_retries_transient_failures():

@@ -1,7 +1,8 @@
 """``data.local_frame``: driver-side rows enter Spark as an Arrow-built
-``LocalRelation`` with exactly the rows the classic row path
-(``spark.createDataFrame(rows, schema)``) produces, and the federation
-entry points that turn fetched rows into frames plan the same way."""
+``LocalRelation`` in one partition, with exactly the rows the classic
+row path (``spark.createDataFrame(rows, schema)``) produces, and the
+federation entry points that turn fetched rows into frames plan the
+same way."""
 
 from __future__ import annotations
 
@@ -62,6 +63,18 @@ def test_local_frame_matches_row_path(spark, case):
 def test_local_frame_without_columns_keeps_row_count(spark):
     assert local_frame(spark, [(), ()], "").count() == 2
     assert local_frame(spark, [], "").count() == 0
+    assert local_frame(spark, [()] * 20, "").rdd.getNumPartitions() == 1
+
+
+@pytest.mark.parametrize("n", [0, 1, 3, 1000])
+def test_local_frame_is_one_partition(spark, n):
+    """Driver-held rows are one partition, so streaming them through
+    ``toLocalIterator`` is one job, not one per ``defaultParallelism``
+    slice; the plan is still a ``LocalRelation``."""
+    df = local_frame(spark, [(str(i), i) for i in range(n)], "s string, n long")
+    assert df.rdd.getNumPartitions() == 1
+    assert_local(df)
+    assert df.count() == n
 
 
 def test_rows_to_bframe_plans_local(spark):

@@ -9,12 +9,9 @@ import shutil
 
 import pytest
 
-from ontario_spark.sources.pushdown import bound_join, instantiate_query
-from ontario_spark.sources.sparql_endpoint import (
-    endpoint_df,
-    paged_bindings,
-    sharded_queries,
-)
+from ontario_spark.data import local_frame
+from ontario_spark.sources.pushdown import bound_join_fetch, instantiate_query
+from ontario_spark.sources.sparql_endpoint import paged_bindings, sharded_queries
 
 # --- endpoint bridge ----------------------------------------------------
 
@@ -54,11 +51,20 @@ def test_paged_fetch_until_short_page(spark):
     assert out[0] == {"x": "0", "y": "v0"}
 
 
-def test_endpoint_df(spark):
+def test_paged_bindings_to_local_frame(spark):
     data = [{"x": str(i), "y": f"v{i}"} for i in range(7)]
-    df = endpoint_df(spark, "http://fake", "SELECT ?x ?y WHERE { ?s ?p ?o }", ["x", "y"], 10, fake_endpoint(data))
+    f = fake_endpoint(data)
+    rows = [
+        (b["x"], b["y"])
+        for b in paged_bindings(
+            "http://fake", "SELECT ?x ?y WHERE { ?s ?p ?o }", 10, f,
+            order_vars=["x", "y"],
+        )
+    ]
+    df = local_frame(spark, rows, "x string, y string")
     assert df.count() == 7
     assert df.columns == ["x", "y"]
+    assert all("\nORDER BY ?x ?y\nLIMIT 10 OFFSET " in q for q in f.calls)
 
 
 def test_sharded_queries_disjoint():
@@ -98,11 +104,11 @@ def test_bound_join_batches_and_joins(spark):
         keys = [t[1:-1] for t in query.split("{", 2)[2].split("}")[0].split()]
         return [{"k": k, "name": remote_rows[k]} for k in keys if k in remote_rows]
 
-    out = bound_join(
+    fetched = bound_join_fetch(
         spark, build, "k", "SELECT ?k ?name WHERE { ?k <p> ?name }",
         ["k", "name"], executor,
     )
-    rows = out.collect()
+    rows = build.join(fetched, on="k").collect()
     # 45 distinct keys → 3 VALUES batches of ≤20 (reference WINDOW_SIZE)
     assert len(executed) == 3
     assert len(rows) == 23  # even ids 0..44
