@@ -672,3 +672,17 @@ class BFrame:
             {v: out.meta[v] for v in variables},
             out.maybe_null & set(variables),
         )
+
+
+@dataclass
+class HeldFrame(BFrame):
+    """A BFrame whose rows are also held on the driver. When ``whole``,
+    ``rows`` are all of them, collected once and re-entered as ``df``
+    through ``data.local_frame`` (one partition), so key lists come
+    from ``rows`` with no Spark job. Otherwise ``df`` is the lazy frame
+    and ``rows`` only its first rows: they settle a key list that
+    already overflows, and nothing else. Frames derived from it are
+    plain BFrames; only the held frame itself carries rows."""
+
+    rows: list = field(default_factory=list, repr=False)
+    whole: bool = True

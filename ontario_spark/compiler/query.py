@@ -35,7 +35,14 @@ from ontario_spark.compiler.filters import (
     compile_aggregate,
     is_aggregate,
 )
-from ontario_spark.compiler.frame import BFrame, KEYED, LEXICAL, TermMeta
+from ontario_spark.compiler.frame import (
+    KEYED,
+    LEXICAL,
+    BFrame,
+    HeldFrame,
+    TermMeta,
+    key_cols,
+)
 from ontario_spark.compiler.star import compile_star
 from ontario_spark.data import local_frame
 from ontario_spark.persist import pin
@@ -221,6 +228,64 @@ def _plan_vars(plan) -> set[str]:
     for t in plan.star.triples:
         out |= t.variables()
     return out
+
+
+def _key_column(bf: BFrame, var: str) -> "tuple[str, str | None] | None":
+    """The column of ``bf`` a bound-join key list for ``var`` reads,
+    with its template shape (``None`` for lexical values), or ``None``
+    when ``var`` cannot feed one: a var that may be unbound on the
+    build side (``maybe_null``) joins its NULL rows as §10.2 wildcards
+    against EVERY remote row, so pruning the fetch to the observed
+    bound keys would silently drop those matches; multi-key templates
+    have no single key column."""
+    from ontario_spark.sources.translate import tpl_shape
+
+    if var in bf.maybe_null:
+        return None
+    m = bf.meta[var]
+    if m.kind == KEYED and m.nkeys == 1:
+        return key_cols(var, 1)[0], tpl_shape(m.template.raw)
+    if m.kind == LEXICAL:
+        return var, None
+    return None
+
+
+def _keys(build: BFrame, col: str, max_keys: int) -> list | None:
+    """``build``'s key list for ``col`` under the one key rule
+    (``pushdown.distinct_keys``): read from the driver rows of a held
+    frame, else computed by Spark (``observed_keys``, two jobs). The
+    first rows of a frame too large to hold already answer when they
+    hold more than ``max_keys`` distinct keys: so does the whole."""
+    from ontario_spark.sources.pushdown import distinct_keys, observed_keys
+
+    if isinstance(build, HeldFrame):
+        keys = distinct_keys((r[col] for r in build.rows), max_keys)
+        if build.whole or keys is None:
+            return keys
+    return observed_keys(build.df, col, max_keys)
+
+
+def _one_partition(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan is one partition (planned, not
+    run)."""
+    return (
+        df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
+        == 1
+    )
+
+
+def _join_fetched(bf: BFrame | None, fetched: BFrame, held: bool) -> BFrame:
+    """``bf ⋈ fetched`` (just ``fetched`` without a build side). When
+    the build side is driver-held and both sides are one partition, a
+    ``shuffle_hash`` hint keeps the join inside the consumer's job with
+    no exchange; Spark's default plan for two small local frames
+    broadcasts one of them in a job of its own. With a multi-partition
+    side the hint would shuffle both, so that join keeps the default."""
+    if bf is None:
+        return fetched
+    if held and _one_partition(bf.df) and _one_partition(fetched.df):
+        bf = BFrame(bf.df.hint("shuffle_hash"), bf.meta, bf.maybe_null)
+    return bf.join(fetched, "inner")
 
 
 class QueryCompileError(Exception):
@@ -913,6 +978,7 @@ class SparqlEngine:
         # reference's NestedHashJoinFilter posture, SURVEY.md §2.1)
         services = [e for e in g.elements if isinstance(e, ServiceBlock)]
         bf = self._join_greedy(frames) if frames else None
+        held: HeldFrame | None = None
         if bf is not None and (remote_star_plans or services):
             # Apply already-answerable FILTERs to the build side BEFORE
             # bound-join key collection, so the observed key set is the
@@ -936,25 +1002,58 @@ class SparqlEngine:
                             )
                         except Exception:
                             pass  # applied in the final filter pass
+            # the SERVICE join compares shared vars lexically anyway, so
+            # a keyed one is formatted before the hold and its key list
+            # comes from the held rows (vars a remote star also shares
+            # stay keyed: that star's IN-list pushes raw keys)
+            star_vars = set().union(*map(_plan_vars, remote_star_plans))
+            svc_vars = set().union(*(_pattern_vars(sb.block) for sb in services))
+            for v in sorted(
+                (svc_vars & bf.variables) - star_vars - bf.maybe_null
+            ):
+                bf = bf.materialize(v)
+            # Hold the build side ONCE, as Ontario's NestedHashJoinFilter
+            # buffers its left tuples: one bounded collect feeds the key
+            # list of every remote star and SERVICE block of this group
+            # in Python, and the rows re-enter Spark as one partition
+            # that joins the fetched rows inside the result job. A lazy
+            # build side pays two jobs per key list (distinct, limit,
+            # collect) and a broadcast job when the final plan scans it
+            # again. Only a frame some key list reads is held, and only
+            # up to pushdown.HOLD_ROWS rows; past that bf stays lazy and
+            # its first rows only settle key lists that overflow.
+            if any(
+                _key_column(bf, v)
+                for v in (star_vars | svc_vars) & bf.variables
+            ):
+                bf = held = self._hold(bf)
         for plan in remote_star_plans:
             conds = {v: list(cs) for v, cs in remote_conds.items()}
-            # bound-join key sources: this group's own build frame, the
-            # OUTER frame when this group hangs off one (OPTIONAL /
-            # MINUS / EXISTS — NestedHashOptionalFilter posture: rows
-            # that can't match the outer keys can't affect the result),
-            # and the trailing-VALUES hint (never-UNDEF columns only)
-            for build in (bf, key_hint, values_hint):
-                if build is None:
+            # bound-join key sources: the held build side for the vars
+            # it binds (a superset of the keys the joined frame has
+            # left — pushdown only narrows transfer), this group's
+            # joined frame for the rest, the OUTER frame when this
+            # group hangs off one (OPTIONAL / MINUS / EXISTS —
+            # NestedHashOptionalFilter posture: rows that can't match
+            # the outer keys can't affect the result), and the
+            # trailing-VALUES hint (never-UNDEF columns only)
+            pvars = _plan_vars(plan)
+            held_vars = held.variables if held is not None else set()
+            for build, svars in (
+                (held, pvars),
+                (bf, pvars - held_vars),
+                (key_hint, pvars),
+                (values_hint, pvars),
+            ):
+                if build is None or not svars & build.variables:
                     continue
-                for v, cs in self._bound_key_conds(
-                    build, _plan_vars(plan)
-                ).items():
+                for v, cs in self._bound_key_conds(build, svars).items():
                     conds.setdefault(v, []).extend(cs)
             f = compile_star(self.spark, self.catalog, plan, conds)
-            bf = f if bf is None else bf.join(f, "inner")
+            bf = _join_fetched(bf, f, held is not None and held.whole)
         for sb in services:
-            svc = self._service(sb, bf, values_hint)
-            bf = svc if bf is None else bf.join(svc)
+            svc = self._service(sb, (held, bf, values_hint))
+            bf = _join_fetched(bf, svc, held is not None and held.whole)
         # UNDEF-bearing VALUES join AFTER the remote-star/SERVICE
         # frames (round-8 review fix: joining the NULL-encoded frame
         # first both equi-joined the wildcard rows to nothing AND let
@@ -1132,8 +1231,7 @@ class SparqlEngine:
     def _service(
         self,
         sb: ServiceBlock,
-        build: BFrame | None = None,
-        values_hint: BFrame | None = None,
+        key_sources: "tuple[BFrame | None, ...]",
     ) -> BFrame:
         """SERVICE <endpoint> { pattern }: ship the pattern as SPARQL
         text (the reference's mediator↔wrapper contract — SPARQL in,
@@ -1145,17 +1243,18 @@ class SparqlEngine:
         partial FILTER support). SILENT → endpoint failure yields an
         empty frame instead of an error.
 
-        Bound-join pushdown: when the already-joined local frame
-        (``build``) shares a variable with the pattern, its distinct
+        Bound-join pushdown: when a key source (the group's held build
+        side, its joined local frame, the trailing-VALUES hint — first
+        one wins) shares a variable with the pattern, its distinct
         observed keys ship as VALUES batches (window 20, the
         reference's NestedHashJoinFilter WINDOW_SIZE) so the endpoint
         returns only joinable bindings — transfer bounded by local
-        keys, not remote cardinality. Past ``max_keys`` distinct keys
-        the full query goes out instead (same fallback posture as the
-        reference's non-selective path)."""
+        keys, not remote cardinality. Past ``SERVICE_MAX_KEYS``
+        distinct keys the full query goes out instead (same fallback
+        posture as the reference's non-selective path)."""
         from ontario_spark.sources.pushdown import (
+            SERVICE_MAX_KEYS,
             fetch_all,
-            observed_keys,
             values_batches,
         )
         from ontario_spark.sources.sparql_endpoint import paged_bindings
@@ -1190,18 +1289,16 @@ class SparqlEngine:
                 sb.endpoint, q, full_terms=True, order_vars=variables
             )
 
-        max_keys = 100_000
         queries = [text]
         # bound-join pushdown must use a var that is never unbound on
         # the build side: a maybe_null var's NULL rows join as §10.2
         # wildcards against EVERY remote binding, so batching only the
         # observed bound keys would under-fetch. All shared vars
         # flagged → no pushdown (unfiltered fetch, still correct).
-        # Key sources in preference order: the local joined frame
-        # (usually the tighter set), else the trailing-VALUES hint
-        # (round-9 — its columns are never-UNDEF by construction).
+        # The trailing-VALUES hint's columns are never-UNDEF by
+        # construction.
         shared, skey = [], None
-        for src in (build, values_hint):
+        for src in key_sources:
             if src is None:
                 continue
             cand = sorted(
@@ -1214,7 +1311,7 @@ class SparqlEngine:
                 break
         if shared:
             v = shared[0]
-            keys = observed_keys(skey.materialize(v).df, v, max_keys)
+            keys = _keys(skey.materialize(v), v, SERVICE_MAX_KEYS)
             if keys is not None:
                 # each key classified IRI-vs-literal individually —
                 # mixed/typed key sets are fine (VALUES terms may differ
@@ -1588,36 +1685,45 @@ class SparqlEngine:
         """Observed build-side join keys for a remote star, as 'in'
         RemoteConds: single-column template-keyed vars push their RAW
         keys (valid only against a same-shaped remote template —
-        checked in the translator), lexical vars push lexical values.
+        checked in the translator), lexical vars push lexical values
+        (eligibility: ``_key_column``). A held ``bf`` gives its keys
+        from the driver rows, a lazy one through a Spark pass.
         Bounded by ``max_keys`` (IN-list size limit); past it the
         remote query goes out unfiltered, the reference's
-        non-selective fallback. The local join afterwards is unchanged,
-        so pushdown can only reduce transfer, never change the
-        answer — which requires SKIPPING vars that can be UNBOUND on
-        the build side (``maybe_null``): their NULL rows join as §10.2
-        wildcards against EVERY remote row, so pruning the fetch to the
-        observed bound keys would silently drop those matches (the same
-        failure mode the deferred-UNDEF-VALUES ordering guards
-        against)."""
-        from ontario_spark.compiler.frame import key_cols
-        from ontario_spark.sources.pushdown import observed_keys
-        from ontario_spark.sources.translate import RemoteCond, tpl_shape
+        non-selective fallback. No keys give an empty IN-list, and the
+        star skips its fetch (the join with an empty build side is
+        empty). The local join afterwards is unchanged, so pushdown
+        can only reduce transfer, never change the answer."""
+        from ontario_spark.sources.translate import RemoteCond
 
         out: dict[str, list[RemoteCond]] = {}
         for v in sorted(star_vars & bf.variables):
-            if v in bf.maybe_null:
+            kc = _key_column(bf, v)
+            if kc is None:
                 continue
-            m = bf.meta[v]
-            if m.kind == KEYED and m.nkeys == 1:
-                col, tpl = key_cols(v, 1)[0], tpl_shape(m.template.raw)
-            elif m.kind == LEXICAL:
-                col, tpl = v, None
-            else:
-                continue
-            keys = observed_keys(bf.df, col, max_keys)
-            if keys:
-                out[v] = [RemoteCond("in", tuple(keys), tpl)]
+            keys = _keys(bf, kc[0], max_keys)
+            if keys is not None:
+                out[v] = [RemoteCond("in", tuple(keys), kc[1])]
         return out
+
+    def _hold(self, bf: BFrame) -> HeldFrame:
+        """``bf`` collected once and held: its rows on the driver and
+        the same rows back in Spark through ``data.local_frame`` (one
+        partition) with ``bf``'s schema, meta and ``maybe_null``. Past
+        ``pushdown.HOLD_ROWS`` rows the collect stops at one past the
+        cap and ``bf`` stays lazy, with those first rows attached
+        (``whole=False``)."""
+        from ontario_spark.sources.pushdown import HOLD_ROWS
+
+        rows = bf.df.limit(HOLD_ROWS + 1).collect()
+        if len(rows) > HOLD_ROWS:
+            return HeldFrame(bf.df, bf.meta, bf.maybe_null, rows, whole=False)
+        return HeldFrame(
+            local_frame(self.spark, rows, bf.df.schema),
+            bf.meta,
+            bf.maybe_null,
+            rows,
+        )
 
     def _join_greedy(self, frames: list[BFrame]) -> BFrame:
         """Greedy bushy combination preferring var-sharing joins

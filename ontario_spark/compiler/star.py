@@ -163,16 +163,25 @@ def _compile_remote(
         sql, specs = star_sql(
             [tm], star, DIALECTS[src.dstype], conditions=remote_conds
         )
-        rows = execr(sql)
+        args = (sql,)
     elif src.dstype == "mongodb":
         pipeline, specs = star_mongo(tm, star, conditions=remote_conds)
-        rows = execr(tm.source.table, pipeline)
+        args = (tm.source.table, pipeline)
     elif src.dstype == "neo4j":
         cypher, specs = star_cypher(tm, star, conditions=remote_conds)
-        rows = execr(cypher)
+        args = (cypher,)
     else:  # sparql endpoint: ship the star verbatim
         text, specs = star_sparql_text(star)
-        rows = execr(text)
+        args = (text,)
+    # An empty bound-join IN-list means the build side this star joins
+    # has no keys (only bound-join key lists are "in" conditions), so
+    # the join is empty whatever the source holds: no fetch.
+    no_keys = any(
+        c.op == "in" and not c.value
+        for cs in (remote_conds or {}).values()
+        for c in cs
+    )
+    rows = [] if no_keys else execr(*args)
     if isinstance(rows, DataFrame):
         # production executors (sources/jdbc.py) return the fetch as a
         # distributed DataFrame — lift it without a driver round-trip

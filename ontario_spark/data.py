@@ -7,6 +7,7 @@ from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -74,14 +75,17 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: "str | StructType"
+) -> DataFrame:
     """Driver-side ``rows`` (tuples in ``schema`` column order) as a
-    one-partition DataFrame typed by the DDL ``schema``. The rows travel
-    as a pyarrow Table, which Spark turns into a JVM ``LocalRelation``
-    with known size stats: scanning it never starts a Python worker,
-    unlike the row path's ``LogicalRDD`` over a pickled ``PythonRDD``
-    (~0.2 s per Python task on a 4-core host, paid by every job that
-    scans the frame).
+    one-partition DataFrame typed by ``schema``: DDL, or the
+    ``StructType`` of the frame the rows were collected from. The rows
+    travel as a pyarrow Table, which Spark turns into a JVM
+    ``LocalRelation`` with known size stats: scanning it never starts
+    a Python worker, unlike the row path's ``LogicalRDD`` over a
+    pickled ``PythonRDD`` (~0.2 s per Python task on a 4-core host,
+    paid by every job that scans the frame).
 
     One partition, because the rows are already whole in driver memory.
     A scan would otherwise slice them into ``defaultParallelism``
@@ -96,9 +100,8 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     with no columns yields one empty row per input row."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
-    struct = StructType.fromDDL(schema)
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
     if not struct.fields:
         return spark.range(0, len(rows), 1, 1).select()
     types = [

@@ -18,11 +18,10 @@ remote query in batches, union the batch results, then join locally.
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from ontario_spark.data import local_frame
 from ontario_spark.sinks import IRI_PATTERN
 
 # executor: (query_text) -> list of solution-mapping dicts
@@ -30,6 +29,12 @@ RemoteExecutor = Callable[[str], list[dict[str, str | None]]]
 
 WINDOW_SIZE = 20  # reference default batch size
 FETCH_THREADS = 16  # concurrent remote batch fetches
+# A bound-join build side of at most this many rows is collected once
+# and held on the driver (``SparqlEngine._hold``): its rows feed every
+# key list of the group in Python and it re-enters Spark as one
+# partition. Larger build sides stay lazy and feed ``observed_keys``.
+HOLD_ROWS = 10_000
+SERVICE_MAX_KEYS = 100_000  # distinct SERVICE keys before an unfiltered fetch
 
 
 class PushdownError(Exception):
@@ -94,21 +99,42 @@ def fetch_all(executor: RemoteExecutor, queries: list[str]) -> list[dict]:
     return [b for batch in results for b in batch]
 
 
+_NAN = float("nan")
+
+
+def distinct_keys(values: Iterable, max_keys: int) -> list | None:
+    """The bound-join key rule, shared by both feeders (Spark's
+    ``observed_keys`` and a held build side's driver rows): the
+    distinct non-NULL ``values`` sorted by ``str`` (a stable batch
+    order), or ``None`` when there are more than ``max_keys`` of them.
+    NULLs are dropped BEFORE the cap, so a NULL can never mask the
+    overflow. Floats compare as Spark's ``distinct`` does: one NaN, and
+    -0.0 is 0.0."""
+    keys = list(
+        dict.fromkeys(
+            (_NAN if v != v else v + 0.0) if isinstance(v, float) else v
+            for v in values
+            if v is not None
+        )
+    )
+    return None if len(keys) > max_keys else sorted(keys, key=str)
+
+
 def observed_keys(df: DataFrame, col: str, max_keys: int) -> list | None:
-    """The distinct non-NULL values of ``df[col]``, sorted by ``str``
-    (a stable batch order), or ``None`` when there are more than
-    ``max_keys`` of them. NULLs are filtered BEFORE the limit: filtering
-    after could let a NULL row mask the ``max_keys + 1`` overflow
-    sentinel and silently drop join keys past the cap."""
-    keys = [
-        r[0]
-        for r in df.select(col)
+    """``distinct_keys`` of ``df[col]``, computed by Spark: NULLs are
+    filtered before ``limit(max_keys + 1)`` (filtering after could let
+    a NULL row take the overflow sentinel's place). Two jobs under AQE
+    (the distinct's shuffle-map stage, then the result), so it serves
+    only build sides too large to hold (``HOLD_ROWS``) and frames no
+    group holds (OPTIONAL/MINUS/EXISTS outer frames, VALUES hints)."""
+    rows = (
+        df.select(col)
         .filter(df[col].isNotNull())
         .distinct()
         .limit(max_keys + 1)
         .collect()
-    ]
-    return None if len(keys) > max_keys else sorted(keys, key=str)
+    )
+    return distinct_keys((r[0] for r in rows), max_keys)
 
 
 def values_batches(
@@ -120,36 +146,3 @@ def values_batches(
         instantiate_query(query, var, keys[i : i + window_size])
         for i in range(0, len(keys), window_size)
     ]
-
-
-def bound_join_fetch(
-    spark: SparkSession,
-    build: DataFrame,
-    join_var: str,
-    remote_query: str,
-    remote_vars: list[str],
-    executor: RemoteExecutor,
-    window_size: int = WINDOW_SIZE,
-    max_keys: int = 100_000,
-) -> DataFrame:
-    """Fetch only the remote bindings that can join: distinct build-side
-    keys → VALUES-batched remote queries (fetched concurrently) →
-    unioned DataFrame.
-
-    ``max_keys`` guards the driver: beyond it, fall back to the
-    unfiltered remote query (same fallback posture as the reference's
-    non-selective path)."""
-    keys = observed_keys(build, join_var, max_keys)
-    if keys is None:
-        queries = [remote_query]
-    else:
-        # empty (or all-NULL) build side: no batches — the inner join is
-        # empty, and an unbatched fetch would pull the whole remote
-        # relation for nothing
-        queries = values_batches(remote_query, join_var, keys, window_size)
-    rows = [
-        tuple(b.get(v) for v in remote_vars)
-        for b in fetch_all(executor, queries)
-    ]
-    schema = ", ".join(f"{v} string" for v in remote_vars)
-    return local_frame(spark, rows, schema)

@@ -286,18 +286,17 @@ def test_values_term_per_key_classification():
     assert block == 'VALUES ?k { <http://ex.org/x> "O\\"Brien" 7 }'
 
 
-def test_bound_join_mixed_keys_roundtrip(spark):
+def test_bound_join_mixed_keys_roundtrip(spark, service_fetch):
     """Mixed IRI + literal build keys all reach the endpoint and all
     matching bindings come back (previously literal keys in a mostly-
     IRI batch were emitted as malformed IRIs and dropped)."""
     import re
 
-    from ontario_spark.sources.pushdown import bound_join_fetch
-
     data = {
         "http://ex.org/r/1": "one",
         "plain key": "two",
         'quote "key"': "three",
+        **{f"k{i}": f"v{i}" for i in range(18)},
     }
     seen = []
 
@@ -312,11 +311,12 @@ def test_bound_join_mixed_keys_roundtrip(spark):
         return [{"k": k, "v": data[k]} for k in keys if k in data]
 
     build = spark.createDataFrame([(k,) for k in data], "k string")
-    fetched = bound_join_fetch(spark, build, "k", "SELECT ?k ?v WHERE { ?k ex:p ?v }",
-                               ["k", "v"], endpoint, window_size=2)
-    got = {(r["k"], r["v"]) for r in build.join(fetched, on="k").collect()}
-    assert got == {(k, v) for k, v in data.items()}
-    assert len(seen) == 2  # 3 keys, window 2 -> 2 batches
+    for held in (False, True):
+        seen.clear()
+        fetched = service_fetch(build, "?k <http://ex.org/p> ?v", endpoint, held)
+        got = {(r["k"], r["v"]) for r in build.join(fetched.df, on="k").collect()}
+        assert got == {(k, v) for k, v in data.items()}
+        assert len(seen) == 2  # 21 keys, window 20 -> 2 batches
 
 
 def test_fetch_all_is_concurrent():
@@ -407,8 +407,9 @@ def test_optional_remote_star_bound_join(spark, sf_small):
 
 def test_streamed_bound_join_answer_is_one_result_job(spark, sf_small):
     """A bound-join answer over driver-fetched rows streams through
-    ``sinks.stream`` in at most two jobs (broadcast + result): the
-    fetched rows are one partition, so ``toLocalIterator`` does not
+    ``sinks.stream`` in at most two jobs: the fetched rows and the held
+    build side are one partition each, so their join runs inside the
+    one result job (no broadcast job), and ``toLocalIterator`` does not
     start one job per ``defaultParallelism`` slice."""
     import json
     import uuid
@@ -442,6 +443,127 @@ def test_streamed_bound_join_answer_is_one_result_job(spark, sf_small):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
     assert doc["totalRows"] == len(doc["result"]) == len(fetched)
+
+
+BOUND_JOIN = PFX + """SELECT ?name ?nname WHERE {
+              ?c a ex:Customer ; ex:name ?name ; ex:nation ?n .
+              ?n a ex:Nation ; ex:name ?nname .
+              FILTER (STRSTARTS(?nname, "%s")) }"""
+
+
+def test_bound_join_request_is_two_jobs(spark, sf_small, monkeypatch):
+    """One bound-join request, built AND streamed through
+    ``sinks.stream`` under one job group, starts at most two Spark
+    jobs: the one collect of the held build side (whose rows give the
+    remote IN-list in Python) and the result job. Past ``HOLD_ROWS``
+    the lazy path still pushes the keys and the answer is identical;
+    an empty build side, held or lazy, makes no remote call."""
+    import json
+    import uuid
+
+    from ontario_spark import sinks
+    from ontario_spark.sources import pushdown
+
+    cat = tpch_federated_catalog(sf_small)
+    calls: list[str] = []
+    for name, ex in list(cat.executors.items()):
+        def spy(*args, _ex=ex):
+            calls.append(str(args[0]))
+            return _ex(*args)
+        cat.executors[name] = spy
+    eng = SparqlEngine(spark, cat)
+    # warm: a session's first read of a table runs a job of its own
+    eng.query(BOUND_JOIN % "NATION_1").collect()
+    sc = spark.sparkContext
+    group = f"request-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        df = eng.query(BOUND_JOIN % "NATION_1")
+        doc = json.loads("".join(sinks.stream(df, "json")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert any("IN (" in q for q in calls), calls
+    held = sorted(map(tuple, df.collect()))
+    assert doc["totalRows"] == len(held) > 0
+
+    # 11 nations start with NATION_1: a cap of 1 keeps the build side lazy
+    monkeypatch.setattr(pushdown, "HOLD_ROWS", 1)
+    calls.clear()
+    lazy = eng.query(BOUND_JOIN % "NATION_1").collect()
+    assert any("IN (" in q for q in calls), calls
+    assert sorted(map(tuple, lazy)) == held
+
+    for cap in (1, 10_000):
+        monkeypatch.setattr(pushdown, "HOLD_ROWS", cap)
+        calls.clear()
+        assert eng.query(BOUND_JOIN % "NO SUCH NATION").collect() == []
+        assert calls == []
+
+
+def test_over_cap_prefix_settles_overflow_without_a_job(spark, monkeypatch):
+    """Past ``HOLD_ROWS`` the build side stays lazy, but the rows the
+    hold collected already settle a key list that overflows
+    ``max_keys``, with no Spark job; any other key list still comes
+    from Spark's ``observed_keys``."""
+    import uuid
+
+    from ontario_spark.catalog.model import Catalog
+    from ontario_spark.compiler.frame import LEXICAL, BFrame, TermMeta
+    from ontario_spark.compiler.query import _keys
+    from ontario_spark.data import local_frame
+    from ontario_spark.sources import pushdown
+
+    monkeypatch.setattr(pushdown, "HOLD_ROWS", 3)
+    df = local_frame(spark, [(f"k{i}", i % 2) for i in range(6)], "k string, p long")
+    meta = {"k": TermMeta(LEXICAL), "p": TermMeta(LEXICAL)}
+    held = SparqlEngine(spark, Catalog())._hold(BFrame(df, meta))
+    assert not held.whole and len(held.rows) == 4 and held.df is df
+    sc = spark.sparkContext
+    group = f"prefix-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        assert _keys(held, "k", 2) is None  # 4 distinct keys already
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert _keys(held, "k", 10) == [f"k{i}" for i in range(6)]
+    assert _keys(held, "p", 10) == [0, 1]
+
+
+def test_key_rule_matches_spark_distinct(spark):
+    """The one key rule gives the same list from driver rows as
+    Spark's ``distinct`` does (``observed_keys``) on mixed IRI/literal
+    and typed keys, with NULLs and with the ``max_keys`` overflow."""
+    import datetime
+    from decimal import Decimal
+
+    from ontario_spark.data import local_frame
+    from ontario_spark.sources.pushdown import distinct_keys, observed_keys
+
+    nan = float("nan")
+    cases = [
+        ("k string", ["http://ex.org/a", "plain", 'q "x"', "urn:x:1",
+                      "http://ex.org/a", None, "_:b", "", "plain"]),
+        ("k bigint", [3, 1, None, 3, 2, -(2**40)]),
+        ("k int", [7, None, 7, 0]),
+        ("k double", [1.5, -0.0, 0.0, None, nan, nan, 1e7, 1e-4]),
+        ("k decimal(10,2)", [Decimal("1.50"), Decimal("-2.00"), None,
+                             Decimal("1.50")]),
+        ("k date", [datetime.date(2024, 1, 2), None,
+                    datetime.date(1999, 12, 31), datetime.date(2024, 1, 2)]),
+        # NULL with overflow: the cap is crossed whatever the NULL does
+        ("k string", [f"k{i}" for i in range(5)] + [None]),
+    ]
+    for schema, values in cases:
+        df = local_frame(spark, [(v,) for v in values], schema)
+        rows = df.collect()
+        full = observed_keys(df, "k", 100)
+        assert distinct_keys((r[0] for r in rows), 100) == full, schema
+        assert distinct_keys((r[0] for r in rows), len(full)) == full, schema
+        cap = len(full) - 1
+        assert observed_keys(df, "k", cap) is None, schema
+        assert distinct_keys((r[0] for r in rows), cap) is None, schema
 
 
 def test_fetcher_retries_transient_failures():
@@ -661,11 +783,9 @@ def test_cost_ranked_ordering_flips_in_list_direction(spark, sf_small):
 # --- round-5 sources review fixes ----------------------------------------
 
 
-def test_bound_join_fetch_empty_build_side(spark):
+def test_bound_join_fetch_empty_build_side(spark, service_fetch):
     """Empty (or all-NULL-key) build side: zero remote batches, empty
     result — review fix: ThreadPoolExecutor(max_workers=0) crashed."""
-    from ontario_spark.sources.pushdown import bound_join_fetch
-
     calls: list[str] = []
 
     def executor(q):
@@ -673,20 +793,21 @@ def test_bound_join_fetch_empty_build_side(spark):
         return [{"x": "1", "y": "a"}]
 
     empty = spark.createDataFrame([], "x string")
-    out = bound_join_fetch(spark, empty, "x", "SELECT ?x ?y WHERE { ?x ?p ?y }", ["x", "y"], executor)
-    assert out.count() == 0 and calls == []
     nulls = spark.createDataFrame([(None,), (None,)], "x string")
-    out = bound_join_fetch(spark, nulls, "x", "SELECT ?x ?y WHERE { ?x ?p ?y }", ["x", "y"], executor)
-    assert out.count() == 0 and calls == []
+    for build in (empty, nulls):
+        for held in (False, True):
+            out = service_fetch(build, "?x ?p ?y", executor, held)
+            assert out.df.count() == 0 and calls == []
 
 
-def test_bound_join_null_does_not_mask_overflow(spark):
+def test_bound_join_null_does_not_mask_overflow(spark, service_fetch, monkeypatch):
     """With max_keys exceeded AND a NULL key present, the fetch must
     fall back to the UNFILTERED remote query — review fix: filtering
     NULLs after limit() shrank the overflow sentinel away and silently
     dropped join keys."""
-    from ontario_spark.sources.pushdown import bound_join_fetch
+    from ontario_spark.sources import pushdown
 
+    monkeypatch.setattr(pushdown, "SERVICE_MAX_KEYS", 4)
     seen: list[str] = []
 
     def executor(q):
@@ -695,11 +816,14 @@ def test_bound_join_null_does_not_mask_overflow(spark):
 
     rows = [(f"k{i}",) for i in range(5)] + [(None,)]
     build = spark.createDataFrame(rows, "x string")
-    bound_join_fetch(
-        spark, build, "x", "SELECT ?x WHERE { ?x a ?t }", ["x"],
-        executor, max_keys=4,
-    )
-    assert seen == ["SELECT ?x WHERE { ?x a ?t }"]  # unfiltered fallback
+    rdf_type = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+    for held in (False, True):
+        seen.clear()
+        service_fetch(build, "?x a ?t", executor, held)
+        # unfiltered fallback
+        assert seen == [f"SELECT ?t ?x WHERE {{ ?x {rdf_type} ?t . }}"]
+    assert pushdown.observed_keys(build, "x", 4) is None
+    assert pushdown.distinct_keys((r[0] for r in rows), 4) is None
 
 
 def test_paged_bindings_orders_and_refuses_truncation():

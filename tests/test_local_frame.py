@@ -92,25 +92,57 @@ def test_rows_to_bframe_plans_local(spark):
     assert_local(bf.df)
 
 
-def test_bound_join_fetch_plans_local(spark):
-    from ontario_spark.sources.pushdown import bound_join_fetch
-
+def test_bound_join_fetch_plans_local(spark, service_fetch):
     build = spark.createDataFrame([("k1",), ("k2",)], "k string")
 
     def executor(query):
         return [{"k": "k1", "v": "one"}, {"k": "k2", "v": None}]
 
-    out = bound_join_fetch(
-        spark, build, "k", "SELECT ?k ?v WHERE { ?k <p> ?v }", ["k", "v"],
-        executor,
+    for held in (False, True):
+        out = service_fetch(build, "?k <http://ex.org/p> ?v", executor, held).df
+        assert sorted(out.select("k", "v").collect(), key=str) == sorted(
+            spark.createDataFrame(
+                [("k1", "one"), ("k2", None)], "k string, v string"
+            ).collect(),
+            key=str,
+        )
+        assert_local(out)
+
+
+def test_held_frame_is_exact(spark):
+    """A held build side collects equal to its source frame, keeps its
+    schema (types and nullability), meta and ``maybe_null``, and is
+    one local partition."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from ontario_spark.catalog.model import Catalog
+    from ontario_spark.compiler.frame import LEXICAL, BFrame, HeldFrame, TermMeta
+    from ontario_spark.compiler.query import SparqlEngine
+
+    schema = (
+        "i int, b bigint, d decimal(12,2), x double, dt date, "
+        "ts timestamp, s string"
     )
-    assert sorted(out.collect(), key=str) == sorted(
-        spark.createDataFrame(
-            [("k1", "one"), ("k2", None)], "k string, v string"
-        ).collect(),
-        key=str,
-    )
-    assert_local(out)
+    rows = [
+        (1, 2**40, Decimal("12.34"), 0.5, datetime.date(2024, 1, 2),
+         datetime.datetime(2024, 3, 10, 2, 30, 0, 123456), "a"),
+        (None, None, None, None, None, None, None),
+        (-7, -(2**62), Decimal("-0.01"), -1e-4, datetime.date(1999, 12, 31),
+         datetime.datetime(1999, 12, 31, 23, 59, 59), "ünï"),
+    ]
+    src = spark.createDataFrame(rows, schema).withColumn("c", F.lit("const"))
+    meta = {c: TermMeta(LEXICAL) for c in src.columns}
+    eng = SparqlEngine(spark, Catalog())
+    held = eng._hold(BFrame(src, meta, frozenset({"s"})))
+    assert isinstance(held, HeldFrame)
+    assert held.df.schema == src.schema
+    assert not held.df.schema["c"].nullable
+    assert held.df.collect() == src.collect() == held.rows
+    assert held.meta == meta and held.maybe_null == {"s"}
+    assert held.df.rdd.getNumPartitions() == 1
+    assert_local(held.df)
 
 
 def test_values_block_plans_local(spark, sf_small):

@@ -10,7 +10,7 @@ import shutil
 import pytest
 
 from ontario_spark.data import local_frame
-from ontario_spark.sources.pushdown import bound_join_fetch, instantiate_query
+from ontario_spark.sources.pushdown import instantiate_query
 from ontario_spark.sources.sparql_endpoint import paged_bindings, sharded_queries
 
 # --- endpoint bridge ----------------------------------------------------
@@ -91,7 +91,7 @@ def test_sharded_queries_disjoint():
 # --- bound-join pushdown ------------------------------------------------
 
 
-def test_bound_join_batches_and_joins(spark):
+def test_bound_join_batches_and_joins(spark, service_fetch):
     build = spark.createDataFrame(
         [(f"http://x/{i}", i) for i in range(45)], "k string, payload int"
     )
@@ -104,15 +104,14 @@ def test_bound_join_batches_and_joins(spark):
         keys = [t[1:-1] for t in query.split("{", 2)[2].split("}")[0].split()]
         return [{"k": k, "name": remote_rows[k]} for k in keys if k in remote_rows]
 
-    fetched = bound_join_fetch(
-        spark, build, "k", "SELECT ?k ?name WHERE { ?k <p> ?name }",
-        ["k", "name"], executor,
-    )
-    rows = build.join(fetched, on="k").collect()
-    # 45 distinct keys → 3 VALUES batches of ≤20 (reference WINDOW_SIZE)
-    assert len(executed) == 3
-    assert len(rows) == 23  # even ids 0..44
-    assert {r.name for r in rows} == {f"name{i}" for i in range(0, 45, 2)}
+    for held in (False, True):
+        executed.clear()
+        fetched = service_fetch(build, "?k <http://ex.org/p> ?name", executor, held)
+        rows = build.join(fetched.df, on="k").collect()
+        # 45 distinct keys → 3 VALUES batches of ≤20 (reference WINDOW_SIZE)
+        assert len(executed) == 3
+        assert len(rows) == 23  # even ids 0..44
+        assert {r.name for r in rows} == {f"name{i}" for i in range(0, 45, 2)}
 
 
 def test_instantiate_query_injects_values():
