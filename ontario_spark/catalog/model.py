@@ -215,15 +215,6 @@ class Catalog:
             for pred, _ in tm.predicates:
                 self.predicate_index.setdefault(pred, set()).add(tm.name)
 
-    def maps_for_predicates(self, preds: list[str]) -> set[str]:
-        """Source selection by predicate intersection (reference:
-        ``find_rdfmt_by_preds``, config/__init__.py:89-107)."""
-        sets = [self.predicate_index.get(p, set()) for p in preds]
-        if not sets:
-            return set(self.triple_maps)
-        out = set.intersection(*sets) if sets else set()
-        return out
-
     def maps_for_class(self, cls: str) -> set[str]:
         return set(self.class_index.get(cls, set()))
 

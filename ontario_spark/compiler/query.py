@@ -26,7 +26,7 @@ reference's selectivity heuristics (``Planner.py:102-259``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ontario_spark.catalog.model import Catalog
@@ -819,7 +819,7 @@ class SparqlEngine:
             u = u.union(b)
         return u
 
-    def _values_pushdown_hint(self, vb: "ValuesBlock | None") -> "BFrame | None":
+    def _values_pushdown_hint(self, vb: "ValuesBlock | None") -> "HeldFrame | None":
         """Trailing-VALUES columns with NO UNDEF cell, as a tiny frame
         whose observed values can feed remote bound-join pushdown
         (``_bound_key_conds`` / SERVICE VALUES batches).
@@ -1511,9 +1511,11 @@ class SparqlEngine:
             u = u.union(self._group(b, source_filter=source_filter))
         return u
 
-    def _values(self, v: ValuesBlock) -> BFrame:
-        """Inline data → a (tiny, broadcast-able) BFrame joined into the
-        group like any star (SPARQL 1.1 VALUES; beyond the reference)."""
+    def _values(self, v: ValuesBlock) -> HeldFrame:
+        """Inline data → a (tiny, broadcast-able) frame joined into the
+        group like any star (SPARQL 1.1 VALUES; beyond the reference).
+        The rows come from the query text, so they are held: a key
+        list over them is read on the driver with no Spark job."""
 
         def pyval(t):
             if t is None:
@@ -1571,7 +1573,8 @@ class SparqlEngine:
         # estimates, because the inline data block is bounded by the
         # query text itself.
         df = F.broadcast(df)
-        return BFrame(
+        row = Row(*v.variables)
+        return HeldFrame(
             df,
             {var: TermMeta(LEXICAL) for var in v.variables},
             # UNDEF cells are unbound: those columns join as wildcards
@@ -1580,6 +1583,7 @@ class SparqlEngine:
                 for i, var in enumerate(v.variables)
                 if any(r[i] is None for r in rows)
             ),
+            [row(*r) for r in rows],
         )
 
     def _join_values(self, bf: "BFrame | None", v: ValuesBlock) -> BFrame:
@@ -1681,19 +1685,21 @@ class SparqlEngine:
             -score,
         )
 
-    def _bound_key_conds(self, bf: BFrame, star_vars: set[str], max_keys: int = 1000):
+    def _bound_key_conds(self, bf: BFrame, star_vars: set[str]):
         """Observed build-side join keys for a remote star, as 'in'
         RemoteConds: single-column template-keyed vars push their RAW
         keys (valid only against a same-shaped remote template —
         checked in the translator), lexical vars push lexical values
         (eligibility: ``_key_column``). A held ``bf`` gives its keys
         from the driver rows, a lazy one through a Spark pass.
-        Bounded by ``max_keys`` (IN-list size limit); past it the
-        remote query goes out unfiltered, the reference's
-        non-selective fallback. No keys give an empty IN-list, and the
-        star skips its fetch (the join with an empty build side is
-        empty). The local join afterwards is unchanged, so pushdown
-        can only reduce transfer, never change the answer."""
+        Bounded by ``pushdown.BOUND_JOIN_MAX_KEYS`` (IN-list size
+        limit); past it the remote query goes out unfiltered, the
+        reference's non-selective fallback. No keys give an empty
+        IN-list, and the star skips its fetch (the join with an empty
+        build side is empty). The local join afterwards is unchanged,
+        so pushdown can only reduce transfer, never change the
+        answer."""
+        from ontario_spark.sources.pushdown import BOUND_JOIN_MAX_KEYS
         from ontario_spark.sources.translate import RemoteCond
 
         out: dict[str, list[RemoteCond]] = {}
@@ -1701,7 +1707,7 @@ class SparqlEngine:
             kc = _key_column(bf, v)
             if kc is None:
                 continue
-            keys = _keys(bf, kc[0], max_keys)
+            keys = _keys(bf, kc[0], BOUND_JOIN_MAX_KEYS)
             if keys is not None:
                 out[v] = [RemoteCond("in", tuple(keys), kc[1])]
         return out

@@ -15,14 +15,17 @@ frontier only — the delta, not the accumulated closure, drives the join,
 so per-iteration cost tracks the number of *new* pairs (semi-naive, not
 naive). Every delta is truncated (``pin(..., truncate=True)``, a
 ``localCheckpoint``); without it the plan doubles per step and Catalyst
-analysis time explodes after ~15 iterations. The eager loops here run
-inside a ``pinned()`` scope, which releases their persisted
-loop-invariant frames when the operator returns or raises (ownership
-rules: ``ontario_spark/persist.py``). The fixed-round rank loops
-(``pagerank``, ``personalized_pagerank``) pin nothing: each is one lazy
-plan. Diameter of real hierarchies (org
-charts, geo containment, categories) is small — ``max_iter`` is a cycle
-guard, not an expected bound.
+analysis time explodes after ~15 iterations. The closure's loop runs
+inside a ``pinned()`` scope, which releases its persisted frames when
+the operator returns or raises (ownership rules:
+``ontario_spark/persist.py``). The other loops pin no round: a round
+of ``pagerank``, ``personalized_pagerank``, ``bfs_depths`` or
+``connected_components`` is one aggregate that reads the previous
+round once, so rounds chain lazily. The first three build one lazy
+plan; components truncates its edge set once and its labels at each
+convergence check, every ``CC_ROUNDS_PER_CHECK`` rounds. Diameter of real
+hierarchies (org charts, geo containment, categories) is small —
+``max_iter`` is a cycle guard, not an expected bound.
 """
 
 from __future__ import annotations
@@ -96,6 +99,12 @@ def transitive_closure(
     return acc
 
 
+# Min-label rounds run between two convergence checks. Propagation is
+# idempotent past its fixpoint, so rounds run after convergence return
+# the same labels.
+CC_ROUNDS_PER_CHECK = 2
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -109,108 +118,61 @@ def connected_components(
     The duplicate-clustering step of a dedup pipeline: near-dup PAIRS
     (from LSH/Jaccard) become CLUSTERS so one canonical doc per cluster
     survives. Standard min-label propagation: each round every node
-    takes the min of its own label and its neighbors' labels; a round
-    is one shuffle join + groupBy on the edge relation. Converges in
-    O(component diameter) rounds — duplicate clusters are near-cliques
-    (diameter ≤ ~2-3), so this beats the O(log n) large-star/small-star
-    variant's constant factor in practice; for adversarially long path
-    graphs at lake scale, swap in large-star/small-star behind the same
-    signature. Lineage is truncated per round exactly like
-    ``transitive_closure``; convergence is detected by the label-sum
-    fingerprint (min-propagation only ever DECREASES labels, so the sum
-    strictly decreases until fixpoint and is stable exactly there) —
-    ONE tiny aggregate action per round, no pairwise diff join.
-    """
-    # Symmetrize by exploding each directed pair into both directions
-    # INSIDE one projection: the upstream pair-generation DAG (often an
-    # expensive similarity join) is evaluated once and pinned once — a
-    # union of the frame with its flip would reference that DAG twice.
-    directed = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b"))
-    )
-    both = F.explode(
-        F.array(
-            F.struct(F.col("a"), F.col("b")),
-            F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-        )
-    )
-    spark = edges.sparkSession
-    from pyspark.sql.types import NumericType
+    takes the min of its own label and its neighbors' labels. Converges
+    in O(component diameter) rounds — duplicate clusters are
+    near-cliques (diameter ≤ ~2-3), so this beats the O(log n)
+    large-star/small-star variant's constant factor in practice; for
+    adversarially long path graphs at lake scale, swap in
+    large-star/small-star behind the same signature.
 
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Round 13 (VERDICT item 7): the loop no longer narrows session-
-    # global spark.sql.shuffle.partitions (CONF_LOCK only serialized
-    # writers — a concurrent planner could read the narrowed value).
-    # Instead the loop-INVARIANT edge set is pinned CO-PARTITIONED on
-    # its join key (``truncate=False`` keeps hashpartitioning where
-    # localCheckpoint reports UnknownPartitioning), so the e-side of
-    # every round's e⋈labels never re-shuffles — the edge relation is
-    # the loop's dominant bytes. The label frames are truncated: small
-    # per-round exchanges in exchange for a plan that cannot double per
-    # round (see the note below).
-    with pinned():
-        e = pin(
-            directed.select(both.alias("e"))
-            .select("e.a", "e.b")
-            .dropDuplicates(["a", "b"])
-            .repartition(width, "a"),
-            truncate=False,
-        )
-        numeric_ids = isinstance(e.schema["a"].dataType, NumericType)
-        # labels are truncated: each round references its predecessor
-        # TWICE (neighbor-min + left join), so a persist-only pin would
-        # DOUBLE the logical plan per round — exponential by the
-        # 30-round guard. Truncation wins over partitioning reuse for
-        # the small label frames; only the loop-invariant edge set
-        # keeps its layout.
-        labels = pin(
-            e.select(F.col("a").alias("n"))
-            .dropDuplicates(["n"])
-            .select("n", F.col("n").alias("label")),
-            truncate=True,
-        )
-        prev_sum = None
-        for _ in range(max_iter):
-            nbr_min = (
-                e.join(labels, e["a"] == labels["n"])
-                .groupBy(F.col("b").alias("n2"))
-                .agg(F.min("label").alias("nbr"))
-            )
-            new_labels = pin(
-                labels.join(nbr_min, labels["n"] == nbr_min["n2"], "left")
-                .select(
-                    "n",
-                    F.least(
-                        F.col("label"), F.coalesce("nbr", "label")
-                    ).alias("label"),
-                ),
-                truncate=True,
-            )
-            if numeric_ids:
-                # label-sum fingerprint: min propagation only DECREASES
-                # numeric labels, so the sum strictly decreases until
-                # fixpoint and is stable exactly there — one tiny agg.
-                cur = new_labels.agg(F.sum("label").alias("s")).collect()[0]["s"]
-                converged = cur == prev_sum
-                prev_sum = cur
-            else:
-                # non-numeric ids (content hashes, URIs): sum is not
-                # defined, so diff the two PINNED label frames — a
-                # small sized-partition join per round, exact.
-                # fresh attribute ids on one side: when pin fell back
-                # to persist (no checkpoint), new_labels' lineage still
-                # contains labels and a direct self-join is ambiguous
-                nl = new_labels.select(
-                    F.col("n").alias("__n2"), F.col("label").alias("__l2")
+    Scale shape: a round is ONE aggregate, ``labels ⋈ e'`` grouped by
+    node taking ``min(label)``, where ``e'`` is the symmetrised edge
+    set plus one self-loop per node (the node keeps its own label in
+    the min). Each round reads the previous labels once, so rounds
+    stay lazy: ``CC_ROUNDS_PER_CHECK`` of them run between convergence
+    checks, and a graph that converges within them pays one truncating
+    pin and one check while it is built, whatever ``max_iter``. The
+    check is exact for every id type: the last round flags a node whose
+    label dropped below its own previous label, and labels have
+    converged when no node is flagged. ``ClosureError`` is raised when
+    round ``max_iter`` still moves a label."""
+    pairs = edges.select(F.col(src).alias("n"), F.col(dst).alias("m")).filter(
+        F.col("n").isNotNull() & F.col("m").isNotNull() & (F.col("n") != F.col("m"))
+    )
+    # both directions and both self-loops in ONE projection, so the
+    # upstream pair DAG (often an expensive similarity join) is
+    # referenced once. The edge set is truncated once: every round reads
+    # it, and a plan that carries the pair DAG costs more to analyse and
+    # match against the cache than the rounds cost to run.
+    e = pin(
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct("n", "m"),
+                    F.struct(F.col("m").alias("n"), F.col("n").alias("m")),
+                    F.struct("n", F.col("n").alias("m")),
+                    F.struct(F.col("m").alias("n"), "m"),
                 )
-                converged = (
-                    nl.join(labels, nl["__n2"] == labels["n"])
-                    .filter(F.col("__l2") != F.col("label"))
-                    .isEmpty()
-                )
-            labels = new_labels
-            if converged:
-                return labels.select("n", F.col("label").alias("component"))
+            ).alias("e")
+        )
+        .select("e.n", "e.m")
+        .distinct(),
+        truncate=True,
+    )
+    labels = e.filter(F.col("n") == F.col("m")).select("n", F.col("n").alias("label"))
+    own = F.min(F.when(F.col("n") == F.col("m"), F.col("label")))
+    for done in range(1, max_iter + 1):
+        labels = (
+            labels.select("n", "label")
+            .join(e, "n")
+            .groupBy(F.col("m").alias("n"))
+            .agg(F.min("label").alias("label"), (F.min("label") < own).alias("moved"))
+        )
+        if done % CC_ROUNDS_PER_CHECK and done < max_iter:
+            continue
+        labels = pin(labels, truncate=True)
+        if labels.filter("moved").isEmpty():
+            return labels.select("n", F.col("label").alias("component"))
     raise ClosureError(f"components did not converge in {max_iter} iterations")
 
 
@@ -483,61 +445,39 @@ def bfs_depths(
     node_col: str = "node",
 ) -> DataFrame:
     """Multi-source BFS: ``(node, depth)`` with the MINIMUM hop count
-    from any seed node, frontier-at-a-time, depth capped at
-    ``max_depth``. The distance-labeling primitive behind "within k
-    hops of a flagged account" expansion, influence radii, and seed-
-    set crawl scheduling.
+    from any seed node, depth capped at ``max_depth``. The
+    distance-labeling primitive behind "within k hops of a flagged
+    account" expansion, influence radii, and seed-set crawl scheduling.
 
     Scale shape (100 TB of edges): unlike ``transitive_closure`` the
-    state is one row per VISITED NODE, never reachability pairs. Each
-    level costs one equi-join of the current frontier against the edge
-    relation (shuffle keyed on the join node) plus one anti-join
-    against the visited set; frontier-at-a-time means a node reached
-    at level d is never re-expanded at d' > d. Lineage is truncated per
-    level (same discipline as the closure/CC loops). Early-exits when
-    the frontier empties.
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
-        F.col("src").isNotNull() & F.col("dst").isNotNull()
+    state is one row per VISITED NODE, never reachability pairs. A
+    level is ONE aggregate, ``state ⋈ e'`` grouped by node taking
+    ``min(depth + w)``: ``e'`` is the edge set with ``w = 1`` plus one
+    ``w = 0`` self row for every node a level can hold (edge targets
+    and seeds), so a visited node keeps its depth and a seed with no
+    edges keeps depth 0. Each level reads the previous state once, so
+    the result is one lazy plan of ``max_depth`` levels and building it
+    starts no Spark job. The price is that every level rescans the
+    visited set, not only the newest frontier."""
+    e = edges.select(F.col(src).alias("node"), F.col(dst).alias("to")).filter(
+        F.col("node").isNotNull() & F.col("to").isNotNull()
     )
-    width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # Edge set persisted pre-partitioned on the expansion join key
-    # (``truncate=False`` keeps its hashpartitioning): each level's
-    # frontier⋈e reuses this one exchange instead of re-shuffling the
-    # EDGE set per level.
-    with pinned():
-        e = pin(
-            e.dropDuplicates(["src", "dst"]).repartition(width, "src"),
-            truncate=False,
+    state = (
+        seeds.select(F.col(node_col).alias("node"))
+        .distinct()
+        .select("node", F.lit(0).alias("depth"))
+    )
+    nodes = e.select(F.col("to").alias("node")).union(state.select("node")).distinct()
+    e = e.select("node", "to", F.lit(1).alias("w")).unionByName(
+        nodes.select("node", F.col("node").alias("to"), F.lit(0).alias("w"))
+    )
+    for _ in range(max_depth):
+        state = (
+            state.join(e, "node")
+            .groupBy(F.col("to").alias("node"))
+            .agg(F.min(F.col("depth") + F.col("w")).alias("depth"))
         )
-        visited = pin(
-            seeds.select(F.col(node_col).alias("node"))
-            .dropDuplicates(["node"])
-            .withColumn("depth", F.lit(0)),
-            truncate=True,
-        )
-        frontier = visited
-        for d in range(1, max_depth + 1):
-            reached = (
-                frontier.join(e, frontier["node"] == e["src"])
-                .select(F.col("dst").alias("node"))
-                .dropDuplicates(["node"])
-            )
-            new = pin(
-                reached.join(visited, "node", "left_anti").withColumn(
-                    "depth", F.lit(d)
-                ),
-                truncate=True,
-            )
-            if new.isEmpty():
-                break
-            # visited stays a LAZY union of the truncated per-level
-            # deltas: scanning it touches d checkpointed frames (cheap),
-            # while pinning it eagerly cost one extra materializing
-            # action per level (round 12).
-            visited = visited.unionByName(new)
-            frontier = new
-    return visited
+    return state
 
 
 def bipartite_cooccurrence(

@@ -1,10 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns + typed metadata, processed via Arrow-batched ``mapInPandas``.
 
-The decode/resize/frame-sample kernels need codec libraries that are
-NOT in this container, so the actual byte decoding is STUBBED: either a
-clearly marked ``NotImplementedError`` (real decode) or a deterministic
-fake (byte-level stats standing in for decoded features). Everything
+Pixel decoding needs codec libraries that are not installed, so the
+decode kernels are deterministic fakes (byte-level stats standing in
+for decoded features), while container headers are parsed for real
+(dimensions, sample rates, boxes). Everything
 Spark-side — schema contracts, Arrow batch shapes, partition behavior —
 is real and tested; swapping in a real `PIL`/`libav` kernel changes only
 the per-batch pandas function body.
@@ -28,14 +28,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),  # 'image'|'audio'|'video'
-        StructField("payload", BinaryType()),
-    ]
-)
-
 DECODE_STATS_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -44,13 +36,6 @@ DECODE_STATS_SCHEMA = StructType(
         StructField("byte_sum_mod", LongType()),
     ]
 )
-
-
-def decode_image(payload: bytes):  # pragma: no cover - stub by design
-    """Real image decode — requires PIL/opencv, absent in this
-    container. The mapInPandas plumbing in ``decode_stats`` is the
-    production shape; swap this in as the kernel when codecs exist."""
-    raise NotImplementedError("image codecs not available in this environment")
 
 
 def media_from_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -343,18 +328,6 @@ def image_metadata(media: DataFrame) -> DataFrame:
     from ontario_spark.operators.textops import spread
 
     return spread(media).mapInPandas(kernel, IMAGE_META_SCHEMA)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize pipeline shape. STUB: raises on execution because
-    codecs are unavailable; the plan (schema/partitioning) is real."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:  # pragma: no cover - stub by design
-            pdf["payload"] = pdf["payload"].map(decode_image)
-            yield pdf
-
-    return media.mapInPandas(kernel, MEDIA_SCHEMA)
 
 
 WAV_META_SCHEMA = StructType(

@@ -78,21 +78,6 @@ def snapshot_diff(
     )
 
 
-def snapshot_diff_summary(
-    old: DataFrame,
-    new: DataFrame,
-    key: str = "doc_id",
-    content_cols: tuple[str, ...] = ("text",),
-) -> DataFrame:
-    """Per-status counts of :func:`snapshot_diff` — one partial-
-    aggregated shuffle on top of the diff's key join."""
-    return (
-        snapshot_diff(old, new, key, content_cols)
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def apply_changelog(
     base: DataFrame,
     changelog: DataFrame,

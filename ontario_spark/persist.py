@@ -5,7 +5,7 @@ Spark's CacheManager holds a persisted frame until someone calls
 ``unpersist()``; Python garbage collection never releases it. So every
 persisted frame here has exactly one owner:
 
-- ``pinned()`` scope — an eager loop (closure, components, BFS, the
+- ``pinned()`` scope — an eager loop (the transitive closure, the
   streaming index and its last-batch probe) pins its loop-invariant
   frames with ``pin()`` inside ``with pinned():``. The scope unpersists every frame
   it persisted when it exits, normally or by an exception, so the loop
@@ -34,9 +34,10 @@ checkpointed scan reports ``UnknownPartitioning``, so a same-key join
 above it re-shuffles it every round. ``pin(df, truncate=False)`` is
 persist: the cached scan keeps the plan's hash partitioning and
 downstream joins on that key plan with no exchange on this side, but
-the lineage is kept. So loop-invariant frames (edge sets, node sets)
-are persisted pre-partitioned on their join key; per-round frames are
-truncated.
+the lineage is kept. So an eager loop persists its loop-invariant
+frames pre-partitioned on their join key and truncates its per-round
+frames. A loop whose round reads the previous round once needs no
+per-round pin: its rounds chain lazily (``operators/graph.py``).
 
 ``spark.catalog.clearCache()`` drops the data of every persisted frame
 while the frame's ``is_cached`` stays true; a cache hit re-persists

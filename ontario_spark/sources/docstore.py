@@ -13,7 +13,7 @@ has no MongoDB server, so the same seam is served two ways:
   driver round-trip (same contract as ``sources/jdbc.py``).
 - **Stand-in** (``aggregate`` + ``executor_from_collections``): a
   clean-room interpreter of exactly the stage subset our translator
-  emits ($match/$unwind/$project/$skip/$limit with the $eq/$ne/
+  emits ($match/$unwind/$project with the $eq/$ne/
   $exists/$regex/$lt/$lte/$gt/$gte/$in operators), run over plain
   Python dicts. Used by the integration tests (documents loaded from
   the same parquet the oracle reads — the Derby-JDBC test pattern).
@@ -157,7 +157,7 @@ def _matches(doc: dict, spec: dict) -> bool:
 def aggregate(docs: Iterable[dict], pipeline: list[dict]) -> list[dict]:
     """Reference semantics for the emitted aggregation-stage subset
     (mirrors ``collection.aggregate`` for pipelines our translator can
-    produce; see reference ``sparql2mongo.py:59-64,144-241``)."""
+    produce; see reference ``sparql2mongo.py:144-241``)."""
     out = [dict(d) for d in docs]
     for stage in pipeline:
         ((op, arg),) = stage.items()
@@ -184,10 +184,6 @@ def aggregate(docs: Iterable[dict], pipeline: list[dict]) -> list[dict]:
                     )
                 nxt.append(nd)
             out = nxt
-        elif op == "$skip":
-            out = out[arg:]
-        elif op == "$limit":
-            out = out[:arg]
         else:
             raise ValueError(f"unsupported stage {op}")
     return out
@@ -334,12 +330,8 @@ def spark_doc_executor(spark, sf_dir: str):
     plan instead of a driver-side Python loop (round-9 verdict item 1).
     Results are identical to ``executor_from_collections(
     parquet_doc_loader(sf_dir))``: same interpreter, same documents.
-
-    ``$skip``/``$limit`` are GLOBAL stages (our translator emits them
-    only for pushed LIMIT/OFFSET), so they split off and run as
-    ``df.offset``/``df.limit`` after the per-partition stages — same
-    set-level semantics as a single-node interpreter, which is all
-    Mongo guarantees without ``$sort``."""
+    Every stage the translator emits is per-document, so the pipeline
+    runs whole inside each partition."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import DecimalType
 
@@ -357,9 +349,7 @@ def spark_doc_executor(spark, sf_dir: str):
                 for f in df.schema.fields
             ]
         )
-        local = [s for s in pipeline if next(iter(s)) not in ("$skip", "$limit")]
-        tail = [s for s in pipeline if next(iter(s)) in ("$skip", "$limit")]
-        out_schema = pipeline_schema(df.schema, local)
+        out_schema = pipeline_schema(df.schema, pipeline)
         out_cols = [f.name for f in out_schema.fields]
 
         def interpret(batches):
@@ -370,17 +360,13 @@ def spark_doc_executor(spark, sf_dir: str):
                     {k: _jsonish(v) for k, v in rec.items()}
                     for rec in pdf.to_dict("records")
                 ]
-                rows = aggregate(docs, local)
+                rows = aggregate(docs, pipeline)
                 yield pd.DataFrame(
                     [[r.get(c) for c in out_cols] for r in rows],
                     columns=out_cols,
                 )
 
-        out = df.mapInPandas(interpret, schema=out_schema)
-        for stage in tail:
-            ((op, arg),) = stage.items()
-            out = out.offset(arg) if op == "$skip" else out.limit(arg)
-        return out
+        return df.mapInPandas(interpret, schema=out_schema)
 
     return execr
 

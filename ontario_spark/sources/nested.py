@@ -118,10 +118,3 @@ class PathResolver:
         """Column for an iterator-relative reference path. Must be
         called after ``prepare`` covered the path."""
         return self._expr_for(self._absolute(path))
-
-    def colmap(self, paths: list[str]):
-        """Resolution function (name → Column) suitable for passing to
-        ``Template.format(col=...)`` — plain names fall through to
-        ``F.col`` only when the source has no iterator."""
-        self.prepare(paths)
-        return self.col

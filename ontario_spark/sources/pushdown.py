@@ -35,6 +35,7 @@ FETCH_THREADS = 16  # concurrent remote batch fetches
 # partition. Larger build sides stay lazy and feed ``observed_keys``.
 HOLD_ROWS = 10_000
 SERVICE_MAX_KEYS = 100_000  # distinct SERVICE keys before an unfiltered fetch
+BOUND_JOIN_MAX_KEYS = 1000  # remote-star IN-list size before an unfiltered fetch
 
 
 class PushdownError(Exception):
@@ -126,7 +127,7 @@ def observed_keys(df: DataFrame, col: str, max_keys: int) -> list | None:
     a NULL row take the overflow sentinel's place). Two jobs under AQE
     (the distinct's shuffle-map stage, then the result), so it serves
     only build sides too large to hold (``HOLD_ROWS``) and frames no
-    group holds (OPTIONAL/MINUS/EXISTS outer frames, VALUES hints)."""
+    group holds (OPTIONAL/MINUS/EXISTS outer frames)."""
     rows = (
         df.select(col)
         .filter(df[col].isNotNull())
@@ -137,12 +138,10 @@ def observed_keys(df: DataFrame, col: str, max_keys: int) -> list | None:
     return distinct_keys((r[0] for r in rows), max_keys)
 
 
-def values_batches(
-    query: str, var: str, keys: list, window_size: int = WINDOW_SIZE
-) -> list[str]:
-    """``query`` instantiated once per ``window_size`` window of
+def values_batches(query: str, var: str, keys: list) -> list[str]:
+    """``query`` instantiated once per ``WINDOW_SIZE`` window of
     ``keys`` (no queries for no keys)."""
     return [
-        instantiate_query(query, var, keys[i : i + window_size])
-        for i in range(0, len(keys), window_size)
+        instantiate_query(query, var, keys[i : i + WINDOW_SIZE])
+        for i in range(0, len(keys), WINDOW_SIZE)
     ]

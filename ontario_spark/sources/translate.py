@@ -13,7 +13,7 @@ not code:
   identifier quoting).
 - MongoDB: ``ontario/wrappers/mongodb/sparql2mongo.py`` ($match for
   constants/not-null :209-241, $project :194-207, array fields →
-  $unwind :144-180, LIMIT/OFFSET → $limit/$skip :59-64).
+  $unwind :144-180).
 - Cypher: ``ontario/wrappers/neo4j/sparql2cypher.py``
   (``translate_4_col`` :285-343 — MATCH on the class label, WHERE on
   constants, RETURN property aliases).
@@ -287,9 +287,6 @@ def star_sql(
     maps: list[TripleMap],
     star: Star,
     dialect: Dialect = ANSI,
-    distinct: bool = False,
-    limit: int | None = None,
-    offset: int | None = None,
     conditions: dict[str, list[RemoteCond]] | None = None,
 ) -> tuple[str, list[ColSpec]]:
     """One star (one alternative: maps self-joined on the shared subject
@@ -298,7 +295,7 @@ def star_sql(
     Reference behaviors reproduced: table alias per map, subject keys
     joined across maps (``join_condition``), constant objects →
     equality predicates (``get_cond_sql``), NOT NULL guards on every
-    projected/joined column, DISTINCT passthrough, and sargable FILTER
+    projected/joined column, and sargable FILTER
     pushdown (``conditions``, reference ``get_filters``/``REGEX→LIKE``
     :585-634) applied to REFERENCE-bound variables — a selective
     FILTER prunes at the source instead of shipping the whole table.
@@ -472,17 +469,10 @@ def star_sql(
     tables = ", ".join(
         f"{d.ident(tm.source.table)} {alias[tm.name]}" for tm in maps
     )
-    sql = "SELECT "
-    if distinct:
-        sql += "DISTINCT "
-    sql += ", ".join(select) if select else "1"
+    sql = "SELECT " + (", ".join(select) if select else "1")
     sql += f" FROM {tables}"
     if where:
         sql += " WHERE " + " AND ".join(where)
-    if limit is not None:
-        sql += f" LIMIT {limit}"
-    if offset:
-        sql += f" OFFSET {offset}"
     return sql, specs
 
 
@@ -507,14 +497,12 @@ def _coerce(lex: str):
 def star_mongo(
     tm: TripleMap,
     star: Star,
-    limit: int | None = None,
-    offset: int | None = None,
     conditions: dict[str, list[RemoteCond]] | None = None,
 ) -> tuple[list[dict], list[ColSpec]]:
     """One star over one collection → aggregation pipeline + column
     contract. Stage order: $match (non-array predicates) → $unwind per
-    array prefix → $match (array-element predicates) → $project →
-    $skip/$limit (reference :59-64,144-241). ``conditions`` (sargable
+    array prefix → $match (array-element predicates) → $project
+    (reference :144-241). ``conditions`` (sargable
     FILTERs on REFERENCE-bound variables) land in the $match stages —
     comparison operators directly, LIKE patterns as anchored $regex."""
     triples = _star_triples(tm, star)
@@ -677,10 +665,6 @@ def star_mongo(
         pipeline.append({"$match": post})
     if project:
         pipeline.append({"$project": {**project, "_id": 0}})
-    if offset:
-        pipeline.append({"$skip": offset})
-    if limit is not None:
-        pipeline.append({"$limit": limit})
     return pipeline, specs
 
 
@@ -690,8 +674,6 @@ def star_mongo(
 def star_cypher(
     tm: TripleMap,
     star: Star,
-    limit: int | None = None,
-    offset: int | None = None,
     conditions: dict[str, list[RemoteCond]] | None = None,
 ) -> tuple[str, list[ColSpec]]:
     """One star over one node label → Cypher. Properties come from
@@ -820,10 +802,6 @@ def star_cypher(
     if where:
         q += " WHERE " + " AND ".join(dict.fromkeys(where))
     q += " RETURN " + (", ".join(ret) if ret else "1")
-    if offset:
-        q += f" SKIP {offset}"
-    if limit is not None:
-        q += f" LIMIT {limit}"
     return q, specs
 
 
@@ -856,12 +834,7 @@ def _sparql_term(t: Term) -> str:
     return f'"{lex}"'
 
 
-def star_sparql_text(
-    star: Star,
-    distinct: bool = False,
-    limit: int | None = None,
-    offset: int | None = None,
-) -> tuple[str, list[ColSpec]]:
+def star_sparql_text(star: Star) -> tuple[str, list[ColSpec]]:
     """Re-serialize a star as SPARQL text for a remote endpoint
     (reference: each LeafOperator re-serializes its subquery,
     ``mediator/Tree.getInfoIO:219-257``). All bindings come back
@@ -872,11 +845,7 @@ def star_sparql_text(
         for t in star.triples
     )
     head = " ".join(f"?{v}" for v in variables) if variables else "*"
-    q = f"SELECT {'DISTINCT ' if distinct else ''}{head} WHERE {{ {patterns} }}"
-    if limit is not None:
-        q += f" LIMIT {limit}"
-    if offset:
-        q += f" OFFSET {offset}"
+    q = f"SELECT {head} WHERE {{ {patterns} }}"
     return q, [ColSpec(v, v, REFERENCE, None) for v in variables]
 
 

@@ -531,52 +531,6 @@ def trending_topk(hourly_counts: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def write_stream_exactly_once(
-    result: DataFrame,
-    path: str,
-    checkpoint: str,
-    output_mode: str = "append",
-    shuffle_partitions: "int | None" = 8,
-):
-    """Exactly-once file ingest: ``foreachBatch`` writing each
-    micro-batch to a ``batch_id=<n>`` subdirectory with OVERWRITE mode.
-    Structured Streaming guarantees at-least-once batch execution after
-    a crash (an epoch whose sink write finished but whose checkpoint
-    commit didn't is re-executed with the SAME batch id) — overwriting
-    the batch's own directory makes the replay idempotent, so readers
-    of ``path`` see each input row exactly once. This is the standard
-    recipe for exactly-once semantics onto a non-transactional file
-    sink; partition-by-batch also gives incremental readers a
-    monotonic high-water mark.
-
-    Returns the started StreamingQuery (AvailableNow trigger) — caller
-    awaits termination. Scale: each batch write is a normal
-    distributed parquet write; no driver materialization."""
-    from ontario_spark.session import CONF_LOCK
-
-    spark = result.sparkSession
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
-
-    with CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            if shuffle_partitions is not None:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(shuffle_partitions)
-                )
-            return (
-                result.writeStream.foreachBatch(_write_batch)
-                .outputMode(output_mode)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 def run_incremental_neardup(
     spark: SparkSession,
     new_docs_dir: str,

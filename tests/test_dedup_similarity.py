@@ -252,14 +252,6 @@ def test_int8_quantize_bounds(spark, sf_small):
             assert r["hi"] == 127 or r["lo"] == -127
 
 
-def test_multimodal_stub_raises(spark, sf_small):
-    from ontario_spark.operators.multimodal import media_from_text, resize_images
-
-    media = media_from_text(table(spark, sf_small, "documents").limit(2), "doc_id", "text")
-    with pytest.raises(Exception, match="NotImplementedError|image codecs"):
-        resize_images(media, 64, 64).collect()
-
-
 # --- IVF ANN + multimodal feature composition ----------------------------
 
 

@@ -206,10 +206,10 @@ def test_components_match_union_find(spark):
 
 
 def test_components_string_ids(spark):
-    """Content-hash-style STRING node ids: the numeric label-sum probe
-    does not apply; the diff-join convergence path must still produce
-    correct components (regression: NULL sum matched the initial None
-    and returned after one round, splitting chains)."""
+    """Content-hash-style STRING node ids take the same convergence
+    check as numeric ids (regression: an old numeric label-sum probe
+    saw a NULL sum on strings and returned after one round, splitting
+    chains)."""
     from ontario_spark.operators.graph import connected_components
 
     df = spark.createDataFrame(
@@ -223,6 +223,29 @@ def test_components_string_ids(spark):
         ("a", "a"), ("b", "a"), ("c", "a"), ("d", "a"),
         ("x", "x"), ("y", "x"),
     }
+
+
+@pytest.mark.parametrize("ids", ["long", "string"])
+def test_components_converge_exactly_at_max_iter(spark, ids):
+    """A path of 4 edges reaches its fixpoint after 4 rounds and round
+    5 confirms it, so ``max_iter=5`` returns its labels; one node
+    longer still moves a label in round 5 and raises. 5 is not a
+    multiple of the rounds run between checks, so the last check
+    follows a shorter batch."""
+    from ontario_spark.operators.graph import connected_components
+
+    def path(n_edges):
+        name = (lambda i: i) if ids == "long" else (lambda i: f"n{i:02d}")
+        pairs = [(name(i), name(i + 1)) for i in range(n_edges)]
+        df = spark.createDataFrame(pairs, schema=f"src {ids}, dst {ids}")
+        return df, name
+
+    df, name = path(4)
+    got = {(r["n"], r["component"]) for r in connected_components(df, max_iter=5).collect()}
+    assert got == {(name(i), name(0)) for i in range(5)}
+    longer, _ = path(5)
+    with pytest.raises(ClosureError):
+        connected_components(longer, max_iter=5)
 
 
 def test_pagerank_ranks_by_inlinks(spark):
@@ -347,6 +370,30 @@ class TestBfsDepths:
         }
         # min over seeds; nothing past depth 2
         assert got == {(0, 0), (1, 1), (2, 2), (7, 0), (8, 1), (9, 2)}
+
+    def test_seed_without_edges_keeps_depth_zero(self, spark):
+        from ontario_spark.operators.graph import bfs_depths
+
+        edges = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
+        seeds = spark.createDataFrame([(1,), (42,)], ["node"])
+        got = {
+            (r.node, r.depth)
+            for r in bfs_depths(edges, seeds, max_depth=3).collect()
+        }
+        assert got == {(1, 0), (2, 1), (3, 2), (42, 0)}
+
+    def test_seed_reached_from_another_seed_stays_at_zero(self, spark):
+        from ontario_spark.operators.graph import bfs_depths
+
+        edges = spark.createDataFrame(
+            [(0, 1), (1, 2), (2, 3), (3, 4)], ["src", "dst"]
+        )
+        seeds = spark.createDataFrame([(0,), (2,), (2,)], ["node"])
+        got = sorted(
+            (r.node, r.depth)
+            for r in bfs_depths(edges, seeds, max_depth=4).collect()
+        )
+        assert got == [(0, 0), (1, 1), (2, 0), (3, 1), (4, 2)]
 
     def test_relaxation_invariant_on_events_graph(self, spark, sf_small):
         """d(v) <= d(u) + 1 for every edge u→v with d(u) < cap — the

@@ -285,14 +285,17 @@ def _build_jobs(spark, build) -> int:
 
 
 def test_fixed_round_loops_start_no_job_per_round_while_built(spark, sf_small):
-    """PageRank and PPR build as one lazy plan, and BPE training's
-    rounds are lazy checkpoints over one row with no exchange: building
-    any of them must not start a Spark job per round."""
+    """PageRank, PPR and BFS build as one lazy plan, BPE training's
+    rounds are lazy checkpoints over one row with no exchange, and
+    connected components runs its rounds lazily between convergence
+    checks: building any of them must not start a Spark job per
+    round."""
     from ontario_spark.data import table
+    from ontario_spark.operators import graph
     from ontario_spark.operators.textops import bpe_encode_stats, bpe_train_merges
 
     q = all_queries()
-    for name in ("events_pagerank", "events_ppr"):
+    for name in ("events_pagerank", "events_ppr", "events_bfs_depth"):
         q[name](spark, sf_small)  # first call reads the table footers
         assert _build_jobs(spark, lambda: q[name](spark, sf_small)) == 0, name
     docs = table(spark, sf_small, "documents")
@@ -305,3 +308,10 @@ def test_fixed_round_loops_start_no_job_per_round_while_built(spark, sf_small):
         few = _build_jobs(spark, lambda: build(2))
         many = _build_jobs(spark, lambda: build(8))
         assert few == many, (name, few, many)
+    # a star around its minimum node converges in one round, fewer than
+    # the rounds between two checks: one check settles it at any cap
+    k = graph.CC_ROUNDS_PER_CHECK
+    star = spark.createDataFrame([(0, i) for i in range(1, 6)], "src long, dst long")
+    at_k = _build_jobs(spark, lambda: graph.connected_components(star, max_iter=k))
+    at_3k = _build_jobs(spark, lambda: graph.connected_components(star, max_iter=3 * k))
+    assert at_k == at_3k, (at_k, at_3k)

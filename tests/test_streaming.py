@@ -318,79 +318,6 @@ def test_checkpoint_recovery_resumes_mid_stream(spark, sf_small, tmp_path):
     assert sorted(map(tuple, got)) == sorted(map(tuple, batch))
 
 
-def test_exactly_once_sink_idempotent_under_replay(spark, sf_small, tmp_path):
-    """foreachBatch batch-id-overwrite sink: total output equals the
-    batch answer, and a replayed batch (same id re-executed after a
-    crash between sink write and checkpoint commit) does not duplicate
-    rows."""
-    from ontario_spark.streaming.events import (
-        read_event_stream,
-        write_stream_exactly_once,
-    )
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    stream = read_event_stream(spark, sf_small).select(
-        "event_id", "user_id", "event_type"
-    )
-    q = write_stream_exactly_once(stream, out, ckpt)
-    q.awaitTermination()
-    from ontario_spark.data import table
-
-    n_events = table(spark, sf_small, "events").count()
-    got = spark.read.option("basePath", out).parquet(out)
-    assert got.count() == n_events
-    ids = got.select("event_id").distinct().count()
-    assert ids == n_events
-    # simulate the crash-replay: re-write batch 0's directory by hand
-    # with the same batch id (what a recovered query does) — count is
-    # unchanged because overwrite replaces, never appends
-    batch_dirs = sorted(
-        p.name for p in (tmp_path / "out").iterdir() if p.name.startswith("batch_id=")
-    )
-    assert batch_dirs  # at least one micro-batch landed
-    bid = int(batch_dirs[0].split("=")[1])
-    replay = spark.read.parquet(f"{out}/batch_id={bid}")
-    rows = replay.collect()  # materialize before overwriting the source
-    spark.createDataFrame(rows, replay.schema).write.mode(
-        "overwrite"
-    ).parquet(f"{out}/batch_id={bid}")
-    assert spark.read.option("basePath", out).parquet(out).count() == n_events
-
-
-def test_exactly_once_sink_resumes_incrementally(spark, tmp_path):
-    """Restarting against the same checkpoint processes ONLY newly
-    arrived files: batch-1 rows are not re-emitted (the checkpoint is
-    the high-water mark), and the union of batch directories holds
-    each input row exactly once."""
-    from ontario_spark.streaming.events import write_stream_exactly_once
-
-    src = tmp_path / "src"
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    spark.range(0, 100).toDF("event_id").write.mode("overwrite").parquet(
-        str(src)
-    )
-    schema = spark.read.parquet(str(src)).schema
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = write_stream_exactly_once(stream, out, ckpt)
-        q.awaitTermination()
-
-    run_once()
-    got1 = spark.read.option("basePath", out).parquet(out)
-    assert got1.count() == 100
-    # new arrivals land as additional files; same checkpoint resumes
-    spark.range(100, 150).toDF("event_id").write.mode("append").parquet(
-        str(src)
-    )
-    run_once()
-    got2 = spark.read.option("basePath", out).parquet(out)
-    assert got2.count() == 150
-    assert got2.select("event_id").distinct().count() == 150
-
-
 def test_budget_cut_state_spans_batches(spark, tmp_path):
     """Two files replayed as two micro-batches; user 7's budget is
     exhausted by an event in the SECOND batch, so the cut point is

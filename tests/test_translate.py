@@ -3,7 +3,7 @@
 - SQL: generated ANSI statement runs on DuckDB over the same parquet
   tables and must return exactly what the Spark star compiler returns.
 - MongoDB: pipeline runs on a ~60-line interpreter of the emitted
-  stage subset ($match/$unwind/$project/$skip/$limit) over dicts.
+  stage subset ($match/$unwind/$project) over dicts.
 - Cypher: golden-string shape assertions.
 - rows_to_bframe: fetched remote rows join a Spark-resident star.
 """
@@ -173,13 +173,6 @@ def test_mongo_constant_subject():
     assert rows == [{"n": "bob"}]
 
 
-def test_mongo_limit_skip():
-    star = star_of("SELECT * WHERE { ?c a ex:Customer ; ex:mktsegment ?s }")
-    pipeline, _ = star_mongo(MONGO_MAP, star, limit=1, offset=1)
-    assert pipeline[-2:] == [{"$skip": 1}, {"$limit": 1}]
-    assert len(run_pipeline(MONGO_DOCS, pipeline)) == 1
-
-
 # --- Cypher --------------------------------------------------------------
 
 
@@ -190,12 +183,6 @@ def test_cypher_shape():
     assert "n.seg = 'AUTO'" in q
     assert "n.name AS n" in q and "n.cid AS c__k0" in q
     assert "n.cid IS NOT NULL" in q
-
-
-def test_cypher_limit():
-    star = star_of("SELECT * WHERE { ?c a ex:Customer ; ex:name ?n }")
-    q, _ = star_cypher(MONGO_MAP, star, limit=5, offset=2)
-    assert q.endswith("SKIP 2 LIMIT 5")
 
 
 # --- remote rows → BFrame → federated join -------------------------------
@@ -567,11 +554,9 @@ def test_spark_doc_executor_matches_driver_standin(spark, sf_small):
     assert got == want and len(got) > 0
 
 
-def test_spark_doc_executor_unwind_skip_limit(spark, tmp_path):
-    """$unwind runs per-partition (array → element with sibling fields
-    intact); $skip/$limit are GLOBAL stages applied after the
-    distributed interpretation, so their set-level contract (count,
-    subset-of-full) holds regardless of partitioning."""
+def test_spark_doc_executor_unwind(spark, tmp_path):
+    """$unwind runs per-partition: array → element with sibling fields
+    intact."""
     from ontario_spark.sources.docstore import spark_doc_executor
 
     docs = spark.createDataFrame(
@@ -592,18 +577,6 @@ def test_spark_doc_executor_unwind_skip_limit(spark, tmp_path):
     assert got == sorted(
         (i, f"t{i}{s}") for i in range(10) for s in ("a", "b")
     )
-
-    paged = execr(
-        "docs",
-        [
-            {"$project": {"doc_id": "$doc_id", "_id": 0}},
-            {"$skip": 3},
-            {"$limit": 4},
-        ],
-    )
-    rows = paged.collect()
-    assert len(rows) == 4
-    assert {r["doc_id"] for r in rows} <= set(range(10))
 
 
 def test_mongo_distributed_plan_shape(spark, sf_small):

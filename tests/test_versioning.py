@@ -5,10 +5,7 @@ from __future__ import annotations
 import duckdb
 from pyspark.sql import functions as F
 
-from ontario_spark.operators.versioning import (
-    snapshot_diff,
-    snapshot_diff_summary,
-)
+from ontario_spark.operators.versioning import snapshot_diff
 
 
 def test_snapshot_diff_classifies_all_statuses(spark):
@@ -27,10 +24,6 @@ def test_snapshot_diff_classifies_all_statuses(spark):
     assert rows[3]["old_hash"] != rows[3]["new_hash"]
     assert rows[4]["status"] == "unchanged"  # NULL == NULL content
     assert rows[5]["status"] == "added" and rows[5]["old_hash"] is None
-    summary = {
-        r["status"]: r["n"] for r in snapshot_diff_summary(old, new).collect()
-    }
-    assert summary == {"removed": 1, "unchanged": 2, "changed": 1, "added": 1}
 
 
 def test_snapshot_diff_multi_column_separator(spark):

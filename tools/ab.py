@@ -16,8 +16,9 @@ cleared and GC fired before each run, noop sink unless
         after each query;
     python tools/ab.py QUERY ... --tree OLD NEW
         side A runs the registry of source tree OLD, side B that of NEW;
-        both are imported into this process under a scrubbed
-        ``sys.modules``.
+        both are imported into this process, and each side's modules
+        are swapped into ``sys.modules`` before it runs, so the
+        operators a query imports in its body come from its own tree.
 
 With two sides, which side runs first alternates round to round so
 warm-position bias cancels. Prints the per-round seconds and the
@@ -37,20 +38,44 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import timed, warm_up  # noqa: E402
 
 
-def load_registry(tree: str) -> dict:
-    """Import ontario_spark from ``tree`` and return its all_queries()
-    dict. Previously imported ontario_spark modules are dropped from
-    sys.modules first so the import really binds to ``tree``; the
-    returned dict keeps the module objects alive independently."""
+def load_registry(tree: str) -> tuple[dict, dict]:
+    """Import ontario_spark from ``tree``, every submodule included,
+    and return its all_queries() dict with those module objects.
+    Previously imported ontario_spark modules are dropped from
+    sys.modules first so the import really binds to ``tree``. Queries
+    import operators inside their bodies, through ``sys.modules``, so
+    a side's modules must be back there while it runs (``use``)."""
+    import glob
+    import importlib
+
     for m in [k for k in list(sys.modules) if k.startswith("ontario_spark")]:
         del sys.modules[m]
     sys.path.insert(0, tree)
     try:
+        for path in glob.glob(f"{tree}/ontario_spark/**/*.py", recursive=True):
+            name = os.path.relpath(path[:-3], tree).replace(os.sep, ".")
+            try:
+                importlib.import_module(name.removesuffix(".__init__"))
+            except ImportError:
+                pass  # a gated connector whose dependency is absent
         from ontario_spark.queries import all_queries
 
-        return all_queries()
+        mods = {k: v for k, v in sys.modules.items() if k.startswith("ontario_spark")}
+        return all_queries(), mods
     finally:
         sys.path.remove(tree)
+
+
+def use(mods: dict):
+    """A switch that makes ``mods`` the ontario_spark modules imports
+    resolve to."""
+
+    def switch() -> None:
+        for m in [k for k in list(sys.modules) if k.startswith("ontario_spark")]:
+            del sys.modules[m]
+        sys.modules.update(mods)
+
+    return switch
 
 
 def set_conf(spark, conf: dict) -> None:
@@ -86,7 +111,10 @@ def main() -> None:
     # sides: (label, registry, switch run before the side's timing)
     if args.tree:
         old, new = (os.path.abspath(t) for t in args.tree)
-        sides = [("old", load_registry(old), None), ("new", load_registry(new), None)]
+        sides = []
+        for label, tree in (("old", old), ("new", new)):
+            reg, mods = load_registry(tree)
+            sides.append((label, reg, use(mods)))
     else:
         from ontario_spark.queries import all_queries
 
