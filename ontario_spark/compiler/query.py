@@ -250,12 +250,27 @@ def _key_column(bf: BFrame, var: str) -> "tuple[str, str | None] | None":
     return None
 
 
+def _service_key_source(variables: set[str], sources) -> int | None:
+    """Index of the first of ``sources`` (sets of never-unbound
+    variables, ``None`` for an absent source) that shares a variable
+    with a SERVICE pattern binding ``variables``: its keys ship as the
+    pattern's VALUES. A var that may be unbound joins its NULL rows as
+    §10.2 wildcards against every remote binding, so batching only its
+    bound keys would under-fetch."""
+    for i, s in enumerate(sources):
+        if s is not None and variables & s:
+            return i
+    return None
+
+
 def _keys(build: BFrame, col: str, max_keys: int) -> list | None:
     """``build``'s key list for ``col`` under the one key rule
     (``pushdown.distinct_keys``): read from the driver rows of a held
-    frame, else computed by Spark (``observed_keys``, two jobs). The
-    first rows of a frame too large to hold already answer when they
-    hold more than ``max_keys`` distinct keys: so does the whole."""
+    frame (a group's build side or the outer frame of an
+    OPTIONAL/MINUS/EXISTS block, ``_hold_for_keys``), else computed by
+    Spark (``observed_keys``, two jobs). The first rows of a frame too
+    large to hold already answer when they hold more than ``max_keys``
+    distinct keys: so does the whole."""
     from ontario_spark.sources.pushdown import distinct_keys, observed_keys
 
     if isinstance(build, HeldFrame):
@@ -688,7 +703,11 @@ class SparqlEngine:
         disappear). For those, compute the inner join, filter it, and
         union back the left rows with NO surviving match — identified
         by a row id frozen by pinning (monotonically_increasing_id is
-        only stable across the two branches after materialization)."""
+        only stable across the two branches after materialization).
+        Either way the block hangs off ``bf`` through ``_group_over``:
+        when a remote star or SERVICE block in it reads its key list
+        from ``bf``, ``bf`` is held once and that held frame is also
+        the left side of the join, so the outer plan runs once."""
         bound = set()
         for el in e.block.elements:
             bound |= _pattern_vars(el)
@@ -709,15 +728,12 @@ class SparqlEngine:
 
         hoist = [el for el in e.block.elements if _hoists(el)]
         if not hoist:
-            return bf.join(
-                self._group(e.block, key_hint=bf, source_filter=source_filter),
-                "left_outer",
-            )
+            bf, right = self._group_over(e.block, bf, source_filter)
+            return bf.join(right, "left_outer")
 
         rest = Group(
             [el for el in e.block.elements if not any(el is h for h in hoist)]
         )
-        right = self._group(rest, key_hint=bf, source_filter=source_filter)
         pinned = BFrame(
             pin(
                 bf.df.withColumn("__lj", F.monotonically_increasing_id()),
@@ -726,6 +742,9 @@ class SparqlEngine:
             bf.meta,
             bf.maybe_null,
         )
+        # the block hangs off the pinned frame: the pin runs bf once,
+        # and a hold for key lists then reads the pinned rows
+        pinned, right = self._group_over(rest, pinned, source_filter)
         joined = pinned.join(right, "inner")
         for f in hoist:
             # exists-aware: the LeftJoin condition may itself contain
@@ -850,10 +869,28 @@ class SparqlEngine:
     def _group(
         self,
         g: Group,
-        key_hint: BFrame | None = None,
         source_filter: "str | set | None" = None,
         values_hint: BFrame | None = None,
     ) -> BFrame:
+        return self._group_over(g, None, source_filter, values_hint)[1]
+
+    def _group_over(
+        self,
+        g: Group,
+        key_hint: BFrame | None,
+        source_filter: "str | set | None" = None,
+        values_hint: BFrame | None = None,
+    ) -> tuple[BFrame | None, BFrame]:
+        """``g`` compiled, hanging off the outer frame ``key_hint`` when
+        it has one (OPTIONAL, MINUS, [NOT] EXISTS): rows of a remote
+        star or SERVICE block that cannot match the outer keys cannot
+        affect the result, so the outer frame feeds their key lists.
+        Returns ``(key_hint, frame)``. Like the group's own build side,
+        the outer frame comes back held (``_hold_for_keys``) when one of
+        those key lists reads it, Ontario's NestedHashOptionalFilter
+        posture: the caller joins the held frame, so the outer plan runs
+        once, not once for the keys and again for the join. A block
+        with no remote key list hands it back unchanged."""
         triples = [e for e in g.elements if isinstance(e, Triple)]
         var_pred = [t for t in triples if t.p.is_var]
         triples = [t for t in triples if not t.p.is_var]
@@ -891,7 +928,7 @@ class SparqlEngine:
             for plan in pruned:
                 _keep_allowed(plan, allowed, self.catalog)
             if any(not p.alternatives for p in pruned):
-                return self._empty_group_frame(g)
+                return key_hint, self._empty_group_frame(g)
         # Wrapper-source stars compile AFTER the local frames are
         # joined (below), so observed join keys push down as IN-lists —
         # NestedHashJoinFilter posture for SQL/Mongo/Cypher sources,
@@ -977,6 +1014,8 @@ class SparqlEngine:
         # observed join keys can push down as VALUES (bound join — the
         # reference's NestedHashJoinFilter posture, SURVEY.md §2.1)
         services = [e for e in g.elements if isinstance(e, ServiceBlock)]
+        star_vars = set().union(*map(_plan_vars, remote_star_plans))
+        svc_vars = set().union(*(_pattern_vars(sb.block) for sb in services))
         bf = self._join_greedy(frames) if frames else None
         held: HeldFrame | None = None
         if bf is not None and (remote_star_plans or services):
@@ -1002,41 +1041,35 @@ class SparqlEngine:
                             )
                         except Exception:
                             pass  # applied in the final filter pass
-            # the SERVICE join compares shared vars lexically anyway, so
-            # a keyed one is formatted before the hold and its key list
-            # comes from the held rows (vars a remote star also shares
-            # stay keyed: that star's IN-list pushes raw keys)
-            star_vars = set().union(*map(_plan_vars, remote_star_plans))
-            svc_vars = set().union(*(_pattern_vars(sb.block) for sb in services))
-            for v in sorted(
-                (svc_vars & bf.variables) - star_vars - bf.maybe_null
-            ):
-                bf = bf.materialize(v)
-            # Hold the build side ONCE, as Ontario's NestedHashJoinFilter
-            # buffers its left tuples: one bounded collect feeds the key
-            # list of every remote star and SERVICE block of this group
-            # in Python, and the rows re-enter Spark as one partition
-            # that joins the fetched rows inside the result job. A lazy
-            # build side pays two jobs per key list (distinct, limit,
-            # collect) and a broadcast job when the final plan scans it
-            # again. Only a frame some key list reads is held, and only
-            # up to pushdown.HOLD_ROWS rows; past that bf stays lazy and
-            # its first rows only settle key lists that overflow.
-            if any(
-                _key_column(bf, v)
-                for v in (star_vars | svc_vars) & bf.variables
-            ):
-                bf = held = self._hold(bf)
+            bf = self._hold_for_keys(bf, star_vars, svc_vars)
+            if isinstance(bf, HeldFrame):
+                held = bf
+        if key_hint is not None:
+            # the outer frame feeds every remote star's key list it can,
+            # but a SERVICE block's only when no earlier source (this
+            # group's frame, its remote stars, an earlier SERVICE)
+            # shares a var with it: _service's order, so a frame no key
+            # list reads is not held
+            bound = set(star_vars)
+            if bf is not None:
+                bound |= bf.variables - bf.maybe_null
+            outer = key_hint.variables - key_hint.maybe_null
+            outer_svc: set[str] = set()
+            for sb in services:
+                pv = _pattern_vars(sb.block)
+                if _service_key_source(pv, (bound, outer)) == 1:
+                    outer_svc |= pv
+                bound |= pv
+            key_hint = self._hold_for_keys(key_hint, star_vars, outer_svc)
         for plan in remote_star_plans:
             conds = {v: list(cs) for v, cs in remote_conds.items()}
             # bound-join key sources: the held build side for the vars
             # it binds (a superset of the keys the joined frame has
             # left — pushdown only narrows transfer), this group's
             # joined frame for the rest, the OUTER frame when this
-            # group hangs off one (OPTIONAL / MINUS / EXISTS —
-            # NestedHashOptionalFilter posture: rows that can't match
-            # the outer keys can't affect the result), and the
-            # trailing-VALUES hint (never-UNDEF columns only)
+            # group hangs off one (``key_hint``, held above when a key
+            # list reads it), and the trailing-VALUES hint (never-UNDEF
+            # columns only)
             pvars = _plan_vars(plan)
             held_vars = held.variables if held is not None else set()
             for build, svars in (
@@ -1052,7 +1085,7 @@ class SparqlEngine:
             f = compile_star(self.spark, self.catalog, plan, conds)
             bf = _join_fetched(bf, f, held is not None and held.whole)
         for sb in services:
-            svc = self._service(sb, (held, bf, values_hint))
+            svc = self._service(sb, (held, bf, key_hint, values_hint))
             bf = _join_fetched(bf, svc, held is not None and held.whole)
         # UNDEF-bearing VALUES join AFTER the remote-star/SERVICE
         # frames (round-8 review fix: joining the NULL-encoded frame
@@ -1080,9 +1113,7 @@ class SparqlEngine:
             if isinstance(e, OptionalBlock):
                 bf = self._optional(bf, e, source_filter=source_filter)
             elif isinstance(e, MinusBlock):
-                other = self._group(
-                    e.block, key_hint=bf, source_filter=source_filter
-                )
+                bf, other = self._group_over(e.block, bf, source_filter)
                 if other.variables & bf.variables:
                     # minus=True: a solution pair with no var bound on
                     # BOTH sides is dom-disjoint and removes nothing
@@ -1097,11 +1128,11 @@ class SparqlEngine:
                     bf, e.expr, source_filter=source_filter
                 )
             elif isinstance(e, ExistsFilter):
+                bf, inner = self._group_over(e.block, bf, source_filter)
                 bf = bf.restrict(
-                    self._group(e.block, key_hint=bf, source_filter=source_filter),
-                    "left_anti" if e.negated else "left_semi",
+                    inner, "left_anti" if e.negated else "left_semi"
                 )
-        return bf
+        return key_hint, bf
 
     def _apply_bind(
         self,
@@ -1244,9 +1275,11 @@ class SparqlEngine:
         empty frame instead of an error.
 
         Bound-join pushdown: when a key source (the group's held build
-        side, its joined local frame, the trailing-VALUES hint — first
-        one wins) shares a variable with the pattern, its distinct
-        observed keys ship as VALUES batches (window 20, the
+        side, its joined local frame, the outer frame of an
+        OPTIONAL/MINUS/EXISTS block, held through ``_hold_for_keys``,
+        the trailing-VALUES hint — first one wins,
+        ``_service_key_source``) shares a variable with the pattern,
+        its distinct observed keys ship as VALUES batches (window 20, the
         reference's NestedHashJoinFilter WINDOW_SIZE) so the endpoint
         returns only joinable bindings — transfer bounded by local
         keys, not remote cardinality. Past ``SERVICE_MAX_KEYS``
@@ -1290,27 +1323,17 @@ class SparqlEngine:
             )
 
         queries = [text]
-        # bound-join pushdown must use a var that is never unbound on
-        # the build side: a maybe_null var's NULL rows join as §10.2
-        # wildcards against EVERY remote binding, so batching only the
-        # observed bound keys would under-fetch. All shared vars
-        # flagged → no pushdown (unfiltered fetch, still correct).
-        # The trailing-VALUES hint's columns are never-UNDEF by
-        # construction.
-        shared, skey = [], None
-        for src in key_sources:
-            if src is None:
-                continue
-            cand = sorted(
-                v
-                for v in set(variables) & src.variables
-                if v not in src.maybe_null
-            )
-            if cand:
-                shared, skey = cand, src
-                break
-        if shared:
-            v = shared[0]
+        # All shared vars flagged → no pushdown (unfiltered fetch,
+        # still correct). The trailing-VALUES hint's columns are
+        # never-UNDEF by construction.
+        i = _service_key_source(
+            set(variables),
+            [None if s is None else s.variables - s.maybe_null
+             for s in key_sources],
+        )
+        if i is not None:
+            skey = key_sources[i]
+            v = min(set(variables) & skey.variables - skey.maybe_null)
             keys = _keys(skey.materialize(v), v, SERVICE_MAX_KEYS)
             if keys is not None:
                 # each key classified IRI-vs-literal individually —
@@ -1512,7 +1535,7 @@ class SparqlEngine:
         return u
 
     def _values(self, v: ValuesBlock) -> HeldFrame:
-        """Inline data → a (tiny, broadcast-able) frame joined into the
+        """Inline data → a (tiny, held) frame joined into the
         group like any star (SPARQL 1.1 VALUES; beyond the reference).
         The rows come from the query text, so they are held: a key
         list over them is read on the driver with no Spark job."""
@@ -1566,13 +1589,10 @@ class SparqlEngine:
                     for r in rows
                 ]
             fields.append(f"`{var}` {t}")
+        # no join hint: a bound join's _join_fetched decides how the
+        # held rows join the fetched ones, and elsewhere the tiny
+        # LocalRelation's statistics already make it the build side
         df = local_frame(self.spark, rows, ", ".join(fields))
-        # Explicit broadcast hint: the frame is a LocalRelation with
-        # known tiny stats, so Catalyst would usually broadcast it
-        # anyway; the hint keeps it the build side whatever the size
-        # estimates, because the inline data block is bounded by the
-        # query text itself.
-        df = F.broadcast(df)
         row = Row(*v.variables)
         return HeldFrame(
             df,
@@ -1616,8 +1636,8 @@ class SparqlEngine:
         # _values, so the general BFrame.join compatibility machinery
         # (NULL-mask decomposition, _join_compat) provides the exact
         # §10.2 semantics in BOTH directions — UNDEF wildcards AND
-        # pattern-side unbound merges. The literal frame is a
-        # broadcast-hinted LocalRelation (see _values). The pattern
+        # pattern-side unbound merges. The literal frame is a held
+        # LocalRelation (see _values). The pattern
         # side's own flags are trusted as-is: the engine invariant is
         # that a non-flagged column never holds NULL (unboundness only
         # arises structurally, where the flag is set), so defensively
@@ -1712,15 +1732,42 @@ class SparqlEngine:
                 out[v] = [RemoteCond("in", tuple(keys), kc[1])]
         return out
 
+    def _hold_for_keys(
+        self, bf: BFrame, star_vars: set[str], svc_vars: set[str]
+    ) -> BFrame:
+        """``bf`` held (``_hold``) when the key list of a remote star
+        binding ``star_vars`` or a SERVICE block binding ``svc_vars``
+        reads one of its columns (``_key_column``), else ``bf`` as it
+        is: the one hold rule for a group's build side and for the
+        outer frame a nested block hangs off. Held, one bounded collect
+        feeds every such key list in Python (Ontario's
+        NestedHashJoinFilter buffers its left tuples) and the rows
+        re-enter Spark as one partition; a lazy frame pays two jobs
+        per key list (distinct, limit, collect) and runs again when the
+        final plan scans it. A keyed var only SERVICE blocks share is
+        formatted first: the SERVICE join compares it lexically anyway,
+        so its key list comes from the held rows too (a var a remote
+        star shares stays keyed: that star's IN-list pushes raw
+        keys)."""
+        for v in sorted((svc_vars & bf.variables) - star_vars - bf.maybe_null):
+            bf = bf.materialize(v)
+        if any(_key_column(bf, v) for v in (star_vars | svc_vars) & bf.variables):
+            return self._hold(bf)
+        return bf
+
     def _hold(self, bf: BFrame) -> HeldFrame:
         """``bf`` collected once and held: its rows on the driver and
         the same rows back in Spark through ``data.local_frame`` (one
         partition) with ``bf``'s schema, meta and ``maybe_null``. Past
         ``pushdown.HOLD_ROWS`` rows the collect stops at one past the
         cap and ``bf`` stays lazy, with those first rows attached
-        (``whole=False``)."""
+        (``whole=False``). A frame already held whole (an inline VALUES
+        block, an outer frame an earlier block held) comes back as it
+        is, with no job."""
         from ontario_spark.sources.pushdown import HOLD_ROWS
 
+        if isinstance(bf, HeldFrame) and bf.whole:
+            return bf
         rows = bf.df.limit(HOLD_ROWS + 1).collect()
         if len(rows) > HOLD_ROWS:
             return HeldFrame(bf.df, bf.meta, bf.maybe_null, rows, whole=False)
@@ -1784,31 +1831,35 @@ class SparqlEngine:
         wildcards all behave identically — and join the surviving ids
         back as a TRUE/FALSE flag. Negation happens in the expression
         compiler (``~flag``), so each node costs one semi-join plus
-        one id-keyed flag join regardless of polarity. Returns the
-        marked frame (carrying ``__exk`` + ``__ex<i>`` physical
-        columns the caller must drop) and the node→column map."""
-        df = pin(
-            bf.df.withColumn("__exk", F.monotonically_increasing_id()),
-            truncate=True,
+        one id-keyed flag join regardless of polarity. Every block
+        hangs off the pinned frame through ``_group_over``, which holds
+        it once when a remote key list reads it; the flags then join
+        onto that (held) frame. Returns the marked frame (carrying
+        ``__exk`` + ``__ex<i>`` physical columns the caller must drop)
+        and the node→column map."""
+        outer = BFrame(
+            pin(
+                bf.df.withColumn("__exk", F.monotonically_increasing_id()),
+                truncate=True,
+            ),
+            bf.meta,
+            bf.maybe_null,
         )
-        marked = BFrame(df, bf.meta, bf.maybe_null)
+        kept: list[tuple[str, DataFrame]] = []
         cols: dict[int, str] = {}
         for i, n in enumerate(nodes):
-            name = f"__ex{i}"
-            inner = self._group(
-                n.block, key_hint=marked, source_filter=source_filter
+            name = cols[id(n)] = f"__ex{i}"
+            outer, inner = self._group_over(n.block, outer, source_filter)
+            kept.append((name, outer.restrict(inner, "left_semi").df))
+        df = outer.df
+        for name, k in kept:
+            flags = k.select("__exk").withColumn(name, F.lit(True))
+            df = df.join(flags, "__exk", "left_outer").withColumn(
+                name, F.coalesce(F.col(name), F.lit(False))
             )
-            kept = marked.restrict(inner, "left_semi")
-            flags = kept.df.select("__exk").withColumn(name, F.lit(True))
-            marked = BFrame(
-                marked.df.join(flags, "__exk", "left_outer").withColumn(
-                    name, F.coalesce(F.col(name), F.lit(False))
-                ),
-                marked.meta,
-                marked.maybe_null,
-            )
-            cols[id(n)] = name
-        return marked, cols
+        # outer's meta, not bf's: a SERVICE block's hold formats the
+        # keyed vars it shares (``_hold_for_keys``)
+        return BFrame(df, outer.meta, outer.maybe_null), cols
 
     def _filter_exists_aware(
         self,
@@ -1826,7 +1877,7 @@ class SparqlEngine:
         marked, cols = self._mark_exists(bf, nodes, source_filter)
         vc = self._compiler(marked, exists_cols=cols)
         df = marked.df.filter(vc.boolean(expr)).drop("__exk", *cols.values())
-        return BFrame(df, bf.meta, bf.maybe_null)
+        return BFrame(df, marked.meta, marked.maybe_null)
 
     def _select(self, q: Query, bf: BFrame) -> DataFrame:
         sel = q.select

@@ -29,10 +29,11 @@ RemoteExecutor = Callable[[str], list[dict[str, str | None]]]
 
 WINDOW_SIZE = 20  # reference default batch size
 FETCH_THREADS = 16  # concurrent remote batch fetches
-# A bound-join build side of at most this many rows is collected once
-# and held on the driver (``SparqlEngine._hold``): its rows feed every
-# key list of the group in Python and it re-enters Spark as one
-# partition. Larger build sides stay lazy and feed ``observed_keys``.
+# A bound-join build side or outer frame of at most this many rows is
+# collected once and held on the driver (``SparqlEngine._hold``): its
+# rows feed every key list read from it in Python and it re-enters
+# Spark as one partition. Larger frames stay lazy and feed
+# ``observed_keys``.
 HOLD_ROWS = 10_000
 SERVICE_MAX_KEYS = 100_000  # distinct SERVICE keys before an unfiltered fetch
 BOUND_JOIN_MAX_KEYS = 1000  # remote-star IN-list size before an unfiltered fetch
@@ -126,8 +127,9 @@ def observed_keys(df: DataFrame, col: str, max_keys: int) -> list | None:
     filtered before ``limit(max_keys + 1)`` (filtering after could let
     a NULL row take the overflow sentinel's place). Two jobs under AQE
     (the distinct's shuffle-map stage, then the result), so it serves
-    only build sides too large to hold (``HOLD_ROWS``) and frames no
-    group holds (OPTIONAL/MINUS/EXISTS outer frames)."""
+    only frames too large to hold (``HOLD_ROWS``): a group's build side
+    or the outer frame an OPTIONAL/MINUS/EXISTS block hangs off, both
+    held otherwise (``SparqlEngine._hold_for_keys``)."""
     rows = (
         df.select(col)
         .filter(df[col].isNotNull())

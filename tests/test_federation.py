@@ -245,6 +245,139 @@ def test_service_bound_join_pushdown(spark, sf_small):
     assert shipped == set(reg)
 
 
+REGIONS = "http://remote.example/sparql"
+
+
+def _region_endpoint(spark, sf):
+    """An injected SPARQL endpoint answering ``?r ex:name ?rname`` for
+    every region but region 1, only for the regions of a ``VALUES ?r``
+    batch when the query carries one. Returns the region names by IRI,
+    the list of queries the endpoint is asked, and the endpoint."""
+    import re
+
+    reg = {f"{EX}region/{r['r_regionkey']}": r["r_name"]
+           for r in table(spark, sf, "region").collect()}
+    queries = []
+
+    def endpoint(query: str):
+        queries.append(query)
+        m = re.search(r"VALUES \?r \{ ([^}]*)\}", query)
+        wanted = re.findall(r"<([^>]+)>", m.group(1)) if m else list(reg)
+        # one region the endpoint lacks: its nations stay unbound
+        return [{"r": u, "rname": reg[u]} for u in wanted
+                if u in reg and not u.endswith("/1")]
+
+    return reg, queries, endpoint
+
+
+def test_optional_service_reads_outer_keys(spark, sf_small, monkeypatch):
+    """A SERVICE block inside OPTIONAL gets the outer frame's keys as
+    VALUES batches, read from the held outer rows with no Spark key
+    pass; non-matching outer rows keep the OPTIONAL side unbound, and
+    an empty outer frame asks the endpoint nothing."""
+    import re
+
+    from ontario_spark.sources import pushdown
+
+    cat = tpch_catalog(sf_small)
+    reg, queries, endpoint = _region_endpoint(spark, sf_small)
+    passes = []
+    observed = pushdown.observed_keys
+    monkeypatch.setattr(
+        pushdown, "observed_keys",
+        lambda df, col, n: passes.append(col) or observed(df, col, n),
+    )
+    eng = SparqlEngine(spark, cat, service_executors={REGIONS: endpoint})
+    text = PFX + """SELECT ?nname ?rname WHERE {
+              { ?n a ex:Nation ; ex:name ?nname ; ex:region ?r .
+                FILTER (?nname IN (%s)) }
+              OPTIONAL { SERVICE <http://remote.example/sparql> {
+                ?r ex:name ?rname } } }"""
+    nations = {r["n_name"]: r["n_regionkey"]
+               for r in table(spark, sf_small, "nation").collect()}
+    picked = sorted(n for n, k in nations.items() if k in (0, 1))
+    got = sorted(
+        (r["nname"], r["rname"])
+        for r in eng.query(
+            text % ", ".join(f'"{n}"' for n in picked)
+        ).collect()
+    )
+    want = sorted(
+        (n, None if nations[n] == 1 else reg[f"{EX}region/{nations[n]}"])
+        for n in picked
+    )
+    assert got == want and passes == []
+    shipped = {u for q in queries for u in re.findall(r"<([^>]+region/[^>]+)>", q)}
+    assert queries and shipped == {f"{EX}region/0", f"{EX}region/1"}
+
+    queries.clear()
+    assert eng.query(text % '"NO SUCH NATION"').collect() == []
+    assert queries == []
+
+
+def test_optional_service_keys_from_block_hold_no_outer(
+    spark, sf_small, monkeypatch
+):
+    """When the OPTIONAL block's own frame shares the SERVICE var, that
+    frame feeds the key list (``_service``'s source order) and is the
+    only frame held: the outer frame, which binds the var too, is not
+    collected for a key list nothing reads."""
+    reg, queries, endpoint = _region_endpoint(spark, sf_small)
+    holds = []
+    hold = SparqlEngine._hold
+    monkeypatch.setattr(
+        SparqlEngine, "_hold",
+        lambda self, bf: holds.append(sorted(bf.variables)) or hold(self, bf),
+    )
+    eng = SparqlEngine(
+        spark, tpch_catalog(sf_small), service_executors={REGIONS: endpoint}
+    )
+    got = sorted(
+        (r["nname"], r["rname"])
+        for r in eng.query(PFX + """SELECT ?nname ?rname WHERE {
+              ?n a ex:Nation ; ex:name ?nname ; ex:region ?r .
+              OPTIONAL { ?n ex:region ?r .
+                SERVICE <http://remote.example/sparql> {
+                  ?r ex:name ?rname } } }""").collect()
+    )
+    want = sorted(
+        (r["n_name"], None if r["n_regionkey"] == 1
+         else reg[f"{EX}region/{r['n_regionkey']}"])
+        for r in table(spark, sf_small, "nation").collect()
+    )
+    assert got == want
+    assert holds == [["n", "r"]]
+    assert any("VALUES ?r" in q for q in queries)
+
+
+def test_exists_expression_service_shares_keyed_outer_var(spark, sf_small):
+    """An expression-position EXISTS whose block is a SERVICE sharing a
+    keyed outer var: the outer hold formats that var, and the filter
+    and the projection read the formatted frame."""
+    reg, queries, endpoint = _region_endpoint(spark, sf_small)
+    eng = SparqlEngine(
+        spark, tpch_catalog(sf_small), service_executors={REGIONS: endpoint}
+    )
+    nations = {r["n_name"]: r["n_regionkey"]
+               for r in table(spark, sf_small, "nation").collect()}
+    kept = min(n for n, k in nations.items() if k == 1)
+    got = sorted(
+        (r["nname"], r["r"])
+        for r in eng.query(PFX + """SELECT ?nname ?r WHERE {
+              ?n a ex:Nation ; ex:name ?nname ; ex:region ?r .
+              FILTER (?nname = "%s" || EXISTS {
+                SERVICE <http://remote.example/sparql> {
+                  ?r ex:name ?rname } }) }""" % kept).collect()
+    )
+    want = sorted(
+        (n, f"{EX}region/{k}")
+        for n, k in nations.items()
+        if k != 1 or n == kept
+    )
+    assert got == want and len(got) < len(nations)
+    assert any("VALUES ?r" in q for q in queries)
+
+
 def test_service_skips_fetch_when_build_side_is_empty(spark, sf_small):
     """A local FILTER that rejects every build row leaves no observed
     keys: the SERVICE result would be inner-joined to nothing, so the
@@ -499,6 +632,114 @@ def test_bound_join_request_is_two_jobs(spark, sf_small, monkeypatch):
         calls.clear()
         assert eng.query(BOUND_JOIN % "NO SUCH NATION").collect() == []
         assert calls == []
+
+
+# the inner group filters the nations before the block hangs off them
+# (a group's own FILTERs apply after its OPTIONAL/MINUS blocks)
+HANGING = PFX + """SELECT * WHERE {
+              { ?n a ex:Nation ; ex:name ?nname .
+                FILTER (STRSTARTS(?nname, "%s")) }
+              %s }"""
+AUTO = '?c a ex:Customer ; ex:nation ?n ; ex:mktsegment "AUTOMOBILE"'
+REMOTE_BLOCKS = {
+    "optional": "OPTIONAL { ?c a ex:Customer ; ex:name ?name ; ex:nation ?n }",
+    # ?nname is outer-only: the filter is the LeftJoin condition
+    "optional_condition": """OPTIONAL { ?c a ex:Customer ; ex:name ?name ;
+                                ex:nation ?n . FILTER (?nname != "NATION_11") }""",
+    "minus": "MINUS { %s }" % AUTO,
+    "exists": "FILTER EXISTS { %s }" % AUTO,
+    "not_exists": "FILTER NOT EXISTS { %s }" % AUTO,
+    "exists_expression": 'FILTER (?nname = "NATION_10" || EXISTS { %s })' % AUTO,
+}
+
+
+@pytest.mark.parametrize("block", sorted(REMOTE_BLOCKS))
+def test_outer_frame_is_held_for_remote_key_lists(
+    spark, sf_small, monkeypatch, block
+):
+    """A remote star inside OPTIONAL, MINUS or [NOT] EXISTS reads its
+    key list from the outer frame, held once: no Spark key pass
+    (``observed_keys``), the IN-list still pushed, and the all-local
+    answer. Past ``HOLD_ROWS`` the lazy outer frame gives the same
+    answer, and an empty outer frame makes no remote call."""
+    from ontario_spark.sources import pushdown
+
+    cat = tpch_federated_catalog(sf_small)
+    calls: list[str] = []
+    orig = cat.executors["remote_sql"]
+
+    def spy(sql):
+        calls.append(sql)
+        return orig(sql)
+
+    cat.executors["remote_sql"] = spy
+    passes: list[str] = []
+    observed = pushdown.observed_keys
+
+    def key_pass(df, col, max_keys):
+        passes.append(col)
+        return observed(df, col, max_keys)
+
+    monkeypatch.setattr(pushdown, "observed_keys", key_pass)
+    eng = SparqlEngine(spark, cat)
+    text = HANGING % ("NATION_1", REMOTE_BLOCKS[block])
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    got = rows(eng.query(text))
+    assert passes == []
+    assert any("IN (" in q for q in calls), calls
+    local = SparqlEngine(spark, tpch_catalog(sf_small)).query(text)
+    assert got == rows(local) and got
+
+    # 11 nations start with NATION_1: a cap of 1 keeps the outer lazy
+    monkeypatch.setattr(pushdown, "HOLD_ROWS", 1)
+    assert rows(eng.query(text)) == got
+    monkeypatch.setattr(pushdown, "HOLD_ROWS", 10_000)
+
+    calls.clear()
+    empty = HANGING % ("NO SUCH NATION", REMOTE_BLOCKS[block])
+    assert eng.query(empty).collect() == []
+    assert calls == []
+
+
+def test_local_nested_block_is_not_held(spark, sf_small):
+    """An OPTIONAL block no remote key list reads from leaves the
+    outer frame lazy: building the query starts no Spark job."""
+    from tests.test_plans import _build_jobs
+
+    eng = SparqlEngine(spark, tpch_federated_catalog(sf_small))
+    text = HANGING % ("NATION_1", "OPTIONAL { ?n ex:region ?r }")
+    eng.query(text).collect()  # a session's first read runs a job
+    assert _build_jobs(spark, lambda: eng.query(text)) == 0
+
+
+def test_trisource_request_jobs(spark, sf_small):
+    """``lslod_cq6_trisource`` (Derby JDBC customers, Mongo suppliers,
+    lake nations, OPTIONAL customer balance), built and streamed
+    through ``sinks.stream`` under one job group, starts at most 9
+    Spark jobs: its OPTIONAL block reads the customer keys from the
+    held outer frame, so the outer plan runs once, with no key pass
+    over it (13 jobs when it did)."""
+    import json
+    import uuid
+
+    from ontario_spark import sinks
+    from ontario_spark.queries.lslod_shapes import ORACLE, QUERIES
+    from tests.oracle import run_oracle
+
+    run = QUERIES["lslod_cq6_trisource"]
+    run(spark, sf_small).collect()  # warm: first reads run jobs of their own
+    sc = spark.sparkContext
+    group = f"trisource-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        doc = json.loads("".join(sinks.stream(run(spark, sf_small), "json")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 9
+    want = run_oracle(ORACLE["lslod_cq6_trisource"], sf_small)
+    assert doc["totalRows"] == len(want) > 0
 
 
 def test_over_cap_prefix_settles_overflow_without_a_job(spark, monkeypatch):
@@ -1102,11 +1343,10 @@ def test_trailing_values_feeds_sql_star_in_list(spark, sf_small):
     ), captured
 
 
-def test_trailing_values_keys_start_no_job(spark, sf_small):
-    """The trailing-VALUES hint is built from the query text and held:
-    its key list is read from the driver rows, so building the query
-    starts no Spark job (a lazy hint cost an ``observed_keys`` pass)
-    while the remote call and the answer stay the same."""
+def _values_keys_start_no_job(spark, sf_small, text):
+    """Build ``text`` (a Customer star joined with ``VALUES ?seg``):
+    no Spark job, the segment IN-list in the one remote SQL, and the
+    lake's answer."""
     from ontario_spark.catalog.tpch_rdf import tpch_federated_catalog
     from tests.test_plans import _build_jobs
 
@@ -1120,12 +1360,6 @@ def test_trailing_values_keys_start_no_job(spark, sf_small):
 
     cat.executors["remote_sql"] = spy
     eng = SparqlEngine(spark, cat)
-    text = (
-        PFX
-        + """SELECT ?c ?seg WHERE {
-              ?c a ex:Customer ; ex:mktsegment ?seg . }
-           VALUES ?seg { "BUILDING" "MACHINERY" }"""
-    )
     built = []
     assert _build_jobs(spark, lambda: built.append(eng.query(text))) == 0
     assert captured == [
@@ -1142,6 +1376,36 @@ def test_trailing_values_keys_start_no_job(spark, sf_small):
         .collect()
     )
     assert got == want and got
+
+
+def test_trailing_values_keys_start_no_job(spark, sf_small):
+    """The trailing-VALUES hint is built from the query text and held:
+    its key list is read from the driver rows, so building the query
+    starts no Spark job (a lazy hint cost an ``observed_keys`` pass)
+    while the remote call and the answer stay the same."""
+    _values_keys_start_no_job(
+        spark,
+        sf_small,
+        PFX
+        + """SELECT ?c ?seg WHERE {
+              ?c a ex:Customer ; ex:mktsegment ?seg . }
+           VALUES ?seg { "BUILDING" "MACHINERY" }""",
+    )
+
+
+def test_group_values_keys_start_no_job(spark, sf_small):
+    """An inline VALUES block inside the group is the group's whole
+    build side and is already held, so ``_hold`` hands it back with no
+    collect: building starts no Spark job (a re-collect cost one), the
+    remote SQL and the answer stay the same."""
+    _values_keys_start_no_job(
+        spark,
+        sf_small,
+        PFX
+        + """SELECT ?c ?seg WHERE {
+              ?c a ex:Customer ; ex:mktsegment ?seg .
+              VALUES ?seg { "BUILDING" "MACHINERY" } }""",
+    )
 
 
 def test_cypher_join_through_bolt_executor_injected_transport(spark, sf_small):
