@@ -18,6 +18,10 @@ from ontario_spark.catalog.model import (
     ref,
     tpl,
 )
+from ontario_spark.sources.docstore import (
+    executor_from_collections,
+    parquet_doc_loader,
+)
 
 EX = "http://ex.org/tpch/"
 
@@ -248,37 +252,20 @@ def tpch_federated_catalog(sf_dir: str) -> Catalog:
     )
 
 
-def _doc_executor(sf_dir: str, spark=None):
-    """Document-store executor for the stand-in catalogs: the
-    DISTRIBUTED per-partition interpreter when a SparkSession is given
-    (driver/bench queries — the measured plan is an Arrow-batched
-    ``mapInPandas`` over the parquet doc frame, the connector's plan
-    shape), else the driver-side dict interpreter (unit tests that
-    exercise the interpreter semantics in isolation)."""
-    from ontario_spark.sources.docstore import (
-        executor_from_collections,
-        parquet_doc_loader,
-        spark_doc_executor,
-    )
-
-    if spark is not None:
-        return spark_doc_executor(spark, sf_dir)
-    return executor_from_collections(parquet_doc_loader(sf_dir))
-
-
 def tpch_mongo_catalog(sf_dir: str, spark=None) -> Catalog:
     """Federation-shaped catalog with the Customer molecule served by a
     DOCUMENT store: the star is translated to a Mongo aggregation
     pipeline (``translate.star_mongo``) and executed through the
-    ``sources.docstore`` seam — documents loaded from the same parquet
-    the oracle reads (the Derby-JDBC stand-in pattern; a live
-    deployment swaps in the Spark MongoDB connector,
-    ``docstore.mongo_spark_reader``). With ``spark`` the pipeline is
-    interpreted per-partition (``docstore.spark_doc_executor``).
+    ``sources.docstore`` seam — the driver-side pipeline interpreter
+    over documents loaded from the same parquet the oracle reads. The
+    rows enter Spark as one local partition, like every other
+    driver-side fetch; a live deployment injects an executor that calls
+    its Mongo server. ``spark`` is accepted and ignored: callers that
+    pass a session positionally keep working.
     Reference: ``ontario/wrappers/mongodb/sparql2mongo.py:68``."""
     return _serve_remote(
         tpch_catalog(sf_dir), "CustomerMap", "remote_mongo", "mongodb",
-        _doc_executor(sf_dir, spark),
+        executor_from_collections(parquet_doc_loader(sf_dir)),
     )
 
 
@@ -292,7 +279,6 @@ def tpch_cypher_catalog(sf_dir: str) -> Catalog:
     bench row now measures the bolt seam, not a direct interpreter
     call). Reference: ``ontario/wrappers/neo4j/sparql2cypher.py:129``
     executing via the bolt client at ``:11-127``."""
-    from ontario_spark.sources.docstore import parquet_doc_loader
     from ontario_spark.sources.graphstore import (
         bolt_executor,
         interpreter_bolt_driver,
@@ -383,7 +369,7 @@ def tpch_trisource_catalog(sf_dir: str) -> Catalog:
     )
     return _serve_remote(
         cat, "SupplierMap", "remote_mongo", "mongodb",
-        _doc_executor(sf_dir),
+        executor_from_collections(parquet_doc_loader(sf_dir)),
     )
 
 
@@ -446,10 +432,10 @@ def tpch_trisource_jdbc_catalog(spark, sf_dir: str) -> Catalog:
     MOD-slices on the subject key whenever the translated SQL projects
     it — one remote connection per partition, the Spark-native
     equivalent of the reference's hand-rolled parallel fetch
-    (``wrappers/mysql/sparql2sql.py:108-166``). The Mongo star runs
-    through the distributed per-partition interpreter
-    (``docstore.spark_doc_executor``) for the same reason — every leg
-    of the trisource bench row measures a distributed plan."""
+    (``wrappers/mysql/sparql2sql.py:108-166``). The Derby star is the
+    one distributed remote fetch; the Mongo star runs through the
+    driver-side pipeline interpreter, as in ``tpch_mongo_catalog``, and
+    its rows join inside the result job."""
     from ontario_spark.sources.jdbc import jdbc_executor
 
     url = derby_customer_url(spark, sf_dir)
@@ -474,5 +460,5 @@ def tpch_trisource_jdbc_catalog(spark, sf_dir: str) -> Catalog:
     )
     return _serve_remote(
         cat, "SupplierMap", "remote_mongo", "mongodb",
-        _doc_executor(sf_dir, spark),
+        executor_from_collections(parquet_doc_loader(sf_dir)),
     )

@@ -492,15 +492,16 @@ class SparqlEngine:
                 # FROM NAMED without FROM: the default graph is EMPTY
                 # (§13.2) — only GRAPH-scoped patterns can match
                 self._dataset_default = set()
-        bf = self._group(
+        _, bf = self._group_over(
             q.where,
-            source_filter=self._dataset_default,
             # trailing-VALUES bound-join feed (round-9, lifting the
             # parser's documented trade for never-UNDEF columns): the
             # clause still JOINS after the finished pattern, but its
             # keys additionally prune top-level remote-star / SERVICE
-            # fetches — pure transfer reduction, never a result change
-            values_hint=self._values_pushdown_hint(q.values_clause),
+            # fetches as the group's outer frame — pure transfer
+            # reduction, never a result change
+            self._values_pushdown_hint(q.values_clause),
+            source_filter=self._dataset_default,
         )
         if q.query_type != "select" and q.values_clause is not None:
             # trailing VALUES joins the FINISHED pattern for ASK /
@@ -839,9 +840,13 @@ class SparqlEngine:
         return u
 
     def _values_pushdown_hint(self, vb: "ValuesBlock | None") -> "HeldFrame | None":
-        """Trailing-VALUES columns with NO UNDEF cell, as a tiny frame
-        whose observed values can feed remote bound-join pushdown
-        (``_bound_key_conds`` / SERVICE VALUES batches).
+        """Trailing-VALUES columns with NO UNDEF cell, as a held
+        all-lexical frame that ``compile`` passes to the top-level
+        group as its outer frame (``_group_over``'s ``key_hint``), so
+        its values feed remote bound-join pushdown
+        (``_bound_key_conds`` / SERVICE VALUES batches). Being whole
+        and lexical, it prunes no source alternative
+        (``_prune_by_hint``) and holds with no job (``_hold``).
 
         Safety: a never-UNDEF column equi-joins the finished pattern,
         so any top-level row whose var binds OUTSIDE the value list is
@@ -867,22 +872,19 @@ class SparqlEngine:
         return self._values(block)
 
     def _group(
-        self,
-        g: Group,
-        source_filter: "str | set | None" = None,
-        values_hint: BFrame | None = None,
+        self, g: Group, source_filter: "str | set | None" = None
     ) -> BFrame:
-        return self._group_over(g, None, source_filter, values_hint)[1]
+        return self._group_over(g, None, source_filter)[1]
 
     def _group_over(
         self,
         g: Group,
         key_hint: BFrame | None,
         source_filter: "str | set | None" = None,
-        values_hint: BFrame | None = None,
     ) -> tuple[BFrame | None, BFrame]:
         """``g`` compiled, hanging off the outer frame ``key_hint`` when
-        it has one (OPTIONAL, MINUS, [NOT] EXISTS): rows of a remote
+        it has one (OPTIONAL, MINUS, [NOT] EXISTS, or the top-level
+        group's trailing-VALUES hint): rows of a remote
         star or SERVICE block that cannot match the outer keys cannot
         affect the result, so the outer frame feeds their key lists.
         Returns ``(key_hint, frame)``. Like the group's own build side,
@@ -1024,12 +1026,17 @@ class SparqlEngine:
             # filtered one (reference: the bound join probes with the
             # filtered build side). The group-final filter pass below
             # re-applies them — semantically idempotent.
+            early = bf.variables - bf.maybe_null
             for e in g.elements:
                 if isinstance(e, Filter) and isinstance(e.expr, Expr):
                     # EXISTS-bearing filters wait for the final pass:
                     # early application exists to cut remote transfer,
-                    # and a mark computation here would just run twice
-                    if e.expr.variables() <= bf.variables and not (
+                    # and a mark computation here would just run twice.
+                    # So does a filter over a var the build side may
+                    # leave unbound: a remote star, SERVICE block or
+                    # OPTIONAL below can still bind it (a wildcard row
+                    # joins every remote binding)
+                    if e.expr.variables() <= early and not (
                         collect_exists_exprs(e.expr)
                     ):
                         try:
@@ -1066,17 +1073,15 @@ class SparqlEngine:
             # bound-join key sources: the held build side for the vars
             # it binds (a superset of the keys the joined frame has
             # left — pushdown only narrows transfer), this group's
-            # joined frame for the rest, the OUTER frame when this
+            # joined frame for the rest, and the OUTER frame when this
             # group hangs off one (``key_hint``, held above when a key
-            # list reads it), and the trailing-VALUES hint (never-UNDEF
-            # columns only)
+            # list reads it)
             pvars = _plan_vars(plan)
             held_vars = held.variables if held is not None else set()
             for build, svars in (
                 (held, pvars),
                 (bf, pvars - held_vars),
                 (key_hint, pvars),
-                (values_hint, pvars),
             ):
                 if build is None or not svars & build.variables:
                     continue
@@ -1085,7 +1090,7 @@ class SparqlEngine:
             f = compile_star(self.spark, self.catalog, plan, conds)
             bf = _join_fetched(bf, f, held is not None and held.whole)
         for sb in services:
-            svc = self._service(sb, (held, bf, key_hint, values_hint))
+            svc = self._service(sb, (held, bf, key_hint))
             bf = _join_fetched(bf, svc, held is not None and held.whole)
         # UNDEF-bearing VALUES join AFTER the remote-star/SERVICE
         # frames (round-8 review fix: joining the NULL-encoded frame
@@ -1275,9 +1280,9 @@ class SparqlEngine:
         empty frame instead of an error.
 
         Bound-join pushdown: when a key source (the group's held build
-        side, its joined local frame, the outer frame of an
+        side, its joined local frame, or the outer frame: that of an
         OPTIONAL/MINUS/EXISTS block, held through ``_hold_for_keys``,
-        the trailing-VALUES hint — first one wins,
+        or the top-level group's trailing-VALUES hint — first one wins,
         ``_service_key_source``) shares a variable with the pattern,
         its distinct observed keys ship as VALUES batches (window 20, the
         reference's NestedHashJoinFilter WINDOW_SIZE) so the endpoint
@@ -1324,8 +1329,7 @@ class SparqlEngine:
 
         queries = [text]
         # All shared vars flagged → no pushdown (unfiltered fetch,
-        # still correct). The trailing-VALUES hint's columns are
-        # never-UNDEF by construction.
+        # still correct).
         i = _service_key_source(
             set(variables),
             [None if s is None else s.variables - s.maybe_null

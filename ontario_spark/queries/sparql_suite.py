@@ -35,7 +35,7 @@ _CATALOGS = {
     "split": lambda spark, sf: tpch_split_catalog(sf),
     "nested": tpch_nested_catalog,
     "federated": lambda spark, sf: tpch_federated_catalog(sf),
-    "mongo": lambda spark, sf: tpch_mongo_catalog(sf, spark),
+    "mongo": lambda spark, sf: tpch_mongo_catalog(sf),
     "cypher": lambda spark, sf: tpch_cypher_catalog(sf),
     "drill": lambda spark, sf: tpch_drill_catalog(sf),
 }

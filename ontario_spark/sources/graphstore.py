@@ -191,9 +191,9 @@ def interpreter_bolt_driver(graph):
     ``run(cypher)`` yielding records with ``.data()``), backed by the
     tested Cypher interpreter — so the catalog (and therefore the
     bench row ``sparql_cypher_join``) routes through
-    ``bolt_executor``'s production call path without the wheel
-    (round 11, VERDICT r10 task 6; the Derby/spark_doc_executor
-    pattern). ``graph`` is a node dict or a zero-arg callable resolved
+    ``bolt_executor``'s production call path without the wheel, as
+    the Derby star runs the production Spark-JDBC path without a
+    database server. ``graph`` is a node dict or a zero-arg callable resolved
     lazily per ``run()`` so parquet loads stay deferred."""
 
     class _Record:

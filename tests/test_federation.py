@@ -714,31 +714,75 @@ def test_local_nested_block_is_not_held(spark, sf_small):
     assert _build_jobs(spark, lambda: eng.query(text)) == 0
 
 
-def test_trisource_request_jobs(spark, sf_small):
-    """``lslod_cq6_trisource`` (Derby JDBC customers, Mongo suppliers,
-    lake nations, OPTIONAL customer balance), built and streamed
-    through ``sinks.stream`` under one job group, starts at most 9
-    Spark jobs: its OPTIONAL block reads the customer keys from the
-    held outer frame, so the outer plan runs once, with no key pass
-    over it (13 jobs when it did)."""
+def test_early_filter_waits_for_maybe_unbound_vars(spark, sf_small):
+    """A FILTER over a var the build side may leave unbound (here ?c,
+    bound in one UNION branch only) waits for the group's final pass:
+    the remote Customer star still binds ?c on the other branch's
+    rows, so ``BOUND(?c)`` applied before the fetch would drop
+    answers the all-local catalog returns."""
+    sparql = PFX + """SELECT ?o ?c ?name WHERE {
+        { ?o a ex:Order ; ex:customer ?c ; ex:orderpriority "1-URGENT" }
+        UNION
+        { ?o a ex:Order ; ex:orderpriority "5-LOW" ; ex:orderstatus "P" }
+        ?c a ex:Customer ; ex:name ?name ; ex:acctbal ?bal .
+        FILTER (?bal > 9000.0) FILTER (BOUND(?c)) }"""
+
+    def answers(cat):
+        df = SparqlEngine(spark, cat).query(sparql)
+        return sorted(tuple(r) for r in df.collect())
+
+    local = answers(tpch_catalog(sf_small))
+    assert answers(tpch_federated_catalog(sf_small)) == local
+    assert len(local) > 0
+
+
+def _request_jobs(spark, run, sf_dir) -> tuple[int, dict]:
+    """Spark jobs of one warm request: ``run`` built and streamed
+    through ``sinks.stream`` as JSON under one job group."""
     import json
     import uuid
 
     from ontario_spark import sinks
+
+    run(spark, sf_dir).collect()  # warm: first reads run jobs of their own
+    sc = spark.sparkContext
+    group = f"request-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        doc = json.loads("".join(sinks.stream(run(spark, sf_dir), "json")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), doc
+
+
+def test_trisource_request_jobs(spark, sf_small):
+    """``lslod_cq6_trisource`` (Derby JDBC customers, Mongo suppliers,
+    lake nations, OPTIONAL customer balance), built and streamed
+    through ``sinks.stream`` under one job group, starts at most 8
+    Spark jobs: its OPTIONAL block reads the customer keys from the
+    held outer frame, so the outer plan runs once, with no key pass
+    over it (13 jobs when it did), and the Mongo suppliers join as
+    driver rows inside the result job."""
     from ontario_spark.queries.lslod_shapes import ORACLE, QUERIES
     from tests.oracle import run_oracle
 
-    run = QUERIES["lslod_cq6_trisource"]
-    run(spark, sf_small).collect()  # warm: first reads run jobs of their own
-    sc = spark.sparkContext
-    group = f"trisource-{uuid.uuid4().hex}"
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        doc = json.loads("".join(sinks.stream(run(spark, sf_small), "json")))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 9
+    jobs, doc = _request_jobs(spark, QUERIES["lslod_cq6_trisource"], sf_small)
+    assert jobs <= 8
     want = run_oracle(ORACLE["lslod_cq6_trisource"], sf_small)
+    assert doc["totalRows"] == len(want) > 0
+
+
+def test_mongo_join_request_jobs(spark, sf_small):
+    """``sparql_mongo_join`` starts at most 2 Spark jobs per request:
+    the Mongo star's rows come from the driver-side pipeline
+    interpreter as one local partition, so they join the held Order
+    side inside the result job with no broadcast job."""
+    from ontario_spark.queries.sparql_suite import ORACLE, QUERIES
+    from tests.oracle import run_oracle
+
+    jobs, doc = _request_jobs(spark, QUERIES["sparql_mongo_join"], sf_small)
+    assert jobs <= 2
+    want = run_oracle(ORACLE["sparql_mongo_join"], sf_small)
     assert doc["totalRows"] == len(want) > 0
 
 

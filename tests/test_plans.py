@@ -49,6 +49,25 @@ def test_no_rowwise_python_udfs_in_pipeline_plans(spark, sf_small):
         assert "MapInPandas" not in plan, name
 
 
+# the federated registry rows the fed_sparql benchmark workload serves
+FED_SPARQL_ROWS = (
+    "sparql_federated_join", "sparql_named_graph", "sparql_mongo_join",
+    "sparql_drill_join", "sparql_drill_bound_join", "sparql_cypher_join",
+    "sparql_service_join", "lslod_cq6_trisource",
+)
+
+
+def test_no_python_stage_on_the_federated_sparql_path(spark, sf_small):
+    """Every remote fetch of the federated rows lands as a JVM plan
+    (driver rows as a local relation, Derby through Spark-JDBC): no
+    Python worker stage anywhere in their physical plans."""
+    q = all_queries()
+    for name in FED_SPARQL_ROWS:
+        plan = _plan(q[name](spark, sf_small))
+        for marker in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert marker not in plan, (name, marker)
+
+
 def test_sparql_joins_run_on_raw_keys_not_uris(spark, sf_small):
     """Star-to-star joins use the underlying key columns (var__kN), not
     formatted URI strings — the engine's core scale property."""

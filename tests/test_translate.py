@@ -367,19 +367,11 @@ def test_mongo_multivalued_constant_plus_variable():
     assert rows == [(1, "a"), (1, "b"), (1, "c"), (2, "a")]
 
 
-def test_mongo_multivalued_distributed_matches_driver(spark, tmp_path):
-    """The reference's :144-180 sequence end-to-end on the DISTRIBUTED
-    per-partition interpreter: $all containment + $unwind + a pushed
-    per-element FILTER produce exactly the driver interpreter's rows."""
-    from ontario_spark.sources.docstore import (
-        executor_from_collections,
-        spark_doc_executor,
-    )
-
-    spark.createDataFrame(
-        [(d["did"], d["title"], d["tags"]) for d in TAGS_DOCS],
-        "did long, title string, tags array<string>",
-    ).repartition(3).write.mode("overwrite").parquet(str(tmp_path / "docs.parquet"))
+def test_mongo_multivalued_distributed_matches_driver():
+    """The reference's :144-180 sequence end-to-end on the pipeline
+    interpreter: $all containment + $unwind + a pushed per-element
+    FILTER produce exactly the expected rows."""
+    from ontario_spark.sources.docstore import executor_from_collections
 
     star = star_of(
         'SELECT * WHERE { ?d ex:tag "a" ; ex:tag "b" ; ex:tag ?x ; ex:title ?t }'
@@ -393,13 +385,11 @@ def test_mongo_multivalued_distributed_matches_driver(spark, tmp_path):
     post = [s["$match"] for s in pipeline[ui + 1:] if "$match" in s]
     assert any(m.get("tags", {}).get("$ne") == "c" for m in post)
 
-    dist = spark_doc_executor(spark, str(tmp_path))("docs", pipeline)
-    got = sorted((r["d__k0"], r["x"], r["t"]) for r in dist.collect())
-    want = sorted(
+    got = sorted(
         (r["d__k0"], r["x"], r["t"])
         for r in executor_from_collections({"docs": TAGS_DOCS})("docs", pipeline)
     )
-    assert got == want == [(1, "a", "t1"), (1, "b", "t1")]
+    assert got == [(1, "a", "t1"), (1, "b", "t1")]
 
 
 def test_mongo_multivalued_engine_pushdown_spy(spark):
@@ -527,79 +517,29 @@ def test_mongo_executor_receives_pushed_match(spark, sf_small):
     assert match["c_acctbal"].get("$gt") == 9000.0
 
 
-def test_spark_doc_executor_matches_driver_standin(spark, sf_small):
-    """The distributed per-partition interpreter must return EXACTLY
-    the rows of the driver-side dict interpreter for the same pipeline
-    over the same collection (shared ``aggregate`` core, so any drift
-    would be in the Arrow record conversion or the schema walk)."""
-    from ontario_spark.sources.docstore import (
-        executor_from_collections,
-        parquet_doc_loader,
-        spark_doc_executor,
-    )
-
-    pipeline = [
-        {"$match": {"c_acctbal": {"$gt": 5000.0}, "c_name": {"$exists": True}}},
-        {"$project": {"name": "$c_name", "bal": "$c_acctbal", "_id": 0}},
-    ]
-    dist = spark_doc_executor(spark, sf_small)("customer", pipeline)
-    assert [f.name for f in dist.schema.fields] == ["name", "bal"]
-    got = sorted((r["name"], r["bal"]) for r in dist.collect())
-    want = sorted(
-        (r["name"], r["bal"])
-        for r in executor_from_collections(parquet_doc_loader(sf_small))(
-            "customer", pipeline
-        )
-    )
-    assert got == want and len(got) > 0
-
-
-def test_spark_doc_executor_unwind(spark, tmp_path):
-    """$unwind runs per-partition: array → element with sibling fields
-    intact."""
-    from ontario_spark.sources.docstore import spark_doc_executor
-
-    docs = spark.createDataFrame(
-        [(i, f"d{i}", [f"t{i}a", f"t{i}b"]) for i in range(10)],
-        "doc_id long, name string, tags array<string>",
-    ).repartition(4)
-    docs.write.mode("overwrite").parquet(str(tmp_path / "docs.parquet"))
-    execr = spark_doc_executor(spark, str(tmp_path))
-
-    unwound = execr(
-        "docs",
-        [
-            {"$unwind": "$tags"},
-            {"$project": {"doc_id": "$doc_id", "tag": "$tags", "_id": 0}},
-        ],
-    )
-    got = sorted((r["doc_id"], r["tag"]) for r in unwound.collect())
-    assert got == sorted(
-        (i, f"t{i}{s}") for i in range(10) for s in ("a", "b")
-    )
-
-
 def test_mongo_distributed_plan_shape(spark, sf_small):
-    """With a SparkSession the mongo catalog serves the star through
-    the distributed interpreter: the physical plan carries the Arrow-
-    batched MapInPandas stage (the connector's plan shape) and NO
-    driver-side doc loop, with results identical to the stand-in."""
+    """The Mongo star's rows enter Spark as a driver-built local frame:
+    the physical plan carries no Python stage (no MapInPandas or
+    EvalPython), and the answer matches plain DuckDB SQL."""
     from ontario_spark.catalog.tpch_rdf import tpch_mongo_catalog
 
-    sparql = (
+    df = SparqlEngine(spark, tpch_mongo_catalog(sf_small)).query(
         PFX
         + """SELECT ?name WHERE { ?c a ex:Customer ; ex:name ?name ;
               ex:acctbal ?bal . FILTER (?bal > 9000.0) }"""
     )
-    dist = SparqlEngine(spark, tpch_mongo_catalog(sf_small, spark)).query(sparql)
-    plan = dist._jdf.queryExecution().explainString(
+    plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
-    assert "MapInPandas" in plan
-    local = SparqlEngine(spark, tpch_mongo_catalog(sf_small)).query(sparql)
-    assert sorted(r["name"] for r in dist.collect()) == sorted(
-        r["name"] for r in local.collect()
-    )
+    assert "MapInPandas" not in plan and "EvalPython" not in plan
+    con = duckdb.connect()
+    duck_tables(sf_small, con)
+    exp = con.execute(
+        "SELECT c_name FROM customer WHERE c_acctbal > 9000.0"
+    ).fetchall()
+    assert sorted(r["name"] for r in df.collect()) == sorted(
+        r[0] for r in exp
+    ) and len(exp) > 0
 
 
 def test_cypher_execution_end_to_end(spark, sf_small):

@@ -38,9 +38,6 @@ PY_OK_PREFIXES = ("mm_", "stream_")
 # Lambdas living in an INTENDED Filter (a quality gate IS a filter)
 # are fine; the pathology is a lambda CLONED into a filter by
 # constraint inference while the same lambda feeds a Project above.
-# MapInPandas on the mongo-star queries is the distributed document-
-# pipeline interpreter (docstore.spark_doc_executor) — the expected
-# Arrow-batched stage standing in for the connector's pushed read.
 EXPECTED = {
     "ann_topk_bruteforce": {"BNLJ:BuildRight"},
     # brute-force ranking leg (broadcast query set) feeding the NDCG agg
@@ -55,8 +52,6 @@ EXPECTED = {
     "bm25_topk": {"BNLJ:BuildRight"},
     "contamination_bloom": {"BNLJ:BuildRight"},
     "lslod_cq2_bridge_optional": {"BNLJ:BuildRight"},
-    "lslod_cq6_trisource": {"MapInPandas"},
-    "sparql_mongo_join": {"MapInPandas"},
     "q22_idle_customers": {"BNLJ:BuildRight"},
     "q_skew_suppkey": {"BNLJ:BuildRight"},
     "retrieval_rrf_fusion": {"BNLJ:BuildRight"},
